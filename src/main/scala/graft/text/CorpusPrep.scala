@@ -28,7 +28,10 @@ object CorpusPrep {
 
   /** Exclusive prefix sum over keyed long counts: rows (key, n) with
     * DISTINCT non-negative long keys in, (key, offset) out, where offset
-    * = Σ n over all rows with a smaller key.
+    * = Σ n over all rows with a smaller key. Rows with a NULL key are
+    * dropped before the ladder: they get no offset row and add nothing to
+    * any other key's offset (left in, the top-level window's NULLS FIRST
+    * order would add their count to every real key's offset).
     *
     * A flat `sum() over (order by key)` would drag every row into ONE
     * task, so the scan is a fixed bit-sliced ladder instead: level i
@@ -67,16 +70,20 @@ object CorpusPrep {
     // outside [0, 2^maxKeyBits) would silently void the <= 2^bits
     // window-partition bound (a memory guarantee, not a correctness one —
     // the prefix sums stay exact either way), so fail loudly instead.
-    // One codegen comparison per AGGREGATED row (the ladder's input is
-    // already keyed), dropped from the plan only if the keys are provably
-    // in range. assert_true returns NULL when the predicate holds, so the
-    // filter keeps every row.
+    // assert_true returns NULL when the predicate holds, so the filter
+    // keeps every row. Catalyst pushes this filter below the caller's
+    // aggregate and through upstream generators (packChunks' explode), so
+    // it can run on raw rows whose key is NULL even though the NULL-key
+    // filter sits before it here: the predicate must itself pass NULL, or
+    // assert_true raises on rows that never reach the ladder.
     val maxKey = if (maxKeyBits == 63) Long.MaxValue else (1L << maxKeyBits) - 1
     val base = agg.select(col(keyCol).cast("long").as("k"),
       col(nCol).cast("long").as("n"))
-      .filter(assert_true(col("k") >= 0L && col("k") <= maxKey,
+      .filter(col("k").isNotNull)
+      .filter(assert_true(
+        col("k").isNull || (col("k") >= 0L && col("k") <= maxKey),
         concat(lit(s"exclusivePrefix: key outside promised [0, 2^$maxKeyBits): "),
-          col("k").cast("string"))).isNull)
+          coalesce(col("k").cast("string"), lit("NULL")))).isNull)
     val aggs = Seq.iterate(base, levels + 1) { lvl =>
       // recompute the shift from the level's own key domain: shifting the
       // PARENT key by `bits` each step composes to min(63, i*bits) overall

@@ -5,6 +5,18 @@ import graft.SparkSpec
 class CorpusPrepSpec extends SparkSpec {
   import spark.implicits._
 
+  // three documents -> chunks of 4+4+4 | 3 | 2 tokens (window 4, stride 3)
+  private val realDocs = Seq(
+    (Option(1L), Option((1 to 10).map(i => s"t$i").mkString(" "))),
+    (Option(2L), Option("a b c")),
+    (Option(5L), Option("x y")))
+
+  private def packDocs(docs: Seq[(Option[Long], Option[String])]) =
+    CorpusPrep.packChunks(
+      CorpusPrep.chunkDocuments(docs.toDF("doc_id", "text"), window = 4, stride = 3),
+      budget = 5, groupSize = 2)
+      .as[(Option[Long], Int, Int, Long, Long)].collect().toSeq
+
   test("chunking: window/stride coverage, short docs, tail chunk") {
     // 10 tokens, window 4, stride 3 -> starts 0,3,6 (ceil((10-4)/3)+1 = 3
     // chunks), tail chunk [6,10) is full; 11 tokens -> starts 0,3,6,9 with
@@ -134,6 +146,38 @@ class CorpusPrepSpec extends SparkSpec {
     val got = CorpusPrep.exclusivePrefix(ok, "k", "n", bits = 16, maxKeyBits = 46)
       .as[(Long, Long)].collect().toMap
     assert(got == Map(5L -> 0L, 9L -> 2L, (1L << 45) -> 6L))
+  }
+
+  test("exclusivePrefix: NULL keys are dropped and shift no real key's offset") {
+    // a NULL key must neither trip the key-domain guard nor reach the
+    // top-level window, whose NULLS FIRST order would add its count to
+    // every real key's offset (3 -> 9, 5 -> 11 instead of 0, 2)
+    val rows = Seq(Option.empty[Long] -> 9L, Some(3L) -> 2L, Some(5L) -> 4L)
+    val df = rows.toDF("k", "n")
+    for (bits <- Seq(8, 16); maxKeyBits <- Seq(16, 63)) {
+      val got = CorpusPrep.exclusivePrefix(df, "k", "n", bits = bits,
+        maxKeyBits = maxKeyBits).as[(Option[Long], Long)].collect().toMap
+      assert(got == Map(Some(3L) -> 0L, Some(5L) -> 2L),
+        s"bits=$bits maxKeyBits=$maxKeyBits")
+    }
+  }
+
+  test("token packing: an all-NULL document changes nothing") {
+    // the key-domain guard is pushed below the group aggregate and through
+    // chunkDocuments' explode, so it sees the raw NULL doc_id row even
+    // though that document yields no chunk
+    val base = packDocs(realDocs)
+    assert(base.nonEmpty)
+    assert(packDocs(realDocs :+ (None -> None)) == base)
+  }
+
+  test("token packing: a NULL doc_id with text leaves real start offsets unchanged") {
+    // whether the NULL document's own chunks are kept is not pinned here;
+    // only that they do not shift the real documents' offsets
+    val base = packDocs(realDocs)
+    assert(base.map(_._4) == Seq(0L, 4L, 8L, 12L, 15L))
+    assert(packDocs((None -> Some("n1 n2 n3 n4")) +: realDocs)
+      .filter(_._1.isDefined) == base)
   }
 
   test("rarity score: integer corpus-frequency sums") {
