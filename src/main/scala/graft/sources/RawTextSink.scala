@@ -1,9 +1,11 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{FileVisitResult, Files, Path, SimpleFileVisitor}
+import java.nio.file.attribute.BasicFileAttributes
 import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
+import scala.util.Try
 import graft.wrm.{DedupGate, TextFix}
 
 /** Raw snapshot text sink (SURVEY §2.1 S4 + the S2/S3 pre-write steps;
@@ -26,28 +28,35 @@ object RawTextSink {
     *
     * mtime ties (same millisecond on tmpfs; second-granularity object-store
     * LastModified) are broken by filename, which embeds the logical
-    * timestamp (`wrm_stations_<yyyy-MM-dd_HH-mm-ss>.txt`) — otherwise
-    * `maxBy` returns the first max in directory-walk order, making the
-    * dedup scope nondeterministic.
+    * timestamp (`wrm_stations_<yyyy-MM-dd_HH-mm-ss>.txt`) — otherwise the
+    * first max in directory-walk order would win, making the dedup scope
+    * nondeterministic.
+    *
+    * One attribute read per entry: the walk's own. A symlinked `.txt` is
+    * followed to its target's attributes, as `Files.isRegularFile` does;
+    * symlinked directories are not descended. The walk still visits every
+    * stored file, so landing time grows linearly with the raw tree.
     */
   def mostRecent(root: Path): Option[Path] = {
     if (!Files.exists(root)) return None
-    val stream = Files.walk(root)
-    try {
-      val all = stream.iterator().asScala
-        .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".txt"))
-        .toSeq
-      if (all.isEmpty) None
-      else Some(all.maxBy(p =>
-        (Files.getLastModifiedTime(p).toMillis, p.getFileName.toString)))
-    } finally stream.close()
-  }
-
-  private implicit class IterOps[A](it: java.util.Iterator[A]) {
-    def asScala: Iterator[A] = new Iterator[A] {
-      def hasNext: Boolean = it.hasNext
-      def next(): A = it.next()
-    }
+    var best: Option[(Path, (Long, String))] = None
+    Files.walkFileTree(root, new SimpleFileVisitor[Path] {
+      override def visitFile(p: Path, attrs: BasicFileAttributes): FileVisitResult = {
+        val name = p.getFileName.toString
+        if (name.endsWith(".txt")) {
+          val target =
+            if (attrs.isSymbolicLink)
+              Try(Files.readAttributes(p, classOf[BasicFileAttributes])).toOption
+            else Some(attrs)
+          target.filter(_.isRegularFile).foreach { a =>
+            val key = (a.lastModifiedTime.toMillis, name)
+            if (best.forall(b => Ordering[(Long, String)].gt(key, b._2))) best = Some((p, key))
+          }
+        }
+        FileVisitResult.CONTINUE
+      }
+    })
+    best.map(_._1)
   }
 
   /** Fix → dedup-check → write. Returns the stored (or existing) key. */

@@ -106,14 +106,16 @@ object WrmStreamPipeline {
       .trigger(cfg.trigger)
       .option("checkpointLocation", cfg.checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        // two actions (emptiness check, append) over one parse: persist the
+        // batch once, release it whether the batch succeeds or fails
+        val enhanced = transformBatch(batch).persist()
         try {
-          val enhanced = transformBatch(batch)
           if (!enhanced.isEmpty) Sinks.appendEnhanced(enhanced, cfg.enhancedRoot)
         } catch {
           case e: Exception =>
             System.err.println(s"[wrm-stream] batch $batchId failed: ${e.getMessage}")
             throw e // fail the batch: offsets NOT committed, retried on restart
-        }
+        } finally enhanced.unpersist()
         ()
       }
       .start()

@@ -24,7 +24,9 @@ import org.apache.spark.sql.types._
   * Spark-first shape: one `spark.read.csv` (per-file header skip is
   * built-in), pure column expressions after that, and the file-level abort
   * implemented as a windowed any-bad-row flag — no driver-side loop, scales
-  * to any number of files.
+  * to any number of files. `processPartition` materializes the parsed date
+  * once, so the emptiness check, validation and the sink all read the same
+  * stored rows instead of each re-running the CSV scan and the window.
   */
 object RawParser {
 
@@ -122,9 +124,23 @@ object RawParser {
 
   /** Full read→parse for one partition directory; errors if nothing valid
     * survives (processed_all.py:218-220 semantics).
+    *
+    * The parsed rows are materialized once with an eager `localCheckpoint`
+    * and the returned frame reads them, so the downstream enhance →
+    * validate → write chain neither re-scans the raw text nor re-runs the
+    * file-level-abort window, and the rows validated are the rows written
+    * even if the raw directory changes meanwhile. Eager, so that one job
+    * stores every partition before the emptiness check and before the frame
+    * is returned; a lazy one would be filled by whichever action runs first
+    * (here the check's `limit(1)`) plus a follow-up job for the partitions
+    * that action skipped. A local checkpoint rather than `persist`: its
+    * blocks belong to the returned frame's RDD and the `ContextCleaner`
+    * frees them once that frame is unreachable, whereas a cache entry would
+    * have no owner to `unpersist` it. The blocks are MEMORY_AND_DISK, so a
+    * large date spills instead of failing.
     */
   def processPartition(spark: SparkSession, path: String): DataFrame = {
-    val out = parse(readRaw(spark, path))
+    val out = parse(readRaw(spark, path)).localCheckpoint(eager = true)
     if (out.isEmpty)
       throw new NoValidDataException("No valid data found after processing")
     out

@@ -73,6 +73,16 @@ class TextDedupPropertySpec extends SparkSpec {
       val df = docs.toDF("doc_id", "text")
       val gotSpans = TextDedup.substringDupSpans(spark, df, minTokens)
         .as[(Long, Long, Long, Long)].collect().toSeq
+      // removeDupSpans cuts the gap slices between consecutive spans, which
+      // is correct only if each document's spans come in start order and
+      // never touch or overlap: asserted on its own, not only through the
+      // reference (which is disjoint by construction)
+      gotSpans.groupBy(_._1).foreach { case (doc, ss) =>
+        val ctx = s"seed=$seed minTokens=$minTokens doc_id=$doc spans=$ss"
+        assert(ss.forall(s => s._2 < s._3), s"empty or reversed span: $ctx")
+        assert(ss.zip(ss.tail).forall { case (a, b) => b._2 >= a._3 },
+          s"unsorted or overlapping spans: $ctx")
+      }
       assert(gotSpans == refSpans, s"spans seed=$seed minTokens=$minTokens")
       val gotClean = TextDedup.removeDupSpans(spark, df, minTokens)
         .as[(Long, String, Long)].collect().toSeq

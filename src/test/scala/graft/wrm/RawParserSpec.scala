@@ -144,6 +144,36 @@ class RawParserSpec extends SparkSpec {
     assert(sources.length == 1 && sources(0).endsWith(".txt"))
   }
 
+  test("the date job writes the rows processPartition returned, not a re-read") {
+    // processPartition's result must be the one read of the raw directory:
+    // changing the raw files after it returns must not change what enhance
+    // → validate → overwriteDate write. A re-read would P3-drop the
+    // poisoned file and fail on the deleted one.
+    val dir = tmpDir()
+    val header =
+      "#id,ts,name,lat,lon,bikes,spaces,installed,locked,temporary,total_docks,gb,pedelecs\n"
+    def snapshot(id: String, bikes: String): String =
+      header + s"$id,1705147845.1|3600|-3600,Station $id,51.1,17.0,$bikes,10,true,false,false,15,false,2\n"
+    write(dir, "wrm_stations_2025-05-01_10-00-00.txt", snapshot("001", "5"))
+    val poisoned = write(dir, "wrm_stations_2025-05-01_10-30-00.txt", snapshot("002", "6"))
+    val deleted = write(dir, "wrm_stations_2025-05-01_11-00-00.txt", snapshot("003", "7"))
+    val processed = RawParser.processPartition(spark, dir.toString)
+    val returned = processed.collect().toSeq
+
+    write(dir, poisoned.getFileName.toString, snapshot("002", "NOT_A_NUMBER"))
+    Files.delete(deleted)
+    val out = tmpDir().resolve("enhanced").toString
+    val enhanced = Enhance.enhance(processed, "2025-05-01",
+      Some(Timestamp.valueOf("2025-05-02 00:00:00")))
+    Sinks.overwriteDate(Validation.validate(enhanced, Validation.enhancedChecks), out)
+
+    val written = spark.read.parquet(out)
+      .select(Schemas.processedColumns.map(org.apache.spark.sql.functions.col): _*)
+      .collect().toSeq
+    assert(returned.map(_.getString(0)).sorted == Seq("001", "002", "003"))
+    assert(written.sortBy(_.getString(0)) == returned.sortBy(_.getString(0)))
+  }
+
   test("boolean variants map like the reference (true/false/empty)") {
     val dir = tmpDir()
     write(dir, "wrm_stations_2025-05-01_10-00-00.txt",
