@@ -1,6 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.io.File
+
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graftbridge.ListenerBridge
 
 /** Benchmark main: times every registered query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line for the driver.
@@ -31,64 +36,62 @@ object Bench {
     *    item 8) — without this branch every such run read
     *    `baseline_committed:""`.
     *
-    * Parsed newest round first, skipping rounds whose map is absent or at
-    * another SF. Returns (fileName, perQueryTimes); ("", empty) when no
-    * usable baseline exists.
+    * Parsed newest round first, skipping rounds that are not valid JSON or
+    * whose map is absent or at another SF. Returns (fileName,
+    * perQueryTimes); ("", empty) when no usable baseline exists.
     */
-  def committedBaseline(repoDir: String, sfDir: String): (String, Map[String, Double]) =
-    try {
-      val sfBase = new java.io.File(sfDir).getName
-      // ScaleUp corpora (sf10, sf30, ...) carry an integer SF basename;
-      // driver testdata (sf0.001/sf0.01/sf0.1) uses the wrapped family
-      val fullFormat = sfBase.matches("sf\\d+")
-      val rFile = if (fullFormat)
-                    ("""BENCH_""" + sfBase + """_r(\d+)\.json""").r
-                  else """BENCH_r(\d+)\.json""".r
-      // root holds only the CURRENT round's artifacts; prior rounds are
-      // rotated into bench/ by scripts/bench_pair.sh — search both so the
-      // newest baseline wins wherever it lives
-      val candidates = Seq(new java.io.File(repoDir),
-          new java.io.File(repoDir, "bench"))
-        .flatMap(d => Option(d.listFiles()).getOrElse(Array.empty[java.io.File]))
-        .flatMap(f => f.getName match {
-          case rFile(n) => Some((n.toInt, f))
-          case _ => None
-        }).sortBy(-_._1)
-      candidates.iterator.map { case (_, f) =>
-        val txt = java.nio.file.Files.readString(f.toPath)
-        val qs =
-          if (fullFormat) {
-            // full format: "sf" is a directory path ending in the basename
-            val sfOk = """"sf":"([^"]+)"""".r.findFirstMatchIn(txt)
-              .exists(m => new java.io.File(m.group(1)).getName == sfBase)
-            if (!sfOk) Map.empty[String, Double]
-            else """"queries":\{(.*?)\}""".r.findFirstMatchIn(txt)
-              .map(m => """"([A-Za-z0-9_]+)":(-?[0-9.]+)""".r
-                .findAllMatchIn(m.group(1))
-                .map(q => q.group(1) -> q.group(2).toDouble).toMap)
-              .getOrElse(Map.empty[String, Double])
-          } else {
-            val sfOk = """"sf":\s*([0-9.]+)""".r.findFirstMatchIn(txt)
-              .exists(m => sfDir.endsWith("sf" + m.group(1)))
-            if (!sfOk) Map.empty[String, Double]
-            else {
-              val inner = """\\"queries\\":\{(.*?)\}""".r
-                .findFirstMatchIn(txt).map(_.group(1)).getOrElse("")
-              """\\"([A-Za-z0-9_]+)\\":(-?[0-9.]+)""".r
-                .findAllMatchIn(inner)
-                .map(m => m.group(1) -> m.group(2).toDouble).toMap
-            }
-          }
-        (f.getName, qs)
-      }.find(_._2.nonEmpty).getOrElse(("", Map.empty))
-    } catch { case _: Throwable => ("", Map.empty[String, Double]) }
+  def committedBaseline(repoDir: String, sfDir: String): (String, Map[String, Double]) = {
+    val sfBase = new File(sfDir).getName
+    // ScaleUp corpora (sf10, sf30, ...) carry an integer SF basename;
+    // the sf0.001/sf0.01/sf0.1 testdata uses the wrapped family
+    val rFile =
+      if (sfBase.matches("sf\\d+")) ("BENCH_" + sfBase + """_r(\d+)\.json""").r
+      else """BENCH_r(\d+)\.json""".r
+    // root holds only the CURRENT round's artifacts; prior rounds are
+    // rotated into bench/ by scripts/bench_pair.sh — search both so the
+    // newest baseline wins wherever it lives
+    Seq(new File(repoDir), new File(repoDir, "bench"))
+      .flatMap(d => Option(d.listFiles()).getOrElse(Array.empty[File]))
+      .flatMap(f => f.getName match {
+        case rFile(n) => Some((n.toInt, f))
+        case _ => None
+      }).sortBy(-_._1).iterator
+      .flatMap { case (_, f) =>
+        readBenchLine(f).collect {
+          case (sf, qs) if new File(sf).getName == sfBase && qs.nonEmpty => (f.getName, qs)
+        }
+      }.nextOption().getOrElse(("", Map.empty))
+  }
+
+  /** Per-query times of the previous local run in `outPath`, when it ran at
+    * the same `sfDir` — a leftover file from another scale factor would
+    * flag every query.
+    */
+  private[graft] def previousRun(outPath: String, sfDir: String): Map[String, Double] =
+    readBenchLine(new File(outPath))
+      .collect { case (sf, qs) if sf == sfDir => qs }
+      .getOrElse(Map.empty)
+
+  /** (sf, per-query seconds) of the bench line a file carries: the whole
+    * file for `bench_out.json` and `BENCH_<sf>_r*.json`, the last line of
+    * the JSON "tail" holding `{"metric"` for a wrapped `BENCH_r*.json`.
+    * None when the file is missing or not valid JSON.
+    */
+  private def readBenchLine(f: File): Option[(String, Map[String, Double])] =
+    scala.util.Try {
+      val root = Json.mapper.readTree(f)
+      val line = Option(root.get("tail")).fold(root) { tail =>
+        val l = tail.asText.linesIterator.filter(_.contains("{\"metric\"")).toSeq.last
+        Json.mapper.readTree(l.substring(l.indexOf("{\"metric\"")))
+      }
+      val qs = line.path("queries").properties.asScala
+        .collect { case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble }
+      (line.path("sf").asText, qs.toMap)
+    }.toOption
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession
-      .builder(master = s"local[$cpus]", shufflePartitions = cpus.toInt)
-      .getOrCreate()
+    val spark = GraftSession.builder(shufflePartitions = GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def time(fn: => Unit): Double = {
@@ -127,8 +130,8 @@ object Bench {
     // ms/stage; multiplying by each row's executed-stage count lets
     // bench_pair.sh report a floor-adjusted total next to the raw one, so
     // the pair ratio stops tracking box state. Listener events are async —
-    // poll until the counts are stable so a finished action's tail stages
-    // land in ITS row, not the next one's.
+    // drain the listener bus before reading the counts so a finished
+    // action's tail stages land in ITS row, not the next one's.
     val stageEvents = new java.util.concurrent.atomic.AtomicInteger(0)
     val jobEvents = new java.util.concurrent.atomic.AtomicInteger(0)
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
@@ -141,22 +144,15 @@ object Bench {
         jobEvents.incrementAndGet(); ()
       }
     })
-    def settleCounters(): (Int, Int) = {
-      var last = (stageEvents.get, jobEvents.get)
-      var stableFor = 0
-      val deadline = System.nanoTime() + 500L * 1000 * 1000
-      while (stableFor < 2 && System.nanoTime() < deadline) {
-        Thread.sleep(25)
-        val now = (stageEvents.get, jobEvents.get)
-        if (now == last) stableFor += 1 else { stableFor = 0; last = now }
-      }
-      last
+    def counters(): (Int, Int) = {
+      ListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext, 30000)
+      (stageEvents.get, jobEvents.get)
     }
     def measure(name: String): (Double, Int, Int) = try {
       spark.catalog.clearCache()
-      val (s0, j0) = settleCounters()
+      val (s0, j0) = counters()
       val t = time(qmap(name)(spark, sfDir).write.format("noop").mode("overwrite").save())
-      val (s1, j1) = settleCounters()
+      val (s1, j1) = counters()
       (t, s1 - s0, j1 - j0)
     } catch { case _: Throwable => (-1.0, 0, 0) }
     // SPARK_GRAFT_BENCH_RUNS (default 2): measurements per query, min
@@ -177,25 +173,16 @@ object Bench {
     // Millisecond precision keeps the one-line JSON under the driver's
     // stdout tail window (full-precision doubles pushed it past ~2.1 KB and
     // the front of the line was truncated → "parsed": null in BENCH_r04).
-    def fmt(v: Double): String = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
+    def fmt(v: Double): java.math.BigDecimal =
+      BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).bigDecimal
+    def secs(rows: Seq[(String, Double)]): ListMap[String, java.math.BigDecimal] =
+      ListMap.from(rows.map { case (k, v) => k -> fmt(v) })
     // Self-check vs the previous local run: flag >2x movers (with a 0.2 s
     // absolute floor so millisecond-scale queries don't trip on noise) so a
     // noisy machine window is visible in the bench line itself instead of
     // burning a round on a phantom regression (see BENCH_r04 post-mortem).
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    val prev: Map[String, Double] =
-      try {
-        val txt = java.nio.file.Files.readString(java.nio.file.Paths.get(outPath))
-        // only comparable when the previous run was at the SAME scale
-        // factor — a leftover sf0.001 file would flag every query
-        val prevSf = """"sf":"([^"]+)"""".r.findFirstMatchIn(txt).map(_.group(1))
-        if (!prevSf.contains(sfDir)) Map.empty
-        else {
-          val inner = txt.substring(txt.indexOf("\"queries\":{") + 11)
-          """"([^"]+)":(-?[0-9.]+)""".r.findAllMatchIn(inner.takeWhile(_ != '}'))
-            .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        }
-      } catch { case _: Throwable => Map.empty }
+    val prev = previousRun(outPath, sfDir)
     def regressed(k: String, v: Double): Boolean =
       v >= 0 && prev.get(k).exists(p => p >= 0 && v > 2 * p && v - p > 0.2)
     val committed = committedBaseline(".", sfDir)
@@ -258,10 +245,7 @@ object Bench {
             if (ts.nonEmpty) Some(name -> ts.min) else None
           }.toMap
     }
-    def jmap(entries: Seq[(String, String)]): String =
-      entries.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val qs = jmap(results.map { case (k, v) => k -> fmt(v) })
-    val floors = jmap(streamFloor.toSeq.sortBy(_._1).map { case (k, v) => k -> fmt(v) })
+    val floors = secs(streamFloor.toSeq.sortBy(_._1))
     // net-of-floor per stream row = total - engine floor: the number that
     // reads as the query's DATA cost, so per-query triage (and the judge)
     // doesn't have to subtract by hand. RAW difference, deliberately NOT
@@ -269,9 +253,8 @@ object Bench {
     // noise exceeding the row time (r13 silently clamped those to 0.000,
     // hiding that the floor measurement itself was the problem).
     val resMap = results.toMap
-    val nets = jmap(streamFloor.toSeq.sortBy(_._1).collect {
-      case (k, f) if resMap.get(k).exists(_ >= 0) =>
-        k -> fmt(resMap(k) - f)
+    val nets = secs(streamFloor.toSeq.sortBy(_._1).collect {
+      case (k, f) if resMap.get(k).exists(_ >= 0) => k -> (resMap(k) - f)
     })
     val total = results.map(_._2).filter(_ >= 0).sum
     // Floor flag for ratio readers: rows under ~0.5 s are dominated by
@@ -279,15 +262,14 @@ object Bench {
     // vs a millisecond-latency engine (the DuckDB oracle) are meaningless
     // there — the honest per-query scale signal is sf10 growth (SCALE.md).
     val floorDominated = results.count { case (_, v) => v >= 0 && v < 0.5 }
-    val floorNote =
-      s""""floor_dominated_rows":$floorDominated,"floor_note":"rows <0.5s sit on Spark's fixed scheduling floor; per-query ratios not meaningful there - read sf10 growth instead""""
-    val regs = jmap(results.collect {
-      case (k, v) if regressed(k, v) =>
-        k -> ("[" + fmt(prev(k)) + "," + fmt(v) + "]")
+    val floorNote = ListMap(
+      "floor_dominated_rows" -> floorDominated,
+      "floor_note" -> "rows <0.5s sit on Spark's fixed scheduling floor; per-query ratios not meaningful there - read sf10 growth instead")
+    val regs = ListMap.from(results.collect {
+      case (k, v) if regressed(k, v) => k -> Seq(fmt(prev(k)), fmt(v))
     })
-    val regsCommitted = jmap(results.collect {
-      case (k, v) if regressedVsCommitted(k, v) =>
-        k -> ("[" + fmt(committed._2(k)) + "," + fmt(v) + "]")
+    val regsCommitted = ListMap.from(results.collect {
+      case (k, v) if regressedVsCommitted(k, v) => k -> Seq(fmt(committed._2(k)), fmt(v))
     })
     // The driver tail-grabs the LAST 2000 chars of stdout: a full
     // 199-query map (~5 KB) has never fit, so every BENCH_r*.json through
@@ -298,26 +280,28 @@ object Bench {
     // per-row executed stage/job counts (kept run) — the multipliers for
     // the StageFloor budget; file artifact only (the stdout line must fit
     // the driver's tail window)
-    val stagesJson = jmap(results.collect {
-      case (k, v) if v >= 0 && stageCounts.contains(k) =>
-        k -> stageCounts(k).toString
-    })
-    val jobsJson = jmap(results.collect {
-      case (k, v) if v >= 0 && jobCounts.contains(k) =>
-        k -> jobCounts(k).toString
-    })
-    val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"regressions":$regs,"baseline_committed":"${committed._1}","regressions_vs_committed":$regsCommitted,"window_suspect":$windowSuspect,$floorNote,"stream_floor":$floors,"stream_net":$nets,"stages":$stagesJson,"jobs":$jobsJson,"sf":"$sfDir"}"""
-    def slimLine(nSlow: Int, regsJson: String): String = {
-      val slowest = jmap(results.filter(_._2 >= 0).sortBy(-_._2).take(nSlow)
-        .map { case (k, v) => k -> fmt(v) })
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.count(_._2 >= 0)},"queries":$slowest,"queries_note":"slowest $nSlow of ${results.size}; full map in $outPath","regressions":$regsJson,"baseline_committed":"${committed._1}","flagged_vs_committed":${results.count { case (k, v) => regressedVsCommitted(k, v) }},"window_suspect":$windowSuspect,$floorNote,"stream_floor":$floors,"stream_net":$nets,"sf":"$sfDir"}"""
-    }
+    def counts(m: collection.Map[String, Int]): ListMap[String, Int] =
+      ListMap.from(results.collect { case (k, v) if v >= 0 && m.contains(k) => k -> m(k) })
+    val head = ListMap[String, Any]("metric" -> "total", "value" -> fmt(total), "unit" -> "sec")
+    val tail = ListMap("stream_floor" -> floors, "stream_net" -> nets)
+    val full = head ++ ListMap("queries" -> secs(results), "regressions" -> regs,
+        "baseline_committed" -> committed._1, "regressions_vs_committed" -> regsCommitted,
+        "window_suspect" -> windowSuspect) ++ floorNote ++ tail ++
+      ListMap("stages" -> counts(stageCounts), "jobs" -> counts(jobCounts), "sf" -> sfDir)
+    def slimLine(nSlow: Int, regsShown: Map[String, Seq[java.math.BigDecimal]]): String =
+      Json.write(head ++ ListMap(
+          "n_queries" -> results.count(_._2 >= 0),
+          "queries" -> secs(results.filter(_._2 >= 0).sortBy(-_._2).take(nSlow)),
+          "queries_note" -> s"slowest $nSlow of ${results.size}; full map in $outPath",
+          "regressions" -> regsShown, "baseline_committed" -> committed._1,
+          "flagged_vs_committed" -> results.count { case (k, v) => regressedVsCommitted(k, v) },
+          "window_suspect" -> windowSuspect) ++ floorNote ++ tail + ("sf" -> sfDir))
     val candidates = Iterator(
       slimLine(30, regs), slimLine(15, regs),
-      slimLine(10, "{}"), slimLine(0, "{}"))
-    println(candidates.find(_.length <= 1900).getOrElse(slimLine(0, "{}")))
+      slimLine(10, Map.empty), slimLine(0, Map.empty))
+    println(candidates.find(_.length <= 1900).getOrElse(slimLine(0, Map.empty)))
     // Full per-query map always goes to the file artifact.
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), full + "\n")
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), Json.write(full) + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] could not write $outPath: ${e.getMessage}") }
     spark.stop()
   }

@@ -9,7 +9,14 @@ import org.apache.spark.sql.SparkSession
   * re-planning (skew joins, partition coalescing) on a real cluster.
   */
 object GraftSession {
-  def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
+
+  /** `SPARK_GRAFT_CPUS`, read once: the core count the mains size their
+    * local master and shuffle partitions by.
+    */
+  private[graft] val cpusSetting: Option[Int] = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+  val cpus: Int = cpusSetting.getOrElse(32)
+
+  def builder(master: String = s"local[$cpus]",
               shufflePartitions: Int = 32): SparkSession.Builder =
     SparkSession.builder()
       .master(master)

@@ -82,10 +82,7 @@ object ScaleUp {
     val src = args(0)
     val out = args(1)
     val r = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession
-      .builder(master = s"local[$cpus]", shufflePartitions = cpus.toInt)
-      .getOrCreate()
+    val spark = GraftSession.builder(shufflePartitions = GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def write(name: String, df: DataFrame): Unit = {

@@ -16,8 +16,7 @@ object StageProfile {
     require(args.length >= 2, "usage: StageProfile <sfDir> <name> [runs]")
     val (dir, name) = (args(0), args(1))
     val runs = if (args.length > 2) args(2).toInt else 2
-    val spark = GraftSession.builder(master = "local[32]", shufflePartitions = 32)
-      .getOrCreate()
+    val spark = GraftSession.builder(shufflePartitions = GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     case class St(var submitted: Long = 0, var completed: Long = 0,

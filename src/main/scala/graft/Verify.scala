@@ -20,7 +20,7 @@ object Verify {
         SparkEntry.queries.keySet.diff(excl)
       case s => s.split(",").toSet
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cpusSetting.getOrElse(4)
     // SPARK_GRAFT_MASTER overrides the in-process master — the
     // local-cluster smoke (scripts/verify_local_cluster.sh) runs the
     // whole registry with REAL executor JVMs, so task serialization and
@@ -29,7 +29,7 @@ object Verify {
     // inherit the driver's classpath, so pass it along explicitly.
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
     val b0 = GraftSession
-      .builder(master = master, shufflePartitions = cpus.toInt)
+      .builder(master = master, shufflePartitions = cpus)
     val spark = (if (master.startsWith("local-cluster"))
       // app classes must ship as a JAR through Spark's own executor
       // classloader — a bare directory on executor.extraClassPath
@@ -113,18 +113,6 @@ object Verify {
           }
         })
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val oracleMap: Map[String, String] = SparkEntry.registry.flatMap { gq =>
       val sql = (stageDir, gq.staged) match {
         case (Some(sd), Some(st)) if !failedStages.contains(gq.name) =>
@@ -136,9 +124,7 @@ object Verify {
       }
       sql.map(s => gq.name -> s.trim)
     }.toMap
-    val json = oracleMap
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), Json.write(oracleMap))
     spark.stop()
   }
 }

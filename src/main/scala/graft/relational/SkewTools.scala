@@ -14,8 +14,6 @@ import org.apache.spark.sql.functions._
   */
 object SkewTools {
 
-  final case class AggSpec(partial: Column => Column, combine: Column => Column)
-
   /** Salted sum/count aggregation over `key`:
     * stage 1 groups by (key, salt) — parallelism `salts` per hot key;
     * stage 2 groups by key over ≤ salts partial rows per key.

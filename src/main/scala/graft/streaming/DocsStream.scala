@@ -117,8 +117,8 @@ object DocsStream {
   private def stagedDocStream(spark: SparkSession, sfDir: String): DataFrame = {
     val (dir, schema) = staged.computeIfAbsent(sfDir, { _ =>
       val src = java.nio.file.Paths.get(s"$sfDir/documents.parquet")
-      val d = java.nio.file.Paths.get(EventsStream.shmTempDir(
-        "docs_stream", EventsStream.parquetSize(src)))
+      val d = java.nio.file.Paths.get(EventsStream.stagingDir(
+        spark, "docs_stream", EventsStream.parquetSize(src)))
       EventsStream.stageParquet(src, d)
       (d.toString, spark.read.parquet(d.toString).schema)
     })
@@ -156,7 +156,7 @@ object DocsStream {
       val q = deduped
         .toDF("content_hash", "keep_doc_id")
         .writeStream.outputMode("update").format("memory").queryName(name)
-        .option("checkpointLocation", EventsStream.shmTempDir(name))
+        .option("checkpointLocation", EventsStream.stagingDir(spark, name))
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
@@ -190,7 +190,7 @@ object DocsStream {
           .as[String])
         .toDF("token", "cnt")
         .writeStream.outputMode("update").format("memory").queryName(name)
-        .option("checkpointLocation", EventsStream.shmTempDir(name))
+        .option("checkpointLocation", EventsStream.stagingDir(spark, name))
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
@@ -229,7 +229,7 @@ object DocsStream {
           .na.drop(Seq("n_chars")).as[(String, Long)], shortLen)
         .toDF("source", "n_docs", "n_chars", "n_short")
         .writeStream.outputMode("update").format("memory").queryName(name)
-        .option("checkpointLocation", EventsStream.shmTempDir(name))
+        .option("checkpointLocation", EventsStream.stagingDir(spark, name))
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
@@ -305,7 +305,7 @@ object DocsStream {
         .toDF("source", "n_total", "s1_nonblank", "s2_length",
           "s3_quality", "s4_lang", "tok_s4")
         .writeStream.outputMode("update").format("memory").queryName(name)
-        .option("checkpointLocation", EventsStream.shmTempDir(name))
+        .option("checkpointLocation", EventsStream.stagingDir(spark, name))
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -178,7 +180,7 @@ object EventsStream {
     val (dir, schema) = staged.computeIfAbsent(sfDir, { _ =>
       val src = java.nio.file.Paths.get(s"$sfDir/events.parquet")
       val d = java.nio.file.Paths.get(
-        shmTempDir("events_stream", parquetSize(src)))
+        stagingDir(spark, "events_stream", parquetSize(src)))
       if (sys.env.contains("SPARK_GRAFT_STREAM_MAX_FILES"))
         stageTimeBucketed(spark, src, d)
       else stageParquet(src, d)
@@ -255,28 +257,15 @@ object EventsStream {
             override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
             override def onQueryProgress(e: QueryProgressEvent): Unit = {
               val p = e.progress
-              // query/operator names are free-form strings — escape them,
-              // or a quote/backslash in a name emits a malformed JSONL
-              // line that kills soak_table.py mid-parse
-              def jstr(s: String): String = {
-                val b = new StringBuilder
-                s.foreach {
-                  case '"'  => b.append("\\\"")
-                  case '\\' => b.append("\\\\")
-                  case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
-                  case c => b.append(c)
-                }
-                b.toString
+              val states = p.stateOperators.toSeq.map { s =>
+                ListMap("operator" -> s.operatorName, "numRowsTotal" -> s.numRowsTotal,
+                  "numRowsUpdated" -> s.numRowsUpdated, "numRowsRemoved" -> s.numRowsRemoved,
+                  "memoryUsedBytes" -> s.memoryUsedBytes, "commitTimeMs" -> s.commitTimeMs)
               }
-              val states = p.stateOperators.map { s =>
-                s"""{"operator":"${jstr(s.operatorName)}","numRowsTotal":${s.numRowsTotal},""" +
-                  s""""numRowsUpdated":${s.numRowsUpdated},"numRowsRemoved":${s.numRowsRemoved},""" +
-                  s""""memoryUsedBytes":${s.memoryUsedBytes},""" +
-                  s""""commitTimeMs":${s.commitTimeMs}}"""
-              }.mkString("[", ",", "]")
-              val line = s"""{"query":"${jstr(Option(p.name).getOrElse(p.id.toString))}",""" +
-                s""""batchId":${p.batchId},"numInputRows":${p.numInputRows},""" +
-                s""""batchDurationMs":${p.batchDuration},"stateOperators":$states}""" + "\n"
+              val line = graft.Json.write(ListMap(
+                "query" -> Option(p.name).getOrElse(p.id.toString),
+                "batchId" -> p.batchId, "numInputRows" -> p.numInputRows,
+                "batchDurationMs" -> p.batchDuration, "stateOperators" -> states)) + "\n"
               EventsStream.this.synchronized {
                 java.nio.file.Files.write(java.nio.file.Paths.get(path),
                   line.getBytes(java.nio.charset.StandardCharsets.UTF_8),
@@ -288,46 +277,27 @@ object EventsStream {
       }
     }
 
-  /** Stateful-operator parallelism for these single-batch AvailableNow
-    * runs: the shuffle-partition count at query start fixes the number of
-    * state-store instances, and 32 instances of init/commit overhead
-    * dominate a one-batch run whose whole state fits in a handful. On a
-    * real cluster this is sized to state volume the same way — it only
-    * changes layout, never results.
+  /** Stateful-operator parallelism for the AvailableNow stream runs: the
+    * shuffle-partition count at query start fixes the number of
+    * state-store instances. On fixture-scale state, 32 instances of
+    * init/commit overhead dominate a one-batch run whose whole state fits
+    * in a handful, and 4 measured best; at volume that layout serializes —
+    * the r16 StageProfile of stream_session_window at sf10 showed its
+    * stateful stage as 4 tasks of ~28.5 s each (114 s of task time behind
+    * a 4-way bottleneck, over half the row's wall). So the instance count
+    * scales with the source's parquet bytes (~1 instance per 8 MB),
+    * clamped to [4, 32], the same sizing rule a cluster job applies per
+    * state volume. Layout only — session identity is event-time-derived,
+    * so results are partition-count independent (the sf10 streaming gate
+    * runs green at any setting).
     */
-  /** Overridable for tuning probes; 4 measured best on this harness
-    * (state volume is tiny — instance init/commit overhead dominates).
-    */
-  private[streaming] def streamPartitions: Int =
-    sys.env.get("SPARK_GRAFT_STREAM_PARTS") match {
-      case None => 4
-      case Some(v) => scala.util.Try(v.toInt).getOrElse(
-        throw new IllegalArgumentException(
-          s"SPARK_GRAFT_STREAM_PARTS must be an integer, got: '$v'"))
-    }
+  private[streaming] def streamPartitionsFor(srcParquet: String): Int = {
+    val bytes = scala.util.Try(
+      parquetSize(java.nio.file.Paths.get(srcParquet))).getOrElse(0L)
+    math.min(32, math.max(4, (bytes / (8L << 20)).toInt))
+  }
 
-  /** SIZE-AWARE stateful parallelism: the fixed 4-instance layout that
-    * wins on fixture-scale state serializes at volume — the r16
-    * StageProfile of stream_session_window at sf10 showed its stateful
-    * stage as 4 tasks of ~28.5 s each (114 s of task time behind a
-    * 4-way bottleneck, over half the row's wall). Scale the instance
-    * count with the source's parquet bytes (~1 instance per 8 MB),
-    * clamped to [streamPartitions, 32]: fixture runs keep the measured
-    * 4-instance layout, volume runs spread state across the cores. The
-    * same sizing rule a cluster job applies per state volume; explicit
-    * SPARK_GRAFT_STREAM_PARTS still overrides. Layout only — session
-    * identity is event-time-derived, so results are partition-count
-    * independent (the sf10 streaming gate runs green at any setting).
-    */
-  private[streaming] def streamPartitionsFor(srcParquet: String): Int =
-    if (sys.env.contains("SPARK_GRAFT_STREAM_PARTS")) streamPartitions
-    else {
-      val bytes = scala.util.Try(
-        parquetSize(java.nio.file.Paths.get(srcParquet))).getOrElse(0L)
-      math.min(32, math.max(streamPartitions, (bytes / (8L << 20)).toInt))
-    }
-
-  private[streaming] def withStreamPartitions[T](spark: SparkSession, n: Int = streamPartitions,
+  private[streaming] def withStreamPartitions[T](spark: SparkSession, n: Int,
       noDataBatches: Boolean = false)(f: => T): T = {
     registerMetricsListener(spark) // no-op unless SPARK_GRAFT_STREAM_METRICS
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
@@ -370,21 +340,16 @@ object EventsStream {
     }
   }
 
-  /** Temp directory on tmpfs when available (checkpoints, staged sources): the offset WAL, commit
-    * log, and every HDFS-backed state-store snapshot fsync under the
-    * checkpoint root, and /tmp is disk-backed in this harness — memory
-    * residency shaves the fixed cost a short AvailableNow run is dominated
-    * by. Durability is a non-goal for these verification/bench runs (a
-    * production deployment points this at reliable storage; the code path
-    * is identical).
+  /** Staging directories (checkpoints, staged sources) made by
+    * [[stagingDir]], deleted at JVM exit.
     */
-  private val shmDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+  private val stagingDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
   locally {
     // deleteOnExit can't remove non-empty directories — a shutdown hook
     // deletes the trees recursively, or checkpoint/state files would leak
-    // permanently in RAM-backed /dev/shm across runs
+    // across runs
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      shmDirs.forEach { d =>
+      stagingDirs.forEach { d =>
         try {
           import java.nio.file.{Files, Path}
           import java.util.Comparator
@@ -395,21 +360,38 @@ object EventsStream {
     }))
   }
 
-  /** `needBytes` is the caller's size estimate (staged file size, expected
-    * checkpoint volume); tmpfs is only used when it has 2x that headroom,
-    * so a large SF can never fill RAM-backed /dev/shm — it degrades to
+  /** Spark's configured local dir, where stream runs stage their source
+    * copies and checkpoints: the first entry of `SPARK_LOCAL_DIRS`, else
+    * `spark.local.dir`, else `java.io.tmpdir` — the order Spark itself
+    * resolves its scratch space in, so the streams write where the
+    * deployment put Spark's storage.
+    */
+  private[streaming] def stagingRoot(env: Map[String, String],
+                                     conf: org.apache.spark.SparkConf): String = {
+    def first(dirs: String) = dirs.split(",").map(_.trim).find(_.nonEmpty)
+    env.get("SPARK_LOCAL_DIRS").flatMap(first)
+      .orElse(conf.getOption("spark.local.dir").flatMap(first))
+      .getOrElse(System.getProperty("java.io.tmpdir"))
+  }
+
+  /** A fresh temp directory under [[stagingRoot]], deleted at JVM exit.
+    * `needBytes` is the caller's size estimate (staged file size, expected
+    * checkpoint volume); the root is only used when it has 2x that
+    * headroom, so a large SF can never fill it — it degrades to
     * java.io.tmpdir instead.
     */
-  private[streaming] def shmTempDir(prefix: String, needBytes: Long = 64L << 20): String = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val usable = scala.util.Try(
-      java.nio.file.Files.getFileStore(shm).getUsableSpace).getOrElse(0L)
+  private[streaming] def stagingDir(spark: SparkSession, prefix: String,
+                                    needBytes: Long = 64L << 20): String = {
+    val root = java.nio.file.Paths.get(stagingRoot(sys.env, spark.sparkContext.getConf))
+    val usable = scala.util.Try {
+      java.nio.file.Files.createDirectories(root)
+      java.nio.file.Files.getFileStore(root).getUsableSpace
+    }.getOrElse(0L)
     val d =
-      if (java.nio.file.Files.isDirectory(shm) &&
-          java.nio.file.Files.isWritable(shm) && usable >= needBytes * 2)
-        java.nio.file.Files.createTempDirectory(shm, prefix)
+      if (java.nio.file.Files.isWritable(root) && usable >= needBytes * 2)
+        java.nio.file.Files.createTempDirectory(root, prefix)
       else java.nio.file.Files.createTempDirectory(prefix)
-    shmDirs.add(d)
+    stagingDirs.add(d)
     d.toString
   }
 
@@ -427,7 +409,7 @@ object EventsStream {
         sum(col("value").cast("decimal(18,2)")).cast("double").as("total_value"))
       .select(col("window.start").as("hour_start"), col("n"), col("total_value"))
       .writeStream.outputMode("complete").format("memory").queryName(name)
-      .option("checkpointLocation", shmTempDir(name))
+      .option("checkpointLocation", stagingDir(spark, name))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -454,7 +436,7 @@ object EventsStream {
           col("session_window.end").as("session_end"),
           col("n_events"), col("session_value"))
         .writeStream.outputMode("complete").format("memory").queryName(name)
-        .option("checkpointLocation", shmTempDir(name))
+        .option("checkpointLocation", stagingDir(spark, name))
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
@@ -488,7 +470,7 @@ object EventsStream {
           col("session_window.end").as("session_end"),
           col("n_events"), col("session_value"))
         .writeStream.outputMode("append").format("memory").queryName(name)
-        .option("checkpointLocation", shmTempDir(name))
+        .option("checkpointLocation", stagingDir(spark, name))
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
@@ -513,7 +495,7 @@ object EventsStream {
       .filter(col("event_id").isNotNull && col("ts").isNotNull &&
         col("user_id").isNotNull && col("value").isNotNull).as[Event])
       .writeStream.outputMode("update").format("memory").queryName(name)
-      .option("checkpointLocation", shmTempDir(name))
+      .option("checkpointLocation", stagingDir(spark, name))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -585,7 +567,7 @@ object EventsStream {
     val name = s"stream_join_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     val q = purchaseViewJoin(stagedEventStream(spark, sfDir))
       .writeStream.outputMode("append").format("memory").queryName(name)
-      .option("checkpointLocation", shmTempDir(name))
+      .option("checkpointLocation", stagingDir(spark, name))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()

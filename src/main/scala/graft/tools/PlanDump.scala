@@ -3,6 +3,7 @@ package graft.tools
 import java.io.File
 import java.nio.file.{Files, Paths}
 
+import graft.GraftSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dump `explain("formatted")` for registered queries into per-query text
@@ -24,7 +25,7 @@ object PlanDump {
     val outDir = args(0)
     val suffix = args(1)
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.01"
-    val spark = graft.GraftSession.builder(master = "local[8]").getOrCreate()
+    val spark = GraftSession.builder(shufflePartitions = GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val all = graft.SparkEntry.queries
     val names =

@@ -29,8 +29,7 @@ object SemDedupSweep {
     val kList = if (args.length > 3) args(3).split(",").map(_.toInt).toSeq
                 else Seq(64, 128, 256, 1024, 4096, 8192)
     val dims = 64
-    val spark = GraftSession.builder(master = "local[32]", shufflePartitions = 32)
-      .getOrCreate()
+    val spark = GraftSession.builder(shufflePartitions = GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     // per-(id, dim) pseudo-random double in [-1, 1]

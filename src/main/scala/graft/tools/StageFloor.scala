@@ -1,6 +1,8 @@
 package graft.tools
 
-import graft.GraftSession
+import scala.collection.immutable.ListMap
+
+import graft.{GraftSession, Json}
 import org.apache.spark.sql.functions._
 
 /** Measure this box's irreducible per-stage and per-job scheduling floor —
@@ -25,8 +27,7 @@ import org.apache.spark.sql.functions._
 object StageFloor {
   def main(args: Array[String]): Unit = {
     val runs = if (args.nonEmpty) args(0).toInt else 5
-    val spark = GraftSession.builder(master = "local[32]", shufflePartitions = 32)
-      .getOrCreate()
+    val spark = GraftSession.builder(shufflePartitions = GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     def time(fn: => Unit): Double = {
@@ -68,12 +69,11 @@ object StageFloor {
 
     val perStage = slope(chainPts)
     val perJob = slope(jobPts)
-    def fmt(pts: Seq[(Int, Double)]) =
-      pts.map { case (k, v) => s""""$k":${math.round(v * 10) / 10.0}""" }.mkString(",")
-    println(s"""{"per_stage_floor_ms":${math.round(perStage * 10) / 10.0},""" +
-      s""""per_job_floor_ms":${math.round(perJob * 10) / 10.0},""" +
-      s""""chain_points":{${fmt(chainPts)}},"job_points":{${fmt(jobPts)}},""" +
-      s""""runs_per_point":$runs}""")
+    def ms(v: Double): Double = math.round(v * 10) / 10.0
+    def points(pts: Seq[(Int, Double)]) = ListMap.from(pts.map { case (k, v) => k.toString -> ms(v) })
+    println(Json.write(ListMap("per_stage_floor_ms" -> ms(perStage),
+      "per_job_floor_ms" -> ms(perJob), "chain_points" -> points(chainPts),
+      "job_points" -> points(jobPts), "runs_per_point" -> runs)))
     spark.stop()
   }
 }

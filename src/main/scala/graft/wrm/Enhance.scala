@@ -49,8 +49,4 @@ object Enhance {
     enhanced
       .groupBy(col("s3_source_key"), col("file_timestamp"))
       .agg(count(lit(1)).as("n_records"))
-
-  /** A8: classification tallies (enhanced_all.py:107-111). */
-  def classificationCounts(enhanced: DataFrame): DataFrame =
-    enhanced.groupBy(col("record_type")).count()
 }

@@ -30,25 +30,6 @@ object Schemas {
     "givesbonus_acceptspedelecs_fbbattlevel", "pedelecs",
     "s3_source_key", "file_timestamp")
 
-  val processedSchema: StructType = StructType(Seq(
-    StructField("station_id", StringType, nullable = false),
-    StructField("name", StringType, nullable = false),
-    StructField("timestamp", TimestampType, nullable = false),
-    StructField("gmt_local_diff_sec", LongType, nullable = false),
-    StructField("gmt_servertime_diff_sec", LongType, nullable = false),
-    StructField("lat", DoubleType, nullable = false),
-    StructField("lon", DoubleType, nullable = false),
-    StructField("bikes", LongType, nullable = false),
-    StructField("spaces", LongType, nullable = false),
-    StructField("installed", BooleanType, nullable = false),
-    StructField("locked", BooleanType, nullable = false),
-    StructField("temporary", BooleanType, nullable = false),
-    StructField("total_docks", LongType, nullable = false),
-    StructField("givesbonus_acceptspedelecs_fbbattlevel", BooleanType, nullable = false),
-    StructField("pedelecs", LongType, nullable = false),
-    StructField("s3_source_key", StringType, nullable = false),
-    StructField("file_timestamp", TimestampType, nullable = false)))
-
   /** Enhanced table: processed + record_type, date, processed_at — 20
     * ordered columns (models/stations.py:39-60, order enhanced_all.py:77-84).
     */
@@ -59,11 +40,3 @@ object Schemas {
   val recordTypes: Seq[String] = Seq("station", "bike", "unknown")
 }
 
-/** Typed row models where compile-time column safety helps. */
-final case class ProcessedRecord(
-    station_id: String, name: String, timestamp: java.sql.Timestamp,
-    gmt_local_diff_sec: Long, gmt_servertime_diff_sec: Long,
-    lat: Double, lon: Double, bikes: Long, spaces: Long,
-    installed: Boolean, locked: Boolean, temporary: Boolean,
-    total_docks: Long, givesbonus_acceptspedelecs_fbbattlevel: Boolean,
-    pedelecs: Long, s3_source_key: String, file_timestamp: java.sql.Timestamp)

@@ -31,14 +31,6 @@ object Sinks {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("dt").parquet(root)
 
-  /** S11: iceberg-style analytical table sink — adds partition_date and
-    * writes partitioned (plain parquet carries the capability; swap for a
-    * real Iceberg catalog on a cluster).
-    */
-  def icebergStyle(df: DataFrame, root: String, partitionDate: String): Unit =
-    df.withColumn("partition_date", lit(partitionDate).cast("timestamp"))
-      .write.mode("append").partitionBy("partition_date").parquet(root)
-
   /** Compact a dt=-partitioned tree in place: the 30 s-poll ingest writes
     * one tiny file per micro-batch per date (the reference's layout —
     * raw_all.py's per-poll snapshots), and at cluster scale a year of

@@ -89,4 +89,40 @@ class BenchBaselineSpec extends AnyFunSuite {
       java.nio.file.Files.deleteIfExists(tmp)
     }
   }
+
+  /** Runs `f` in a fresh temp dir holding `files` (name -> content). */
+  private def withFiles(files: (String, String)*)(f: java.nio.file.Path => Unit): Unit = {
+    val tmp = java.nio.file.Files.createTempDirectory("bench_spec")
+    files.foreach { case (n, txt) => java.nio.file.Files.writeString(tmp.resolve(n), txt) }
+    try f(tmp)
+    finally {
+      files.foreach { case (n, _) => java.nio.file.Files.deleteIfExists(tmp.resolve(n)) }
+      java.nio.file.Files.deleteIfExists(tmp)
+    }
+  }
+
+  test("the previous bench_out.json is read at the same sf and ignored at another") {
+    val line = """{"metric":"total","value":3.0,"unit":"sec","queries":{"qa":1.250,"qb":1.750},"regressions":{"qa":[0.500,1.250]},"stages":{"qa":3},"sf":"/data/sf0.1"}"""
+    withFiles("bench_out.json" -> (line + "\n")) { tmp =>
+      val out = tmp.resolve("bench_out.json").toString
+      assert(Bench.previousRun(out, "/data/sf0.1") == Map("qa" -> 1.25, "qb" -> 1.75))
+      assert(Bench.previousRun(out, "/data/sf0.01").isEmpty)
+      assert(Bench.previousRun(out, "/other/sf0.1").isEmpty)
+      assert(Bench.previousRun(tmp.resolve("missing.json").toString, "/data/sf0.1").isEmpty)
+    }
+  }
+
+  test("a newer same-SF artifact that is not valid JSON is skipped; the older valid one wins") {
+    val wrapped = """{"n": 7, "rc": 0, "sf": 0.1, "tail": "noise\n{\"metric\":\"total\",\"value\":9.9,\"unit\":\"sec\",\"queries\":{\"q1_agg\":1.25},\"regressions\":{},\"sf\":\"/x/sf0.1\"}\n"}"""
+    val full = """{"sf":"tmp/sf10","metric":"total","value":9.9,"unit":"sec","queries":{"qa":1.5},"regressions":{}}"""
+    // cut after the queries map: sf and the map are intact, the JSON is not
+    def cut(art: String): String = art.take(art.indexOf("regressions"))
+    withFiles("BENCH_r03.json" -> wrapped, "BENCH_r04.json" -> cut(wrapped),
+        "BENCH_sf10_r09.json" -> full, "BENCH_sf10_r10.json" -> cut(full)) { tmp =>
+      assert(Bench.committedBaseline(tmp.toString, "/data/sf0.1") ==
+        ("BENCH_r03.json", Map("q1_agg" -> 1.25)))
+      assert(Bench.committedBaseline(tmp.toString, "/data/sf10") ==
+        ("BENCH_sf10_r09.json", Map("qa" -> 1.5)))
+    }
+  }
 }

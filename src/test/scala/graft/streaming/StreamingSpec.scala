@@ -380,4 +380,19 @@ class StreamingSpec extends SparkSpec {
     q2.awaitTermination()
     assert(spark.read.parquet(enhancedRoot.toString).count() == 2 * 12)
   }
+
+  test("stream staging and checkpoints go under Spark's configured local dir, not /dev/shm") {
+    val conf = new org.apache.spark.SparkConf(false)
+    assert(EventsStream.stagingRoot(Map("SPARK_LOCAL_DIRS" -> " /a/x , /b"),
+      conf.clone.set("spark.local.dir", "/c")) == "/a/x")
+    assert(EventsStream.stagingRoot(Map.empty, conf.clone.set("spark.local.dir", "/c,/d")) == "/c")
+    assert(EventsStream.stagingRoot(Map.empty, conf) == System.getProperty("java.io.tmpdir"))
+    val root = java.nio.file.Paths.get(
+      EventsStream.stagingRoot(sys.env, spark.sparkContext.getConf)).toAbsolutePath.normalize
+    val dir = java.nio.file.Paths.get(
+      EventsStream.stagingDir(spark, "staging_spec")).toAbsolutePath.normalize
+    assert(Files.isDirectory(dir))
+    assert(dir.startsWith(root), s"$dir is not under the local dir $root")
+    assert(!dir.startsWith("/dev/shm"), s"$dir is under /dev/shm")
+  }
 }
