@@ -278,7 +278,7 @@ object Multimodal {
   def imageDupPairs(assets: Dataset[MediaAsset], maxHamming: Int = 3,
                     maxBucketSize: Int = 1000): DataFrame =
     graft.text.TextDedup.bandedHammingPairs(dhashAssets(assets), 64,
-      maxHamming, maxBucketSize, "imageDupPairs", "asset_a", "asset_b")
+      maxHamming, maxBucketSize, "asset_a", "asset_b")
 
   /** Frame sampling (video analog): slice the payload into `n` evenly
     * spaced fixed-size windows — the shape of keyframe extraction.

@@ -1,6 +1,7 @@
 package graft.relational
 
 import graft.{GraftQuery, Tables}
+import graft.plans.SimJoin
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -16,7 +17,7 @@ import org.apache.spark.sql.functions._
   * distinct names is split into `ceil(blk_n / cap)` sub-blocks by a
   * deterministic hash of the name, so per-block candidate pairs are
   * O(blk_n · cap) instead of O(blk_n²). This is the same hot-bucket
-  * guardrail the LSH family applies ([[graft.text.TextDedup.capBuckets]]),
+  * guardrail the LSH family applies ([[SimJoin.capBuckets]]),
   * adapted to resolution semantics: DROPPING an oversized block would
   * silently un-resolve every record in it, whereas sub-blocking keeps
   * exact duplicates together unconditionally (equal names hash to the
@@ -26,10 +27,10 @@ import org.apache.spark.sql.functions._
   * post-mortem (SCALE.md) measured the uncapped failure mode: a 10×-
   * stacked block produced 101× candidate pairs.
   *
-  * Record pairs never materialize all-pairs-in-block either: records join
-  * the (already JW-verified) similar-name-pair list by name, so the join
-  * output IS the edge list — the quadratic in-block record × record
-  * candidate step of the previous version is gone entirely.
+  * Record pairs never materialize all-pairs-in-block either: the sub-block
+  * is one of [[SimJoin.pairs]]' block keys, so records join the
+  * (already JW-verified) name-pair list by name and the join output IS the
+  * edge list.
   *
   * The closure is the O(log n)-round large/small-star loop with per-round
   * localCheckpoint — identical machinery to q51, which the 100 TB audit
@@ -51,85 +52,56 @@ object EntityResolution {
   private def md5Base(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
-  /** Distinct (blk_tok, blk_brand, sub, p_name) with the sub-block id:
-    * 0 for every name in a block at-or-under `cap`; a deterministic
-    * md5-hash bucket in [0, ceil(blk_n/cap)) for oversized blocks.
-    * Equal names always share a sub-block (the hash is a function of the
-    * name alone), so exact duplicates can never be split apart.
+  /** The blocking keys: (last-name-token, brand) plus the sub-block id. */
+  private[relational] val Keys: Seq[String] = SimJoin.PartKeys :+ "sub"
+
+  /** [[SimJoin.partRecords]] with the sub-block id: 0 for every record in
+    * a block of at most `cap` distinct names; a deterministic md5-hash
+    * bucket in [0, ceil(blk_n/cap)) for oversized blocks. Equal names
+    * always share a sub-block (the hash is a function of the name alone),
+    * so exact duplicates can never be split apart.
     */
-  private[relational] def subBlockedNames(p: DataFrame, cap: Int): DataFrame = {
-    // Pin the distinct's exchange: its output bytes are small, so AQE
-    // coalesces the final aggregate — and the block-count join and
-    // sub-block hash fused behind it — into one task (measured 1.5 s
-    // single-task at 10x bench scale). REPARTITION_BY_NUM on the same
-    // keys satisfies the aggregate's required distribution at the
-    // session's parallelism and is exempt from coalescing.
+  private[relational] def subBlocked(p: DataFrame, cap: Int): DataFrame = {
+    // Pin the distinct's exchange on the block key: its output bytes are
+    // small, so AQE would coalesce the distinct and the block count fused
+    // behind it into one task (measured 1.5 s single-task at 10x bench
+    // scale). REPARTITION_BY_NUM satisfies both aggregates' required
+    // distribution at the session's parallelism and is exempt from
+    // coalescing.
     val pnum = p.sparkSession.sessionState.conf.numShufflePartitions
-    // partition by the BLOCK key alone (not (block, name)): the distinct
-    // still clusters correctly (block ⊂ (block, name)), and the SAME
-    // exchange now also satisfies the block-count aggregate, its join,
-    // and both sides of the candidate self-join downstream — previously
-    // each of those re-exchanged
-    val names = p.select(col("blk_tok"), col("blk_brand"), col("p_name"))
+    val bn = p.select(col("blk_tok"), col("blk_brand"), col("p_name"))
       .repartition(pnum, col("blk_tok"), col("blk_brand"))
       .distinct()
-    val bn = names.groupBy(col("blk_tok"), col("blk_brand"))
+      .groupBy(col("blk_tok"), col("blk_brand"))
       .agg(count(lit(1)).as("blk_n"))
-    names.join(bn, Seq("blk_tok", "blk_brand"))
-      .withColumn("sub",
-        pmod(md5Base(col("p_name")), expr(s"(blk_n + ${cap - 1}) div $cap")))
-      .select(col("blk_tok"), col("blk_brand"), col("sub"), col("p_name"))
+    p.join(bn, SimJoin.PartKeys)
+      .select(col("blk_tok"), col("blk_brand"),
+        pmod(md5Base(col("p_name")), expr(s"(blk_n + ${cap - 1}) div $cap")).as("sub"),
+        col("p_partkey"), col("p_name"))
   }
 
-  /** Candidate name pairs: both orders plus the diagonal, within
-    * (block, sub-block). Row count per block is Σ sub² ≤ ~blk_n · cap —
-    * the capped quantity the adversarial spec pins. (A half-orientation
-    * variant was measured at 10× bench scale and was a wash: the stage
-    * cost is the candidate join's sort, not the symmetric JW evaluation,
-    * so the simpler both-orders form stays.)
+  /** Record match edges (src < dst): same (block, sub-block) AND equal
+    * names or Jaro-Winkler ≥ minSim — equal names match trivially
+    * (similarity 1), so exact duplicates and near-misses resolve through
+    * the same path. Per block the candidate name pairs are Σ sub² ≤
+    * ~blk_n · cap — the capped quantity the adversarial spec pins.
     */
-  private[relational] def candidateNamePairs(p: DataFrame, cap: Int): DataFrame = {
-    val nsub = subBlockedNames(p, cap)
-    nsub.select(col("blk_tok"), col("blk_brand"), col("sub"),
-        col("p_name").as("name_a"))
-      .join(nsub.select(col("blk_tok"), col("blk_brand"), col("sub"),
-        col("p_name").as("name_b")),
-        Seq("blk_tok", "blk_brand", "sub"))
-      .select(col("blk_tok"), col("blk_brand"), col("name_a"), col("name_b"))
-  }
+  private[relational] def edges(p: DataFrame, minSim: Double, cap: Int): DataFrame =
+    SimJoin.pairs(subBlocked(p, cap), Keys,
+        prune = lit(true),
+        score = graft.text.JaroWinkler.jaroWinkler(col("name_a"), col("name_b")).as("jw"),
+        keep = col("name_a") === col("name_b") || col("jw") >= minSim)
+      .select(col("key_a").as("src"), col("key_b").as("dst"))
 
   /** Resolved entities over part: (entity_id = min member key, n_members,
     * n_names, golden_name = the entity_id member's name).
-    *
-    * Match rule: same (last-name-token, brand) block AND Jaro-Winkler ≥
-    * minSim — equal names match trivially (similarity 1), so exact
-    * duplicates and near-misses resolve through the same path.
     */
   def resolveEntities(part: DataFrame, minSim: Double,
                       maxBlockNames: Int = MaxBlockNames): DataFrame = {
     require(minSim > 0.0 && minSim <= 1.0, s"minSim in (0,1], got $minSim")
     require(maxBlockNames >= 1, s"maxBlockNames must be >= 1, got $maxBlockNames")
-    val p = part.select(
-      element_at(split(col("p_name"), " "), -1).as("blk_tok"),
-      col("p_brand").as("blk_brand"),
-      col("p_partkey"), col("p_name"))
-    // JW runs once per distinct in-block name pair; the kernel never sees
-    // record multiplicity.
-    val sim = candidateNamePairs(p, maxBlockNames)
-      .filter(col("name_a") === col("name_b") ||
-        graft.text.JaroWinkler.jaroWinkler(col("name_a"), col("name_b")) >= minSim)
-    // Edges = records joined to the verified name pairs by (block, name):
-    // output rows are exactly the matching record pairs — the non-matching
-    // in-block record × record candidates are never materialized.
-    val edges = sim
-      .join(p.select(col("blk_tok"), col("blk_brand"),
-        col("p_name").as("name_a"), col("p_partkey").as("src")),
-        Seq("blk_tok", "blk_brand", "name_a"))
-      .join(p.select(col("blk_tok"), col("blk_brand"),
-        col("p_name").as("name_b"), col("p_partkey").as("dst")),
-        Seq("blk_tok", "blk_brand", "name_b"))
-      .filter(col("src") < col("dst"))
-      .select(col("src"), col("dst"))
+    val p = SimJoin.partRecords(part)
+    val edges = this.edges(p, minSim, maxBlockNames)
     val cc = graft.text.TextDedup.connectedComponents(
       p.select(col("p_partkey").as("doc_id")), edges)
     cc.join(p.select(col("p_partkey").as("doc_id"), col("p_name")), Seq("doc_id"))

@@ -1,6 +1,7 @@
 package graft.relational
 
 import graft.{GraftQuery, Tables}
+import graft.plans.SimJoin
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -9,15 +10,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: fuzzy matching is inherently quadratic per block — the
   * design lever is block granularity. Blocking on (last name token, brand)
-  * bounds each block at catalog-constant size. The quadratic term is paid
-  * exactly once, on the per-block DISTINCT-name self-join that feeds the
-  * kernel (names, not rows); the row-level join-back never expands
-  * Σ block² candidate rows — it probes the surviving name-pair set first
-  * and re-attaches the other side with a plain O(|rows|) equi-join. A
-  * cheap length-difference guard prunes before the O(len²) levenshtein
-  * kernel runs (edit distance ≥ length difference, so the guard is exact,
-  * not a heuristic). Skewed blocks would salt exactly like any hot join
-  * key. All-pairs levenshtein — the naive shape — is banned by
+  * bounds each block at catalog-constant size; the block → distinct names
+  * → self-join → join-back plumbing is [[SimJoin.pairs]], shared with
+  * q157. All-pairs levenshtein — the naive shape — is banned by
   * construction, not by configuration.
   */
 object FuzzyJoin {
@@ -25,63 +20,18 @@ object FuzzyJoin {
   /** Near-duplicate (a, b) name pairs within (last-token, brand) blocks,
     * edit distance ≤ maxDist, each unordered pair once (key_a < key_b).
     *
-    * The edit-distance kernel runs once per DISTINCT (name_a, name_b) pair,
-    * not per candidate row: catalog-style name columns have cardinality far
-    * below row count, so Σ block² candidate pairs collapse to a small
-    * distinct-pair set (here ≤ |names|²), and the kernel cost drops by the
-    * duplication factor. The join-back is AQE-broadcast when the distinct
-    * set is small; with high-cardinality names the distinct set approaches
-    * the candidate count and this degrades gracefully to one kernel eval
-    * per pair — never more, unlike a join-condition levenshtein which
-    * Catalyst re-evaluates per conjunct and again in the projection.
+    * A cheap length-difference guard prunes before the kernel (edit
+    * distance ≥ length difference, so the guard is exact, not a
+    * heuristic), and the threshold form of the kernel — the banded DP
+    * early-exits (returns -1) once the minimum exceeds maxDist — is
+    * O(maxDist·len), not O(len²).
     */
   def blockedFuzzyPairs(part: DataFrame, maxDist: Int): DataFrame = {
     require(maxDist >= 1, s"maxDist must be >= 1, got $maxDist")
-    val p = part.select(
-      element_at(split(col("p_name"), " "), -1).as("blk_tok"),
-      col("p_brand").as("blk_brand"),
-      col("p_partkey"), col("p_name"))
-    val a = p.select(col("blk_tok"), col("blk_brand"),
-      col("p_partkey").as("key_a"), col("p_name").as("name_a"))
-    val b = p.select(col("blk_tok"), col("blk_brand"),
-      col("p_partkey").as("key_b"), col("p_name").as("name_b"))
-    // Kernel over distinct names only: block-join the per-block distinct
-    // name sets, prune with the exact length guard (edit distance >= length
-    // difference), then run the threshold form of the kernel — the banded
-    // DP early-exits (returns -1) once the minimum exceeds maxDist, so it
-    // is O(maxDist·len) not O(len²). Computed above a distinct
-    // (= aggregate) barrier, so Catalyst cannot push the dist filter back
-    // into a join condition and re-evaluate the kernel per conjunct.
-    // pin the distinct-name table on the BLOCK key: one exchange serves
-    // the distinct (clustering on a superset of the partition key), both
-    // sides of the block self-join below (co-partitioned, the second side
-    // reuses the first's exchange), and keeps the kernel stage at the
-    // session parallelism instead of AQE-coalesced single tasks
-    val pnum = part.sparkSession.sessionState.conf.numShufflePartitions
-    val names = p.select(col("blk_tok"), col("blk_brand"), col("p_name"))
-      .repartition(pnum, col("blk_tok"), col("blk_brand"))
-      .distinct()
-    val pairDist = names.select(col("blk_tok"), col("blk_brand"), col("p_name").as("name_a"))
-      .join(names.select(col("blk_tok"), col("blk_brand"), col("p_name").as("name_b")),
-        Seq("blk_tok", "blk_brand"))
-      .filter(abs(length(col("name_a")) - length(col("name_b"))) <= maxDist)
-      .select(col("name_a"), col("name_b")).distinct()
-      .withColumn("dist", levenshtein(col("name_a"), col("name_b"), maxDist))
-      .filter(col("dist") >= 0)
-    // Join-back WITHOUT the block expansion (round 18): the original shape
-    // expanded a x b on the block key first — sum(block_rows^2) rows
-    // (202 M at sf10 for 2 M parts in ~100-row blocks) — and only then
-    // probed the surviving name pairs; the expansion and its two-string
-    // hash probe, not the kernel, were the whole row's cost. Joining the
-    // row side against the surviving pairs FIRST keeps only rows whose
-    // name actually has a near-match (survivors x rows-per-name), and the
-    // second join re-attaches the b side on (block, name_b) — a plain
-    // equi-join shuffling O(|part|) rows, never O(sum block^2). Each
-    // unordered key pair still appears exactly once: (key_a, key_b) with
-    // key_a < key_b picks one orientation of the symmetric pair set.
-    a.join(pairDist, Seq("name_a"))
-      .join(b, Seq("blk_tok", "blk_brand", "name_b"))
-      .filter(col("key_a") < col("key_b"))
+    SimJoin.pairs(SimJoin.partRecords(part), SimJoin.PartKeys,
+        prune = abs(length(col("name_a")) - length(col("name_b"))) <= maxDist,
+        score = levenshtein(col("name_a"), col("name_b"), maxDist).as("dist"),
+        keep = col("dist") >= 0)
       .select(col("key_a"), col("key_b"), col("name_a"), col("name_b"), col("dist"))
       .orderBy(col("key_a"), col("key_b"))
   }
@@ -93,20 +43,10 @@ object FuzzyJoin {
     *
     * The kernel is the native codegen'd [[graft.text.JaroWinkler]]
     * expression (semantics differentially pinned to DuckDB's
-    * `jaro_winkler_similarity`), evaluated once per distinct in-block name
-    * pair behind the same aggregate barrier as the levenshtein variant.
+    * `jaro_winkler_similarity`).
     */
   def jaroWinklerPairs(part: DataFrame, minSim: Double): DataFrame = {
     require(minSim > 0.0 && minSim <= 1.0, s"minSim in (0,1], got $minSim")
-    val p = part.select(
-      element_at(split(col("p_name"), " "), -1).as("blk_tok"),
-      col("p_brand").as("blk_brand"),
-      col("p_partkey"), col("p_name"))
-    // block-key pin: see blockedFuzzyPairs
-    val pnum = part.sparkSession.sessionState.conf.numShufflePartitions
-    val names = p.select(col("blk_tok"), col("blk_brand"), col("p_name"))
-      .repartition(pnum, col("blk_tok"), col("blk_brand"))
-      .distinct()
     // EXACT length-ratio prune ahead of the kernel (the q105 length-guard
     // idea, JW-shaped): with prefix scale p=0.1 and prefix cap 4,
     // JW <= 0.6·J + 0.4, and Jaro's match count m <= min(|a|,|b|) gives
@@ -121,26 +61,10 @@ object FuzzyJoin {
       if (rMin <= 0) lit(true)
       else least(length(col("name_a")), length(col("name_b"))).cast("double") >=
         greatest(length(col("name_a")), length(col("name_b"))) * lit(rMin)
-    val pairSim = names.select(col("blk_tok"), col("blk_brand"), col("p_name").as("name_a"))
-      .join(names.select(col("blk_tok"), col("blk_brand"), col("p_name").as("name_b")),
-        Seq("blk_tok", "blk_brand"))
-      .filter(col("name_a") =!= col("name_b") && lenOk)
-      .select(col("name_a"), col("name_b")).distinct()
-      .withColumn("jw", graft.text.JaroWinkler.jaroWinkler(col("name_a"), col("name_b")))
-      .filter(col("jw") >= minSim)
-    val a = p.select(col("blk_tok"), col("blk_brand"),
-      col("p_partkey").as("key_a"), col("p_name").as("name_a"))
-    val b = p.select(col("blk_tok"), col("blk_brand"),
-      col("p_partkey").as("key_b"), col("p_name").as("name_b"))
-    // Same expansion-free join-back as [[blockedFuzzyPairs]]: probe the
-    // surviving name pairs BEFORE re-attaching the b side, so the plan
-    // shuffles O(|part|) rows instead of expanding sum(block^2) candidate
-    // rows (the expansion — 202 M rows at sf10 — was 100% of this row's
-    // cost; the JW kernel itself runs on 1.3 M distinct pairs and is
-    // sub-second).
-    a.join(pairSim, Seq("name_a"))
-      .join(b, Seq("blk_tok", "blk_brand", "name_b"))
-      .filter(col("key_a") < col("key_b"))
+    SimJoin.pairs(SimJoin.partRecords(part), SimJoin.PartKeys,
+        prune = col("name_a") =!= col("name_b") && lenOk,
+        score = graft.text.JaroWinkler.jaroWinkler(col("name_a"), col("name_b")).as("jw"),
+        keep = col("jw") >= minSim)
       .select(col("key_a"), col("key_b"), col("name_a"), col("name_b"),
         round(col("jw"), 5).as("jw"))
       .orderBy(col("key_a"), col("key_b"))

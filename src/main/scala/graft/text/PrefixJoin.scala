@@ -1,6 +1,7 @@
 package graft.text
 
 import graft.{GraftQuery, Tables}
+import graft.plans.SimJoin
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -20,8 +21,9 @@ import org.apache.spark.sql.expressions.Window
   * candidates.
   *
   * Scale shape: token-df aggregate + per-doc rank window (bounded by doc
-  * length), prefix-token equi-join with the [[TextDedup.capBuckets]]
-  * hot-key cap, then a verify join fetching the two token sets per
+  * length), prefix-token self-join with the [[SimJoin.capBuckets]]
+  * hot-key cap over the [[SimJoin.triangularSelfPairs]] cover, then a
+  * verify join fetching the two token sets per
   * candidate. The threshold compare is integer cross-multiplication
   * (inter·den ≥ num·union) — no float boundary.
   */
@@ -32,7 +34,7 @@ object PrefixJoin {
     * @param maxTokenDocs drop prefix-join blocks larger than this (the
     *   capBuckets contract: a token this common in PREFIXES means a
     *   pathological df distribution; candidates it would generate are
-    *   dropped with a logged warning, mirrored in the oracle).
+    *   dropped silently, and the oracle drops them the same way).
     */
   def jaccardPairs(docs: DataFrame, num: Int, den: Int,
                    maxTokenDocs: Int = 1000): DataFrame = {
@@ -59,48 +61,19 @@ object PrefixJoin {
     val prefix = ranked
       .filter(col("rnk") <= col("n") - ceil(lit(t) * col("n")) + 1)
       .select(col("doc_id"), col("token"))
-    val capped = TextDedup.capBuckets(prefix, Seq("token"), maxTokenDocs,
-      "prefixJoin")
-    // Triangular bucketed pair expansion: a hot token at the cap expands
-    // to cap²/2 candidate pairs, and a plain token self-join computes ALL
-    // of them in the one task holding that token (measured: one 885-doc
-    // sf0.1 token = 75% of all raw pairs, 2.5 s in a single task). Split
-    // each token's docs into g = ⌈n/S⌉ hash buckets and join on
-    // (token, i, j) bucket pairs with i ≤ j instead: every in-block pair
-    // still appears (a doc serves as the a-side for bucket pairs
-    // (b, b..g-1) and the b-side for (0..b, b)), so the candidate SET —
-    // and therefore the verified output and the oracle — is unchanged,
-    // but the expansion of a hot token spreads over g(g+1)/2 independent
-    // join keys (~10 tasks at the default cap) instead of one. Tokens
-    // with ≤ S docs keep g = 1 — single bucket, exactly the old join.
-    val bucketSize = 250
-    val bucketed = capped
-      .withColumn("g", expr(s"(count(1) over (partition by token) + ${bucketSize - 1}) div $bucketSize"))
-      .withColumn("b", pmod(xxhash64(col("doc_id")), col("g")).cast("int"))
-    // Both the pair-expansion join and the verify below are CPU-dense per
-    // input BYTE (a few-MiB exchange fans out to ~500k pair comparisons),
-    // which AQE's byte-based partition coalescing cannot see — measured at
-    // sf0.1 it folded both exchanges to 3 tasks and re-serialized the
-    // spread the bucketing buys. Pin them at the session's shuffle
-    // parallelism (the cluster-sized knob) with explicit repartition —
-    // REPARTITION_BY_NUM shuffles are exempt from AQE coalescing.
+    val capped = SimJoin.capBuckets(prefix, Seq("token"), maxTokenDocs)
+    // The pair expansion and the verify below are CPU-dense per input BYTE
+    // (a few-MiB exchange fans out to ~500k pair comparisons), which AQE's
+    // byte-based coalescing cannot see — measured at sf0.1 it folded both
+    // exchanges to 3 tasks. The cover pins the expansion; pin the distinct
+    // too: the aggregate's required distribution is satisfied by this exact
+    // exchange, so the dedup AND the verify joins downstream all run at the
+    // pinned width instead of the byte-coalesced one.
     val p = docs.sparkSession.sessionState.conf.numShufflePartitions
-    val aSide = bucketed.select(col("token"), col("b").as("i"),
-      explode(sequence(col("b"), col("g").cast("int") - 1)).as("j"),
-      col("doc_id").as("doc_a"))
-    val bSide = bucketed.select(col("token"),
-      explode(sequence(lit(0), col("b"))).as("i"), col("b").as("j"),
-      col("doc_id").as("doc_b"))
-    val cand = aSide.repartition(p, col("token"), col("i"), col("j"))
-      .join(bSide.repartition(p, col("token"), col("i"), col("j")),
-        Seq("token", "i", "j"))
-      .filter(col("doc_a") =!= col("doc_b"))
-      .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
-        greatest(col("doc_a"), col("doc_b")).as("doc_b"))
-      // pin BEFORE the distinct: the aggregate's required distribution is
-      // satisfied by this exact exchange, so the dedup AND the verify
-      // joins downstream all run at the pinned width instead of the
-      // byte-coalesced one
+    val cand = SimJoin.triangularSelfPairs(capped, Seq("token"), "doc_id",
+        Nil, bucketSize = 250)
+      .select(least(col("doc_id_a"), col("doc_id_b")).as("doc_a"),
+        greatest(col("doc_id_a"), col("doc_id_b")).as("doc_b"))
       .repartition(p, col("doc_a"), col("doc_b"))
       .distinct()
     cand

@@ -1,6 +1,7 @@
 package graft.text
 
 import graft.{GraftQuery, Tables}
+import graft.plans.SimJoin
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -80,81 +81,12 @@ object TextDedup {
       (x, y) => when(x === y, 1.0).otherwise(0.0)),
       lit(0.0), (acc, v) => acc + v) / lit(k.toDouble)
 
-  /** Drop LSH buckets holding more than `cap` members before a bucket
-    * self-join. The pair join is O(bucket²): one hot bucket (boilerplate
-    * text, near-constant embeddings) turns a linear candidate pass into a
-    * quadratic blow-up at corpus scale. A bucket with >cap members is, at
-    * any sane cap, a single massive duplicate cluster — the
-    * canonical/cluster APIs (one row per doc) are the right tool for
-    * those; the PAIR api caps them.
-    *
-    * Lazy by construction: a window count over the banding keys, then a
-    * filter — NO job runs at plan-build time (an earlier version ran an
-    * eager count + cache here, which doubled q26 and made the pair APIs
-    * do work during query construction). Both sides of the caller's
-    * self-join re-derive this plan from the caller's cached signature
-    * frame (explode + window over in-memory blocks — cheap); after the
-    * cap filter one side is typically small enough that AQE broadcasts
-    * it. Callers wanting drop diagnostics can run the inverse filter
-    * (`bucket_n > cap`) as a separate cheap aggregate.
-    */
-  private[graft] def capBuckets(bandedIn: DataFrame, keys: Seq[String],
-                                cap: Int, what: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*)
-    bandedIn
-      .withColumn("__bucket_n", count(lit(1)).over(w))
-      .filter(col("__bucket_n") <= cap)
-      .drop("__bucket_n")
-  }
-
-  /** Unordered within-block self-pair expansion with the triangular bucket
-    * cover (the q129 prefix-join / q80 dominance-join pattern, shared):
-    * split each block into g = ⌈n/bucketSize⌉ hash buckets on the id and
-    * join on (keys, i, j) bucket pairs with i ≤ j — an exact cover of the
-    * unordered in-block pair set (an off-diagonal pair appears exactly
-    * once, oriented by bucket; a diagonal one dedupes by id order). A
-    * plain keys-only self-join computes a whole block's O(n²) expansion in
-    * the one task holding the block, and AQE's byte-based coalescing folds
-    * the low-byte/high-CPU exchange further — the cover spreads a block
-    * over g(g+1)/2 independent join keys and pins both exchanges at the
-    * session parallelism (REPARTITION_BY_NUM is exempt from coalescing).
-    * Output: keys ++ <id,payload>_a ++ <id,payload>_b, one row per
-    * unordered pair; orientation is arbitrary, so normalize downstream
-    * with least/greatest if the consumer is not symmetric.
-    */
-  private[graft] def triangularSelfPairs(blocked: DataFrame, keys: Seq[String],
-                                         idCol: String, payload: Seq[String],
-                                         bucketSize: Int): DataFrame = {
-    require(bucketSize >= 1, s"bucketSize must be >= 1, got $bucketSize")
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*)
-    val sides = idCol +: payload
-    val bucketed = blocked
-      .withColumn("__g",
-        ((count(lit(1)).over(w) + lit(bucketSize - 1)) / lit(bucketSize))
-          .cast("int"))
-      .withColumn("__b", pmod(xxhash64(col(idCol)), col("__g")).cast("int"))
-    val keyCols = keys.map(col)
-    val aSide = bucketed.select(keyCols ++ Seq(col("__b").as("__i"),
-      explode(sequence(col("__b"), col("__g") - 1)).as("__j")) ++
-      sides.map(c => col(c).as(s"${c}_a")): _*)
-    val bSide = bucketed.select(keyCols ++ Seq(
-      explode(sequence(lit(0), col("__b"))).as("__i"), col("__b").as("__j")) ++
-      sides.map(c => col(c).as(s"${c}_b")): _*)
-    val p = blocked.sparkSession.sessionState.conf.numShufflePartitions
-    val jk = keys ++ Seq("__i", "__j")
-    aSide.repartition(p, jk.map(col): _*)
-      .join(bSide.repartition(p, jk.map(col): _*), jk)
-      .filter(col(s"${idCol}_a") =!= col(s"${idCol}_b"))
-      .filter(col("__i") =!= col("__j") ||
-        col(s"${idCol}_a") < col(s"${idCol}_b"))
-      .drop("__i", "__j")
-  }
-
   /** MinHash-LSH near-duplicate pairs over `documents`:
     * shingle → signature → band-bucket join → Jaccard verify ≥ threshold.
     * Returns (doc_a, doc_b, est_jaccard, jaccard).
     *
-    * `maxBucketSize` bounds the O(bucket²) candidate join (see capBuckets).
+    * `maxBucketSize` bounds the O(bucket²) candidate join (see
+    * [[graft.plans.SimJoin.capBuckets]]).
     */
   def minhashDupPairs(docs: DataFrame, k: Int = 16, bands: Int = 4,
                       threshold: Double = 0.5,
@@ -180,8 +112,8 @@ object TextDedup {
         explode(bandKeys(col("sig"), k, bands, hashed = !TextExprs.isMd5Mode(hashMode))).as("band"))
       .select(col("doc_id"), col("band.band_id").as("band_id"),
         col("band.band_key").as("band_key"))
-    val banded = capBuckets(bandedAll, Seq("band_id", "band_key"),
-      maxBucketSize, "minhashDupPairs")
+    val banded = SimJoin.capBuckets(bandedAll, Seq("band_id", "band_key"),
+      maxBucketSize)
     val candidates = banded.as("a")
       .join(banded.as("b"), Seq("band_id", "band_key"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
@@ -943,8 +875,7 @@ object TextDedup {
     val fp = docs
       .select(col("doc_id").as("id"),
         TextExprs.simhash64(spark, TextAnalysis.tokens(col("text")), hashMode).as("fp"))
-    bandedHammingPairs(fp, fpBits, maxHamming, maxBucketSize,
-      "simhashDupPairs", "doc_a", "doc_b")
+    bandedHammingPairs(fp, fpBits, maxHamming, maxBucketSize, "doc_a", "doc_b")
   }
 
   /** The fingerprint-agnostic half of [[simhashDupPairs]]: pigeonhole
@@ -954,7 +885,7 @@ object TextDedup {
     * (band_id, int16, id, int64) rows; hot buckets capped like MinHash.
     */
   private[graft] def bandedHammingPairs(fp: DataFrame, fpBits: Int,
-      maxHamming: Int, maxBucketSize: Int, opName: String,
+      maxHamming: Int, maxBucketSize: Int,
       outA: String, outB: String): DataFrame = {
     require(maxHamming >= 0 && maxHamming < fpBits,
       s"maxHamming must be in [0, $fpBits), got $maxHamming")
@@ -970,8 +901,8 @@ object TextDedup {
       }: _*)).as("band"))
       .select(col("id"), col("fp"),
         col("band.band_id").as("band_id"), col("band.band_val").as("band_val"))
-    val banded = capBuckets(bandedAll, Seq("band_id", "band_val"),
-      maxBucketSize, opName)
+    val banded = SimJoin.capBuckets(bandedAll, Seq("band_id", "band_val"),
+      maxBucketSize)
     banded.as("a").join(banded.as("b"), Seq("band_id", "band_val"))
       .filter(col("a.id") < col("b.id"))
       .select(col("a.id").as(outA), col("b.id").as(outB),

@@ -344,45 +344,20 @@ object SemDedup {
       .localCheckpoint(false) // lazy: the first pair-side consumer materializes
 
     // Dominance: within a cell every vector meets every other — O(cluster²)
-    // pairs whose cost is CPU (64-dim cosine), not bytes. Two serialization
-    // traps at scale: the plain cell-keyed self-join has only nClusters
-    // distinct keys (≤ nClusters tasks however wide the cluster), and AQE's
-    // byte-based coalescing folds the few-MiB exchange further (measured at
-    // 10× bench scale: the whole ~50M-pair stage ran 9.6 s in a SINGLE
-    // task). Same remedy as the q129 prefix join: split each cell into
-    // g = ⌈n/S⌉ hash buckets and join on (cell, i, j) bucket pairs with
-    // i ≤ j — an exact cover of the unordered in-cell pair set (off-diagonal
-    // pairs appear once by bucket orientation; diagonal ones dedupe by id
-    // order) — and pin the CPU-dense exchanges at the session parallelism
-    // (REPARTITION_BY_NUM is exempt from AQE coalescing).
+    // CPU-dense pairs (64-dim cosine) over a few cell keys, so the pairs
+    // go through the triangular bucket cover (SimJoin.triangularSelfPairs).
     // Each unordered pair is tested ONCE and emits its dominance LOSER —
     // the (cent_sim, vec_id)-lexicographic larger end — which is equivalent
     // to the ordered "∃ dominating rival within τ" rule because
     // (cent_sim, vec_id) strictly totally orders a cell, at half the cosine
     // evaluations of the ordered form.
-    val bucketSize = 250
-    val bucketed = withSim
-      .withColumn("g", expr(
-        s"(count(1) over (partition by cell) + ${bucketSize - 1}) div $bucketSize"))
-      .withColumn("b", pmod(xxhash64(col("vec_id")), col("g")).cast("int"))
     val p = assignedIn.sparkSession.sessionState.conf.numShufflePartitions
-    val xSide = bucketed.select(col("cell"), col("b").as("i"),
-      explode(sequence(col("b"), col("g").cast("int") - 1)).as("j"),
-      col("vec_id").as("x_id"), col("embedding").as("x_emb"),
-      col("cent_sim").as("x_sim"))
-    val ySide = bucketed.select(col("cell"),
-      explode(sequence(lit(0), col("b"))).as("i"), col("b").as("j"),
-      col("vec_id").as("y_id"), col("embedding").as("y_emb"),
-      col("cent_sim").as("y_sim"))
-    val dropped = xSide.repartition(p, col("cell"), col("i"), col("j"))
-      .join(ySide.repartition(p, col("cell"), col("i"), col("j")),
-        Seq("cell", "i", "j"))
-      .filter(col("x_id") =!= col("y_id"))
-      .filter(col("i") =!= col("j") || col("x_id") < col("y_id"))
-      .filter(VectorExprs.cosineSim(col("x_emb"), col("y_emb")) >= tau)
-      .select(when(col("x_sim") < col("y_sim") ||
-          (col("x_sim") === col("y_sim") && col("x_id") < col("y_id")),
-        col("y_id")).otherwise(col("x_id")).as("vec_id"))
+    val dropped = graft.plans.SimJoin.triangularSelfPairs(withSim, Seq("cell"),
+        "vec_id", Seq("embedding", "cent_sim"), bucketSize = 250)
+      .filter(VectorExprs.cosineSim(col("embedding_a"), col("embedding_b")) >= tau)
+      .select(when(col("cent_sim_a") < col("cent_sim_b") ||
+          (col("cent_sim_a") === col("cent_sim_b") && col("vec_id_a") < col("vec_id_b")),
+        col("vec_id_b")).otherwise(col("vec_id_a")).as("vec_id"))
       .repartition(p, col("vec_id"))
       .distinct()
       .withColumn("is_dropped", lit(true))

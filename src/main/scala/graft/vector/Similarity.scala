@@ -140,17 +140,17 @@ object Similarity {
   /** Embedding-cosine near-duplicate pairs, blocked by LSH bucket so the
     * pair space is bucket-local (standard dedup blocking at scale).
     * `maxBucketSize` bounds the O(bucket²) self-join: a hot bucket
-    * (near-constant embeddings) is dropped with a logged warning — massive
-    * duplicate clusters belong to the canonical-assignment APIs, not pair
-    * emission.
+    * (near-constant embeddings) is dropped silently, and the oracle drops
+    * it the same way — massive duplicate clusters belong to the
+    * canonical-assignment APIs, not pair emission.
     */
   def embeddingDupPairs(corpus: DataFrame, threshold: Double, planes: Int = 6,
                         maxBucketSize: Int = 1000,
                         hashMode: String = "xx"): DataFrame = {
-    val bucketed = graft.text.TextDedup.capBuckets(
+    val bucketed = graft.plans.SimJoin.capBuckets(
       corpus.select(col("vec_id"), col("embedding"),
         VectorExprs.lshBucket(col("embedding"), planes, 0, hashMode).as("bucket")),
-      Seq("bucket"), maxBucketSize, "embeddingDupPairs")
+      Seq("bucket"), maxBucketSize)
     // Triangular bucket cover instead of the plain bucket self-join: with
     // 2^planes distinct blocking keys the pair expansion has at most that
     // many tasks and AQE byte-coalescing folds it further (measured at 10x
@@ -159,7 +159,7 @@ object Similarity {
     // orientation-symmetric bit-exactly (IEEE products commute and the
     // fold order is the index order of both inputs), so normalizing ids
     // with least/greatest reproduces the old id_a < id_b output exactly.
-    graft.text.TextDedup.triangularSelfPairs(bucketed, Seq("bucket"),
+    graft.plans.SimJoin.triangularSelfPairs(bucketed, Seq("bucket"),
         "vec_id", Seq("embedding"), bucketSize = 250)
       .withColumn("cos_sim",
         VectorExprs.cosineSim(col("embedding_a"), col("embedding_b")))

@@ -1,6 +1,7 @@
 package graft.relational
 
 import graft.SparkSpec
+import graft.plans.SimJoin
 import org.apache.spark.unsafe.types.UTF8String
 
 class EntityResolutionSpec extends SparkSpec {
@@ -125,17 +126,51 @@ class EntityResolutionSpec extends SparkSpec {
     }.toDF("blk_tok", "blk_brand", "p_partkey", "p_name")
     // sub-block ids land in [0, ceil(400/cap))
     val nsplit = (400 + cap - 1) / cap
-    val subs = EntityResolution.subBlockedNames(p, cap)
+    val subs = EntityResolution.subBlocked(p, cap)
       .select("sub").distinct().collect().map(_.getLong(0))
     assert(subs.forall(s => s >= 0 && s < nsplit))
     assert(subs.length > 1, "an oversized block must actually split")
-    val capped = EntityResolution.candidateNamePairs(p, cap).count()
+    val capped = SimJoin.candidates(EntityResolution.subBlocked(p, cap),
+      EntityResolution.Keys).count()
     val uncapped = 400L * 400L
     // hash imbalance allowance: 2 × the ideal n·cap linear bound
     assert(capped <= 2L * 400L * cap, s"candidates $capped exceed linear bound")
     assert(capped < uncapped / 4, s"candidates $capped not meaningfully capped")
     // a block at the cap is untouched: all pairs survive (sub == 0 for all)
-    val small = EntityResolution.candidateNamePairs(p.limit(cap), cap).count()
+    val small = SimJoin.candidates(EntityResolution.subBlocked(p.limit(cap), cap),
+      EntityResolution.Keys).count()
     assert(small === cap.toLong * cap)
+  }
+
+  test("sub-blocks are per block: a pair split in one block links nothing there") {
+    import spark.implicits._
+    val cap = EntityResolution.MaxBlockNames
+    def sub(name: String, nsub: Int): Long =
+      Math.floorMod(graft.text.Md5P61.base(name), nsub.toLong)
+    // x/y: a near-duplicate pair whose md5 sub-block ids agree mod 2 and
+    // differ mod 3 — together in a block split 2 ways, apart in one split
+    // 3 ways (the pair set is keyed by names only, so only the sub-block
+    // key of the join-back keeps the second block from linking them)
+    val (x, y) = Iterator.from(0)
+      .map(i => (f"zqxjvm$i%03d widget", f"zqxjvm$i%03dk widget"))
+      .find { case (a, b) =>
+        jw(a, b) >= 0.95 && sub(a, 2) == sub(b, 2) && sub(a, 3) != sub(b, 3) }
+      .get
+    val fillers = skewStems.map(s => s"$s widget")
+    for (f <- fillers.take(250); n <- Seq(x, y))
+      assert(jw(f, n) < 0.95, s"filler $f unexpectedly matches $n")
+    // Brand#1: 100 distinct names -> 2 sub-blocks; Brand#2: 150 -> 3
+    val b1 = (x +: y +: fillers.take(98)).zipWithIndex
+      .map { case (n, i) => (i + 1L, n, "Brand#1") }
+    val b2 = (x +: y +: fillers.slice(100, 248)).zipWithIndex
+      .map { case (n, i) => (i + 1001L, n, "Brand#2") }
+    val p = SimJoin.partRecords((b1 ++ b2).toDF("p_partkey", "p_name", "p_brand"))
+    val nsub = EntityResolution.subBlocked(p, cap)
+      .groupBy("blk_brand").agg(org.apache.spark.sql.functions.max("sub"))
+      .as[(String, Long)].collect().toMap
+    assert(nsub === Map("Brand#1" -> 1L, "Brand#2" -> 2L))
+    val edges = EntityResolution.edges(p, minSim = 0.95, cap)
+      .as[(Long, Long)].collect().toSet
+    assert(edges === Set((1L, 2L)))
   }
 }

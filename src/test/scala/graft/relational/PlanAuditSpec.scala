@@ -1,6 +1,14 @@
 package graft.relational
 
 import graft.SparkSpec
+import graft.plans.SimJoin
+import org.apache.spark.sql.catalyst.expressions.{Expression, Levenshtein}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 
 /** Regression net over the whole registry's PHYSICAL plans: correctness
   * tests can't catch a plan that silently degrades to a cartesian product
@@ -9,7 +17,7 @@ import graft.SparkSpec
   * (1-row bounds frames, query vectors), so only the truly pathological
   * shape is banned.
   */
-class PlanAuditSpec extends SparkSpec {
+class PlanAuditSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   // stream_* run a real streaming query inside the builder (AvailableNow +
   // awaitTermination) — they are executed, not planned, so auditing them
@@ -261,6 +269,60 @@ class PlanAuditSpec extends SparkSpec {
       val pins = "REPARTITION_BY_NUM".r.findAllIn(p).size
       assert(pins >= minPins,
         s"$name carries $pins pinned exchanges (expected >= $minPins):\n$p")
+    }
+  }
+
+  test("name-pair kernels run on distinct name pairs, never per record pair (q105/q150/q157)") {
+    // SimJoin.pairs computes the score above the (name_a, name_b) distinct,
+    // once per distinct pair. Catalyst pushes the threshold below that
+    // distinct into the block self-join's condition, where it filters the
+    // candidates before the distinct's shuffle; no other operator — in
+    // particular none at or above the record join-back — evaluates it.
+    val part = graft.Tables.part(spark, "/root/testdata/sf0.001")
+    def isKernel(e: Expression): Boolean = e match {
+      case _: Levenshtein | _: graft.text.JaroWinkler.JaroWinklerSim => true
+      case _ => false
+    }
+    def subtree(p: SparkPlan): Seq[SparkPlan] = p +: allChildren(p).flatMap(subtree)
+    // (row, plan, operators that compute the score above the distinct:
+    // q157 keeps only the edges, so Catalyst prunes its unused score)
+    val rows = Seq(
+      ("q105", FuzzyJoin.blockedFuzzyPairs(part, maxDist = 3), 1),
+      ("q150", FuzzyJoin.jaroWinklerPairs(part, minSim = 0.95), 1),
+      ("q157", EntityResolution.edges(SimJoin.partRecords(part), minSim = 0.95,
+        EntityResolution.MaxBlockNames), 0))
+    rows.foreach { case (name, df, scoreOps) =>
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      val ops = subtree(plan)
+      val pairDistinct = ops.collect { case a: HashAggregateExec
+        if a.groupingExpressions.map(_.name) == Seq("name_a", "name_b") => a }
+      assert(pairDistinct.nonEmpty, s"$name plans no (name_a, name_b) distinct:\n$plan")
+      def over(op: SparkPlan, below: Seq[SparkPlan]) =
+        subtree(op).exists(d => below.exists(_ eq d))
+      val kernelOps = ops.filter(_.expressions.exists(_.exists(isKernel)))
+      assert(kernelOps.nonEmpty, s"$name: no operator evaluates the kernel:\n$plan")
+      // 1. the score: once per distinct pair, in one operator at or above
+      // the distinct
+      val above = kernelOps.filter(over(_, pairDistinct))
+      assert(above.size === scoreOps, s"$name evaluates the kernel in ${above.size} " +
+        s"operators above the pair distinct:\n$plan")
+      // 2. none per record pair: no kernel operator sits over a join that
+      // itself sits over the distinct (the join-back)
+      val joinBack = ops.collect { case j: BaseJoinExec if over(j, pairDistinct) => j }
+      assert(joinBack.nonEmpty, s"$name plans no join-back over the pair distinct")
+      assert(!kernelOps.exists(over(_, joinBack)),
+        s"$name evaluates the kernel per record pair:\n$plan")
+      // ... and below the distinct only as the block self-join's threshold
+      kernelOps.filterNot(op => above.exists(_ eq op)).foreach { op =>
+        assert(op.isInstanceOf[BaseJoinExec],
+          s"$name evaluates the kernel below the distinct outside the self-join: $op")
+      }
+      // 3. the distinct-name table's block pin
+      val pins = ops.collect {
+        case ShuffleExchangeExec(h: HashPartitioning, _, REPARTITION_BY_NUM, _)
+          if Set("blk_tok", "blk_brand").subsetOf(h.references.map(_.name).toSet) => h }
+      assert(pins.nonEmpty, s"$name lost the block REPARTITION_BY_NUM pin:\n$plan")
     }
   }
 }

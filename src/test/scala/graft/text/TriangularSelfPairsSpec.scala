@@ -1,17 +1,18 @@
 package graft.text
 
 import graft.SparkSpec
+import graft.plans.SimJoin
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-/** Exact-cover contract of [[TextDedup.triangularSelfPairs]]: for any
+/** Exact-cover contract of [[SimJoin.triangularSelfPairs]]: for any
   * block layout and any bucketSize, the emitted pair set — normalized to
   * unordered (min, max) id pairs per block — must equal the nested-loop
   * reference "every unordered pair of distinct ids within a block",
   * with no pair missing and no pair duplicated. This is the invariant the
-  * q30/q126 dup-pair path (and the inline q80/q129 variants of the same
-  * cover) rely on for oracle parity: the bucketing may only change HOW
+  * q30/q126 dup-pair path, the q80 dominance scan and the q129 prefix
+  * join rely on for oracle parity: the bucketing may only change HOW
   * pairs are distributed over tasks, never WHICH pairs exist.
   */
 class TriangularSelfPairsSpec extends SparkSpec {
@@ -31,7 +32,7 @@ class TriangularSelfPairsSpec extends SparkSpec {
   private def coveredPairs(rows: Seq[(String, Long)],
                            bucketSize: Int): Seq[(String, Long, Long)] = {
     val df = rows.toDF("blk", "id").withColumn("payload", col("id") * 10)
-    val pairs = TextDedup.triangularSelfPairs(
+    val pairs = SimJoin.triangularSelfPairs(
       df, Seq("blk"), "id", Seq("payload"), bucketSize)
     pairs.select(col("blk"),
         least(col("id_a"), col("id_b")).as("a"),
@@ -69,7 +70,7 @@ class TriangularSelfPairsSpec extends SparkSpec {
   test("payload columns track their own side's id") {
     val rows = (1L to 30L).map(i => ("blk", i))
     val df = rows.toDF("blk", "id").withColumn("payload", col("id") * 10)
-    val pairs = TextDedup.triangularSelfPairs(
+    val pairs = SimJoin.triangularSelfPairs(
       df, Seq("blk"), "id", Seq("payload"), bucketSize = 4)
     pairs.collect().foreach { r =>
       assert(r.getAs[Long]("payload_a") === r.getAs[Long]("id_a") * 10)
@@ -82,7 +83,7 @@ class TriangularSelfPairsSpec extends SparkSpec {
     val df = rows.toDF("blk", "id").withColumn("payload", col("id"))
     // observable contract: the cover is exact even when g > 1 for one
     // block and g == 1 for another in the same frame
-    val got = TextDedup.triangularSelfPairs(
+    val got = SimJoin.triangularSelfPairs(
         df, Seq("blk"), "id", Seq("payload"), bucketSize = 100)
       .select(col("blk"), least(col("id_a"), col("id_b")),
         greatest(col("id_a"), col("id_b")))
