@@ -92,11 +92,10 @@ object SimJoin {
       .drop("__i", "__j")
   }
 
-  /** The record-linkage block over `part`: (last name token, brand), as
-    * the `keys ++ (id, name)` records [[pairs]] takes.
-    */
+  /** The record-linkage block keys over `part`: (last name token, brand). */
   val PartKeys: Seq[String] = Seq("blk_tok", "blk_brand")
 
+  /** `part` as the `PartKeys ++ (p_partkey, p_name)` records [[pairs]] takes. */
   def partRecords(part: DataFrame): DataFrame = part.select(
     element_at(split(col("p_name"), " "), -1).as("blk_tok"),
     col("p_brand").as("blk_brand"),
