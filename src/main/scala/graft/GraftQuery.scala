@@ -36,26 +36,6 @@ final case class StagedOracle(
     sql: String)
 
 object StagedOracle {
-  /** Fingerprint of the source fixture (relative path + size + mtime of
-    * every file under `sfDir`), so a staged table can be tied to the exact
-    * fixture it was derived from. mtime-sensitivity is intentional: a
-    * regenerated fixture with identical bytes still invalidates the stage
-    * (conservative rewrite beats a silently stale signature table).
-    */
-  def fingerprint(sfDir: String): String = {
-    def walk(f: java.io.File): Seq[java.io.File] = {
-      val kids = Option(f.listFiles()).map(_.sortBy(_.getName).toSeq).getOrElse(Nil)
-      if (f.isDirectory) kids.flatMap(walk) else Seq(f)
-    }
-    val base = new java.io.File(sfDir)
-    val parts = walk(base).map { f =>
-      s"${f.getAbsolutePath.stripPrefix(base.getAbsolutePath)}:${f.length}:${f.lastModified}"
-    }
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(parts.mkString("\n").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-  }
-
   /** True iff `dest` holds a COMPLETE stage write derived from the CURRENT
     * fixture: Spark's `_SUCCESS` commit marker must be present (an
     * interrupted write leaves a partial table that bare `exists()` would
@@ -66,7 +46,8 @@ object StagedOracle {
   def isFresh(dest: java.io.File, sfDir: String): Boolean = {
     val fp = new java.io.File(dest, "_GRAFT_FINGERPRINT")
     new java.io.File(dest, "_SUCCESS").exists() && fp.exists() &&
-      new String(java.nio.file.Files.readAllBytes(fp.toPath), "UTF-8") == fingerprint(sfDir)
+      new String(java.nio.file.Files.readAllBytes(fp.toPath), "UTF-8") ==
+        Tables.corpusFingerprint(sfDir)
   }
 
   /** Record the fixture fingerprint after a successful stage write. The
@@ -76,7 +57,7 @@ object StagedOracle {
   def markComplete(dest: java.io.File, sfDir: String): Unit =
     java.nio.file.Files.write(
       new java.io.File(dest, "_GRAFT_FINGERPRINT").toPath,
-      fingerprint(sfDir).getBytes("UTF-8"))
+      Tables.corpusFingerprint(sfDir).getBytes("UTF-8"))
 }
 
 object GraftQuery {

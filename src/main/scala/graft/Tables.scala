@@ -9,14 +9,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * downstream only sees a DataFrame, so the swap is transparent.
   */
 object Tables {
-  val all: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
-  /** Content fingerprint of the files backing a corpus artifact (IVF
-    * index, BPE merge table, …), so anything persisted per-corpus is
+  /** Content fingerprint of the files under `path` (a file, a table
+    * directory or a whole scale-factor directory), so anything persisted
+    * per-corpus — IVF index, BPE merge table, staged oracle tables — is
     * rebuilt whenever the corpus changes (path, file set, sizes, or
-    * mtimes). Listing metadata only — never reads the data.
+    * mtimes). mtime-sensitivity is intentional: a regenerated fixture
+    * with identical bytes still invalidates (a conservative rebuild beats
+    * a silently stale artifact). Listing metadata only — never reads the
+    * data.
     */
   def corpusFingerprint(path: String): String = {
     val root = new java.io.File(path)

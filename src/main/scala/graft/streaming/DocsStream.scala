@@ -111,21 +111,6 @@ object DocsStream {
       }
   }
 
-  private val staged =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, org.apache.spark.sql.types.StructType)]()
-
-  private def stagedDocStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val (dir, schema) = staged.computeIfAbsent(sfDir, { _ =>
-      val src = java.nio.file.Paths.get(s"$sfDir/documents.parquet")
-      val d = java.nio.file.Paths.get(EventsStream.stagingDir(
-        spark, "docs_stream", EventsStream.parquetSize(src)))
-      EventsStream.stageParquet(src, d)
-      (d.toString, spark.read.parquet(d.toString).schema)
-    })
-    // soak-mode micro-batch slicing — see EventsStream.withMaxFiles
-    EventsStream.withMaxFiles(spark.readStream.schema(schema)).parquet(dir)
-  }
-
   /** Run the dedup as a real streaming query (update mode, AvailableNow)
     * and reduce the update log to final state: per hash the last update
     * holds the overall min, and min over the log equals it.
@@ -140,31 +125,23 @@ object DocsStream {
     * the hash's state was evicted and re-admitted in between — so the
     * same batch oracle stays exact under any eviction schedule.
     */
-  def runDocDedupStream(spark: SparkSession, sfDir: String): DataFrame =
-    EventsStream.withStreamPartitions(spark,
-        EventsStream.streamPartitionsFor(s"$sfDir/documents.parquet")) {
-      import spark.implicits._
-      val name = s"stream_dedup_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val src = stagedDocStream(spark, sfDir)
-          // null text has no content hash, null doc_id can't be kept —
-          // drop at the source columns (ingest validation; filtering the
-          // computed hash would evaluate md5 twice per row)
-          .filter(col("text").isNotNull && col("doc_id").isNotNull)
-          .select(md5(col("text")).as("h"), col("doc_id")).as[(String, Long)]
-      val deduped = sys.env.get("SPARK_GRAFT_DEDUP_TTL_MS")
+  def runDocDedupStream(spark: SparkSession, sfDir: String): DataFrame = {
+    import spark.implicits._
+    StreamRun.toTable(spark, sfDir, "documents", "stream_dedup", "update") { docs =>
+      val src = docs
+        // null text has no content hash, null doc_id can't be kept —
+        // drop at the source columns (ingest validation; filtering the
+        // computed hash would evaluate md5 twice per row)
+        .filter(col("text").isNotNull && col("doc_id").isNotNull)
+        .select(md5(col("text")).as("h"), col("doc_id")).as[(String, Long)]
+      sys.env.get("SPARK_GRAFT_DEDUP_TTL_MS")
         .map(_.toLong).fold(dedupFirstSeen(src))(dedupFirstSeenTtl(src, _))
-      val q = deduped
         .toDF("content_hash", "keep_doc_id")
-        .writeStream.outputMode("update").format("memory").queryName(name)
-        .option("checkpointLocation", EventsStream.stagingDir(spark, name))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(name)
-        .groupBy(col("content_hash"))
-        .agg(min(col("keep_doc_id")).as("keep_doc_id"))
-        .orderBy(col("content_hash"))
     }
+      .groupBy(col("content_hash"))
+      .agg(min(col("keep_doc_id")).as("keep_doc_id"))
+      .orderBy(col("content_hash"))
+  }
 
   val qDocDedup = GraftQuery(
     "stream_doc_dedup",
@@ -179,27 +156,19 @@ object DocsStream {
     * update log to the final top-k: per token the count only grows, so
     * max-over-updates IS the final state.
     */
-  def runTokenTopKStream(spark: SparkSession, sfDir: String, k: Int): DataFrame =
-    EventsStream.withStreamPartitions(spark,
-        EventsStream.streamPartitionsFor(s"$sfDir/documents.parquet")) {
-      import spark.implicits._
-      val name = s"stream_topk_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val q = tokenCounts(
-        stagedDocStream(spark, sfDir)
-          .select(explode(graft.text.TextAnalysis.tokens(col("text"))).as("tok"))
-          .as[String])
+  def runTokenTopKStream(spark: SparkSession, sfDir: String, k: Int): DataFrame = {
+    import spark.implicits._
+    StreamRun.toTable(spark, sfDir, "documents", "stream_topk", "update") { docs =>
+      tokenCounts(docs
+        .select(explode(graft.text.TextAnalysis.tokens(col("text"))).as("tok"))
+        .as[String])
         .toDF("token", "cnt")
-        .writeStream.outputMode("update").format("memory").queryName(name)
-        .option("checkpointLocation", EventsStream.stagingDir(spark, name))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(name)
-        .groupBy(col("token"))
-        .agg(max(col("cnt")).as("cnt"))
-        .orderBy(col("cnt").desc, col("token"))
-        .limit(k)
     }
+      .groupBy(col("token"))
+      .agg(max(col("cnt")).as("cnt"))
+      .orderBy(col("cnt").desc, col("token"))
+      .limit(k)
+  }
 
   val qTokenTopK = GraftQuery(
     "stream_token_topk",
@@ -216,29 +185,21 @@ object DocsStream {
     * only grows, so max-over-updates per source IS the final state.
     */
   def runSourceCardsStream(spark: SparkSession, sfDir: String,
-                           shortLen: Long): DataFrame =
-    EventsStream.withStreamPartitions(spark,
-        EventsStream.streamPartitionsFor(s"$sfDir/documents.parquet")) {
-      import spark.implicits._
-      val name = s"stream_cards_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val q = sourceCards(
-        stagedDocStream(spark, sfDir)
-          .select(col("source"), col("n_chars"))
-          // a null n_chars (null text) can't decode into the primitive
-          // count — drop at the boundary; a null source still cards
-          .na.drop(Seq("n_chars")).as[(String, Long)], shortLen)
+                           shortLen: Long): DataFrame = {
+    import spark.implicits._
+    StreamRun.toTable(spark, sfDir, "documents", "stream_cards", "update") { docs =>
+      sourceCards(docs
+        .select(col("source"), col("n_chars"))
+        // a null n_chars (null text) can't decode into the primitive
+        // count — drop at the boundary; a null source still cards
+        .na.drop(Seq("n_chars")).as[(String, Long)], shortLen)
         .toDF("source", "n_docs", "n_chars", "n_short")
-        .writeStream.outputMode("update").format("memory").queryName(name)
-        .option("checkpointLocation", EventsStream.stagingDir(spark, name))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(name)
-        .groupBy(col("source"))
-        .agg(max(col("n_docs")).as("n_docs"), max(col("n_chars")).as("n_chars"),
-          max(col("n_short")).as("n_short"))
-        .orderBy(col("source"))
     }
+      .groupBy(col("source"))
+      .agg(max(col("n_docs")).as("n_docs"), max(col("n_chars")).as("n_chars"),
+        max(col("n_short")).as("n_short"))
+      .orderBy(col("source"))
+  }
 
   val qSourceCards = GraftQuery(
     "stream_source_cards",
@@ -286,39 +247,31 @@ object DocsStream {
   /** Run the gate as a real streaming query; counters are monotone, so
     * max over the update log per source is the final state.
     */
-  def runQualityGateStream(spark: SparkSession, sfDir: String): DataFrame =
-    EventsStream.withStreamPartitions(spark,
-        EventsStream.streamPartitionsFor(s"$sfDir/documents.parquet")) {
-      import spark.implicits._
-      val name = s"stream_gate_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+  def runQualityGateStream(spark: SparkSession, sfDir: String): DataFrame = {
+    import spark.implicits._
+    StreamRun.toTable(spark, sfDir, "documents", "stream_gate", "update") { docs =>
       // null text yields null counts/flags, which can't decode into the
       // primitive fields — drop at the SOURCE column (ingest validation):
       // filtering the computed flags instead would re-evaluate the whole
       // text-analysis expression stack once for the filter and once for
       // the projection (measured +1 s on this row)
-      val flagged = graft.text.FilterCascade.stageFlags(
-        stagedDocStream(spark, sfDir).filter(col("text").isNotNull))
+      val flagged = graft.text.FilterCascade.stageFlags(docs.filter(col("text").isNotNull))
         .select(col("source"), col("n_tok"),
           col("p1"), col("p2"), col("p3"), col("p4"))
         .as[(String, Long, Boolean, Boolean, Boolean, Boolean)]
-      val q = qualityGate(flagged)
+      qualityGate(flagged)
         .toDF("source", "n_total", "s1_nonblank", "s2_length",
           "s3_quality", "s4_lang", "tok_s4")
-        .writeStream.outputMode("update").format("memory").queryName(name)
-        .option("checkpointLocation", EventsStream.stagingDir(spark, name))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(name)
-        .groupBy(col("source"))
-        .agg(max(col("n_total")).as("n_total"),
-          max(col("s1_nonblank")).as("s1_nonblank"),
-          max(col("s2_length")).as("s2_length"),
-          max(col("s3_quality")).as("s3_quality"),
-          max(col("s4_lang")).as("s4_lang"),
-          max(col("tok_s4")).as("tok_s4"))
-        .orderBy(col("source"))
     }
+      .groupBy(col("source"))
+      .agg(max(col("n_total")).as("n_total"),
+        max(col("s1_nonblank")).as("s1_nonblank"),
+        max(col("s2_length")).as("s2_length"),
+        max(col("s3_quality")).as("s3_quality"),
+        max(col("s4_lang")).as("s4_lang"),
+        max(col("tok_s4")).as("tok_s4"))
+      .orderBy(col("source"))
+  }
 
   val qQualityGate = GraftQuery(
     "stream_quality_gate",

@@ -1,10 +1,8 @@
 package graft.streaming
 
-import scala.collection.immutable.ListMap
-
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 /** Streaming analytics over the events stream: watermarked windowed
   * aggregation (T6) and stateful latest-per-key (T7) — the streaming duals
@@ -13,6 +11,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 object EventsStream {
 
   import graft.GraftQuery
+  // every stream row reads `ts` through the batch loaders' rule
+  // (nanos-as-long or NTZ → LTZ micros)
+  import graft.Tables.normalizeTs
 
   /** Streaming duals of q18/q06, run as real streaming queries and checked
     * against the SAME DuckDB oracles — the streaming path must compute the
@@ -125,296 +126,37 @@ object EventsStream {
     * at 100 TB/day the state store holds only open windows.
     */
   def hourlyAgg(events: DataFrame, watermark: String = "1 hour"): DataFrame =
+    hourly(events.withWatermark("ts", watermark))
+
+  /** Hourly tumbling-window counts and exact (DECIMAL) value sums. */
+  private def hourly(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", watermark)
       .groupBy(window(col("ts"), "1 hour"))
       .agg(
         count(lit(1)).as("n"),
         sum(col("value").cast("decimal(18,2)")).cast("double").as("total_value"))
       .select(col("window.start").as("hour_start"), col("n"), col("total_value"))
 
-  /** Stage the events parquet into a directory (streaming file sources
-    * require directories) and return a micro-batch stream of it with the
-    * `ts` normalization applied (nanos-as-long or NTZ → LTZ micros, the
-    * [[graft.Tables.normalizeTs]] rule). The staged copy + inferred schema
-    * are memoized per source dir — the copy and footer read are setup, not
-    * part of any streaming operator's work.
-    */
-  private val staged =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, org.apache.spark.sql.types.StructType)]()
-
-  /** Parquet payload bytes at `src` — a single file, or the part-file sum
-    * when the source is a Spark-written directory (e.g. ScaleUp output).
-    */
-  private[streaming] def parquetSize(src: java.nio.file.Path): Long = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.isDirectory(src)) {
-      // Files.list holds a directory handle until closed
-      val s = java.nio.file.Files.list(src)
-      try s.iterator().asScala
-        .filter(_.toString.endsWith(".parquet"))
-        .map(java.nio.file.Files.size).sum
-      finally s.close()
-    } else java.nio.file.Files.size(src)
-  }
-
-  /** Copy `src` into `destDir`: flat part-file copy for a directory
-    * source, plain copy for a single file. Both testdata layouts (driver
-    * single-file fixtures, Spark-written directories) must stage — a bare
-    * Files.copy of a directory creates an EMPTY dir and every stream
-    * query on that corpus dies at schema inference.
-    */
-  private[streaming] def stageParquet(src: java.nio.file.Path,
-                                      destDir: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.isDirectory(src)) {
-      val s = java.nio.file.Files.list(src)
-      try s.iterator().asScala
-        .filter(_.toString.endsWith(".parquet")).toSeq
-        .foreach(p => java.nio.file.Files.copy(p, destDir.resolve(p.getFileName)))
-      finally s.close()
-    } else java.nio.file.Files.copy(src, destDir.resolve(src.getFileName))
-  }
-
-  def stagedEventStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val (dir, schema) = staged.computeIfAbsent(sfDir, { _ =>
-      val src = java.nio.file.Paths.get(s"$sfDir/events.parquet")
-      val d = java.nio.file.Paths.get(
-        stagingDir(spark, "events_stream", parquetSize(src)))
-      if (sys.env.contains("SPARK_GRAFT_STREAM_MAX_FILES"))
-        stageTimeBucketed(spark, src, d)
-      else stageParquet(src, d)
-      (d.toString, spark.read.parquet(d.toString).schema)
-    })
-    graft.Tables.normalizeTs(
-      withMaxFiles(spark.readStream.schema(schema))
-        .parquet(dir))
-  }
-
-  /** Soak-mode staging: multi-batch file consumption must deliver
-    * event-time-ordered micro-batches — the arrival order a production
-    * file feed provides — or watermark semantics CORRECTLY drop later
-    * batches' rows as late (the r17 soak caught exactly this:
-    * stream_purchase_view_join lost ~80% of its matches when every
-    * staged part file spanned the whole time range, so batch 1's
-    * watermark aged out batches 2..10 — right per the watermark
-    * contract, wrong as a delivery model). Range-partition the source by
-    * raw event time into ascending buckets and pin strictly increasing
-    * mtimes, so FileStreamSource's (mtime, path) order IS time order;
-    * every windowed/stateful operator is insensitive to the re-layout.
-    */
-  private def stageTimeBucketed(spark: SparkSession, src: java.nio.file.Path,
-                                destDir: java.nio.file.Path): Unit = {
-    import org.apache.spark.sql.functions.col
-    spark.read.parquet(src.toString)
-      .repartitionByRange(100, col("ts"))
-      .write.mode("overwrite").parquet(destDir.toString)
-    val s = java.nio.file.Files.list(destDir)
-    try {
-      val files = {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.filter(_.toString.endsWith(".parquet"))
-          .toSeq.sortBy(_.getFileName.toString)
-      }
-      val base = System.currentTimeMillis() - files.size * 1000L
-      files.zipWithIndex.foreach { case (p, i) =>
-        java.nio.file.Files.setLastModifiedTime(p,
-          java.nio.file.attribute.FileTime.fromMillis(base + i * 1000L))
-      }
-    } finally s.close()
-  }
-
-  /** Micro-batch slicing for soak runs (VERDICT r16 item 3): the file
-    * source admits at most SPARK_GRAFT_STREAM_MAX_FILES files per
-    * micro-batch, so setting 10 against the 100-part sf10 staging dirs
-    * turns every one-shot AvailableNow gate into a ≥10-micro-batch soak
-    * of the SAME query against the SAME batch oracle — the oracles are
-    * composition-independent by design (dedup keeps a min, windows
-    * re-aggregate, latest-per-key keeps a max), so the final table must
-    * hash-match whatever the batch slicing. Unset = the historical
-    * single-batch gate behavior.
-    */
-  private[streaming] def withMaxFiles(
-      r: org.apache.spark.sql.streaming.DataStreamReader):
-      org.apache.spark.sql.streaming.DataStreamReader =
-    sys.env.get("SPARK_GRAFT_STREAM_MAX_FILES")
-      .fold(r)(v => r.option("maxFilesPerTrigger", v))
-
-  /** Per-batch state-store telemetry for the soak (VERDICT r16 item 3):
-    * when SPARK_GRAFT_STREAM_METRICS names a file, every micro-batch
-    * appends one JSON line — input rows, batch wall, and each stateful
-    * operator's rows/memory/commit time — the evidence for the SCALE.md
-    * state-growth table. Registered once per JVM; a no-op otherwise.
-    */
-  private val metricsRegistered = new java.util.concurrent.atomic.AtomicBoolean(false)
-  private[streaming] def registerMetricsListener(spark: SparkSession): Unit =
-    sys.env.get("SPARK_GRAFT_STREAM_METRICS").foreach { path =>
-      if (metricsRegistered.compareAndSet(false, true)) {
-        spark.streams.addListener(
-          new org.apache.spark.sql.streaming.StreamingQueryListener {
-            import org.apache.spark.sql.streaming.StreamingQueryListener._
-            override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-            override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-            override def onQueryProgress(e: QueryProgressEvent): Unit = {
-              val p = e.progress
-              val states = p.stateOperators.toSeq.map { s =>
-                ListMap("operator" -> s.operatorName, "numRowsTotal" -> s.numRowsTotal,
-                  "numRowsUpdated" -> s.numRowsUpdated, "numRowsRemoved" -> s.numRowsRemoved,
-                  "memoryUsedBytes" -> s.memoryUsedBytes, "commitTimeMs" -> s.commitTimeMs)
-              }
-              val line = graft.Json.write(ListMap(
-                "query" -> Option(p.name).getOrElse(p.id.toString),
-                "batchId" -> p.batchId, "numInputRows" -> p.numInputRows,
-                "batchDurationMs" -> p.batchDuration, "stateOperators" -> states)) + "\n"
-              EventsStream.this.synchronized {
-                java.nio.file.Files.write(java.nio.file.Paths.get(path),
-                  line.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-                  java.nio.file.StandardOpenOption.CREATE,
-                  java.nio.file.StandardOpenOption.APPEND)
-              }
-            }
-          })
-      }
-    }
-
-  /** Stateful-operator parallelism for the AvailableNow stream runs: the
-    * shuffle-partition count at query start fixes the number of
-    * state-store instances. On fixture-scale state, 32 instances of
-    * init/commit overhead dominate a one-batch run whose whole state fits
-    * in a handful, and 4 measured best; at volume that layout serializes —
-    * the r16 StageProfile of stream_session_window at sf10 showed its
-    * stateful stage as 4 tasks of ~28.5 s each (114 s of task time behind
-    * a 4-way bottleneck, over half the row's wall). So the instance count
-    * scales with the source's parquet bytes (~1 instance per 8 MB),
-    * clamped to [4, 32], the same sizing rule a cluster job applies per
-    * state volume. Layout only — session identity is event-time-derived,
-    * so results are partition-count independent (the sf10 streaming gate
-    * runs green at any setting).
-    */
-  private[streaming] def streamPartitionsFor(srcParquet: String): Int = {
-    val bytes = scala.util.Try(
-      parquetSize(java.nio.file.Paths.get(srcParquet))).getOrElse(0L)
-    math.min(32, math.max(4, (bytes / (8L << 20)).toInt))
-  }
-
-  private[streaming] def withStreamPartitions[T](spark: SparkSession, n: Int,
-      noDataBatches: Boolean = false)(f: => T): T = {
-    registerMetricsListener(spark) // no-op unless SPARK_GRAFT_STREAM_METRICS
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevNoData = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val changelogKey = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prevProvider = spark.conf.getOption(providerKey)
-    val prevChangelog = spark.conf.getOption(changelogKey)
-    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
-    // The watermark-advancing no-data batch costs a full state
-    // load/evict/commit cycle (~0.7 s here) and emits nothing for most of
-    // these sinks: hourly is COMPLETE mode (every batch emits all
-    // windows), latest is UPDATE mode, and the join is INNER (matches
-    // emit on arrival, never on watermark). APPEND-mode aggregations are
-    // the exception — they emit ON watermark passage, so the final
-    // watermark's no-data batch is what flushes the last closed windows
-    // (without it the append session run emits NOTHING on a one-batch
-    // AvailableNow source) — those runs pass noDataBatches=true.
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-      noDataBatches.toString)
-    // SPARK_GRAFT_STATESTORE=rocksdb: run with the PRODUCTION state-store
-    // stack — RocksDB provider + changelog checkpointing (per-batch delta
-    // upload instead of full SST snapshot). Default stays the HDFS-backed
-    // in-memory provider: for these one-batch AvailableNow gate runs the
-    // whole state lives and dies in one JVM, where RocksDB's native
-    // write path is pure overhead (A/B at sf10 in SCALE.md r16); on a
-    // long-running cluster job state outgrows the heap and rocksdb is
-    // the right default. Results are provider-independent either way —
-    // CORRECTNESS_sf10 runs green under both.
-    if (sys.env.get("SPARK_GRAFT_STATESTORE").contains("rocksdb")) {
-      spark.conf.set(providerKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      spark.conf.set(changelogKey, "true")
-    }
-    try f finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-      prevProvider.fold(spark.conf.unset(providerKey))(spark.conf.set(providerKey, _))
-      prevChangelog.fold(spark.conf.unset(changelogKey))(spark.conf.set(changelogKey, _))
-    }
-  }
-
-  /** Staging directories (checkpoints, staged sources) made by
-    * [[stagingDir]], deleted at JVM exit.
-    */
-  private val stagingDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-  locally {
-    // deleteOnExit can't remove non-empty directories — a shutdown hook
-    // deletes the trees recursively, or checkpoint/state files would leak
-    // across runs
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      stagingDirs.forEach { d =>
-        try {
-          import java.nio.file.{Files, Path}
-          import java.util.Comparator
-          Files.walk(d).sorted(Comparator.reverseOrder[Path]())
-            .forEach(p => { try Files.deleteIfExists(p) catch { case _: Exception => () } })
-        } catch { case _: Exception => () }
-      }
-    }))
-  }
-
-  /** Spark's configured local dir, where stream runs stage their source
-    * copies and checkpoints: the first entry of `SPARK_LOCAL_DIRS`, else
-    * `spark.local.dir`, else `java.io.tmpdir` — the order Spark itself
-    * resolves its scratch space in, so the streams write where the
-    * deployment put Spark's storage.
-    */
-  private[streaming] def stagingRoot(env: Map[String, String],
-                                     conf: org.apache.spark.SparkConf): String = {
-    def first(dirs: String) = dirs.split(",").map(_.trim).find(_.nonEmpty)
-    env.get("SPARK_LOCAL_DIRS").flatMap(first)
-      .orElse(conf.getOption("spark.local.dir").flatMap(first))
-      .getOrElse(System.getProperty("java.io.tmpdir"))
-  }
-
-  /** A fresh temp directory under [[stagingRoot]], deleted at JVM exit.
-    * `needBytes` is the caller's size estimate (staged file size, expected
-    * checkpoint volume); the root is only used when it has 2x that
-    * headroom, so a large SF can never fill it — it degrades to
-    * java.io.tmpdir instead.
-    */
-  private[streaming] def stagingDir(spark: SparkSession, prefix: String,
-                                    needBytes: Long = 64L << 20): String = {
-    val root = java.nio.file.Paths.get(stagingRoot(sys.env, spark.sparkContext.getConf))
-    val usable = scala.util.Try {
-      java.nio.file.Files.createDirectories(root)
-      java.nio.file.Files.getFileStore(root).getUsableSpace
-    }.getOrElse(0L)
-    val d =
-      if (java.nio.file.Files.isWritable(root) && usable >= needBytes * 2)
-        java.nio.file.Files.createTempDirectory(root, prefix)
-      else java.nio.file.Files.createTempDirectory(prefix)
-    stagingDirs.add(d)
-    d.toString
-  }
+  /** 30-minute-gap session windows: per-user event count and exact value sum. */
+  private def sessions(events: DataFrame): DataFrame =
+    events
+      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
+      .agg(
+        count(lit(1)).as("n_events"),
+        sum(col("value").cast("decimal(18,2)")).cast("double").as("session_value"))
+      .select(col("user_id"),
+        col("session_window.start").as("session_start"),
+        col("session_window.end").as("session_end"),
+        col("n_events"), col("session_value"))
 
   /** Run the hourly aggregation as a real streaming query (complete mode,
     * AvailableNow) and return the final result — oracle-identical to the
     * batch q18, proving the streaming path computes the same answer.
     */
   def runHourlyWindowStream(spark: SparkSession, sfDir: String): DataFrame =
-    withStreamPartitions(spark, streamPartitionsFor(s"$sfDir/events.parquet")) {
-    val name = s"stream_hourly_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = stagedEventStream(spark, sfDir)
-      .groupBy(window(col("ts"), "1 hour"))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("total_value"))
-      .select(col("window.start").as("hour_start"), col("n"), col("total_value"))
-      .writeStream.outputMode("complete").format("memory").queryName(name)
-      .option("checkpointLocation", stagingDir(spark, name))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name).orderBy(col("hour_start"))
-  }
+    StreamRun.toTable(spark, sfDir, "events", "stream_hourly", "complete")(
+      ev => hourly(normalizeTs(ev)))
+      .orderBy(col("hour_start"))
 
   /** Run 30-minute-gap session windows as a real streaming query
     * (complete mode: merging session state emits its final merged form
@@ -424,24 +166,9 @@ object EventsStream {
     * here is what makes the one-shot run oracle-comparable.
     */
   def runSessionWindowStream(spark: SparkSession, sfDir: String): DataFrame =
-    withStreamPartitions(spark, streamPartitionsFor(s"$sfDir/events.parquet")) {
-      val name = s"stream_session_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val q = stagedEventStream(spark, sfDir)
-        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-        .agg(
-          count(lit(1)).as("n_events"),
-          sum(col("value").cast("decimal(18,2)")).cast("double").as("session_value"))
-        .select(col("user_id"),
-          col("session_window.start").as("session_start"),
-          col("session_window.end").as("session_end"),
-          col("n_events"), col("session_value"))
-        .writeStream.outputMode("complete").format("memory").queryName(name)
-        .option("checkpointLocation", stagingDir(spark, name))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(name).orderBy(col("user_id"), col("session_start"))
-    }
+    StreamRun.toTable(spark, sfDir, "events", "stream_session", "complete")(
+      ev => sessions(normalizeTs(ev)))
+      .orderBy(col("user_id"), col("session_start"))
 
   /** Append-mode session windows with watermarked eviction — the
     * bounded-state production variant (VERDICT r17 item 3). The 30-minute
@@ -456,34 +183,16 @@ object EventsStream {
     * oracle possible for an append-mode stateful stream.
     */
   def runSessionWindowAppendStream(spark: SparkSession, sfDir: String): DataFrame =
-    withStreamPartitions(spark, streamPartitionsFor(s"$sfDir/events.parquet"),
-        noDataBatches = true) {
-      val name = s"stream_session_append_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val q = stagedEventStream(spark, sfDir)
-        .withWatermark("ts", "30 minutes")
-        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-        .agg(
-          count(lit(1)).as("n_events"),
-          sum(col("value").cast("decimal(18,2)")).cast("double").as("session_value"))
-        .select(col("user_id"),
-          col("session_window.start").as("session_start"),
-          col("session_window.end").as("session_end"),
-          col("n_events"), col("session_value"))
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .option("checkpointLocation", stagingDir(spark, name))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(name).orderBy(col("user_id"), col("session_start"))
-    }
+    StreamRun.toTable(spark, sfDir, "events", "stream_session_append", "append",
+        noDataBatches = true)(
+      ev => sessions(normalizeTs(ev).withWatermark("ts", "30 minutes")))
+      .orderBy(col("user_id"), col("session_start"))
 
   /** Run latest-per-user as a stateful streaming query (update mode) and
     * reduce the update log to final state — oracle-identical to batch q06.
     */
-  def runLatestPerUserStream(spark: SparkSession, sfDir: String): DataFrame =
-    withStreamPartitions(spark, streamPartitionsFor(s"$sfDir/events.parquet")) {
+  def runLatestPerUserStream(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val name = s"stream_latest_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     // an event with a null id/user/time/value can't decode into the typed
     // state row — drop at the boundary (the ingest validation rule).
     // isNotNull per column, NOT na.drop: na.drop also treats NaN as
@@ -491,15 +200,11 @@ object EventsStream {
     // legitimate record the batch dual (q06) keeps — the r14 extreme-
     // numerics sweep caught the streaming side silently dropping it and
     // electing an older event as a user's latest.
-    val q = latestPerUser(stagedEventStream(spark, sfDir)
-      .filter(col("event_id").isNotNull && col("ts").isNotNull &&
-        col("user_id").isNotNull && col("value").isNotNull).as[Event])
-      .writeStream.outputMode("update").format("memory").queryName(name)
-      .option("checkpointLocation", stagingDir(spark, name))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    StreamRun.toTable(spark, sfDir, "events", "stream_latest", "update") { ev =>
+      latestPerUser(normalizeTs(ev)
+        .filter(col("event_id").isNotNull && col("ts").isNotNull &&
+          col("user_id").isNotNull && col("value").isNotNull).as[Event]).toDF()
+    }
       .groupBy(col("user_id"))
       .agg(max_by(
         struct(col("event_id"), col("event_type"), col("value"), col("ts")),
@@ -508,7 +213,7 @@ object EventsStream {
         col("w.event_type").as("event_type"), col("w.value").as("value"),
         col("w.ts").as("ts_us"))
       .orderBy(col("user_id"))
-    }
+  }
 
   /** Stream-stream interval join: purchases joined to the same user's
     * views within the preceding hour. Both sides watermarked so the join
@@ -563,16 +268,9 @@ object EventsStream {
     * every emitted match, ordered for a stable dump.
     */
   def runPurchaseViewJoinStream(spark: SparkSession, sfDir: String): DataFrame =
-    withStreamPartitions(spark, streamPartitionsFor(s"$sfDir/events.parquet")) {
-    val name = s"stream_join_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = purchaseViewJoin(stagedEventStream(spark, sfDir))
-      .writeStream.outputMode("append").format("memory").queryName(name)
-      .option("checkpointLocation", stagingDir(spark, name))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name).orderBy(col("purchase_id"), col("view_id"))
-    }
+    StreamRun.toTable(spark, sfDir, "events", "stream_join", "append")(
+      ev => purchaseViewJoin(normalizeTs(ev)))
+      .orderBy(col("purchase_id"), col("view_id"))
 
   /** T7: live latest-per-user via mapGroupsWithState — state is one record
     * per key (bounded by key cardinality, like the reference's

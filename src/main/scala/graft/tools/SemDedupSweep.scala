@@ -10,10 +10,10 @@ import org.apache.spark.sql.functions._
   * DensePairBudget were asserted, not measured). Sweeps k over a
   * CLUSTERED corpus (64 well-separated directions + 5% jitter — the
   * geometry the two-level prune exists for) and a UNIFORM one (the
-  * prune's provable worst case), timing the forced-dense and
-  * forced-pruned plans via the same `graft.semdedup.force` knob the
-  * gates use. Corpora are deterministic hash-generated expressions —
-  * no RNG state, any partitioning produces identical vectors.
+  * prune's provable worst case), timing the dense and the non-adaptive
+  * pruned assignment plans called directly. Corpora are deterministic
+  * hash-generated expressions — no RNG state, any partitioning produces
+  * identical vectors.
   *
   * Usage: scripts/run.sh graft.tools.SemDedupSweep [n=100000] [runs=2]
   *          [corpus=both|clustered|uniform] [kList=64,128,...]
@@ -53,17 +53,12 @@ object SemDedupSweep {
         .localCheckpoint()
     }
 
-    def timeForced(vecs: DataFrame, k: Int, path: String): Double = {
-      System.setProperty("graft.semdedup.force", path)
-      try {
-        val times = (1 to runs).map { _ =>
-          val t0 = System.nanoTime()
-          SemDedup.assign(vecs, k).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        times.min
-      } finally System.clearProperty("graft.semdedup.force")
-    }
+    def timeAssign(assign: => DataFrame): Double =
+      (1 to runs).map { _ =>
+        val t0 = System.nanoTime()
+        assign.write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      }.min
 
     println(f"n=$n dims=$dims runs=$runs (min-of-runs wall, s)")
     println("corpus     k      dense   pruned   pruned/dense")
@@ -75,8 +70,8 @@ object SemDedupSweep {
     for (clustered <- corpora;
          k <- kList) {
       val vecs = corpus(clustered)
-      val d = timeForced(vecs, k, "dense")
-      val p = timeForced(vecs, k, "pruned")
+      val d = timeAssign(SemDedup.assignDense(vecs, k))
+      val p = timeAssign(SemDedup.assignPruned(vecs, k, adaptive = false))
       val name = if (clustered) "clustered" else "uniform"
       println(f"$name%-10s $k%-6d $d%7.2f $p%8.2f ${p / d}%8.2f")
       vecs.unpersist()

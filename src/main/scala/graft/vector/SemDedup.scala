@@ -96,15 +96,6 @@ object SemDedup {
     */
   private[vector] val DensePairBudget = 200000000L
 
-  /** Test/gate override: force "dense" or "pruned" regardless of the
-    * adaptive dispatch (both are the exact argmax — this is a plan
-    * selector, never a semantics knob). The system property serves
-    * in-JVM tests; the env var serves the gate scripts. */
-  private def forcedPath: Option[String] =
-    sys.env.get("SPARK_GRAFT_SEMDEDUP_FORCE")
-      .orElse(sys.props.get("graft.semdedup.force"))
-      .filter(v => v == "dense" || v == "pruned")
-
   /** Safety margin absorbing double/acos rounding in the angular prune —
     * see [[VectorExprs.CandidateCells]]; it only ever ENLARGES candidate
     * sets. */
@@ -155,15 +146,11 @@ object SemDedup {
     // oracle's vecs CTE applies the identical `embedding IS NOT NULL`.
     val vecs = emb.select(col("vec_id"), col("embedding"))
       .filter(col("embedding").isNotNull)
-    forcedPath match {
-      case Some("dense")  => assignDense(vecs, nClusters)
-      case Some("pruned") => assignPruned(vecs, nClusters, adaptive = false)
-      case _ if nClusters <= DenseSeedMax => assignDense(vecs, nClusters)
-      case _ => assignPruned(vecs, nClusters, adaptive = true)
-    }
+    if (nClusters <= DenseSeedMax) assignDense(vecs, nClusters)
+    else assignPruned(vecs, nClusters, adaptive = true)
   }
 
-  private[vector] def assignDense(vecs: DataFrame, nClusters: Int): DataFrame = {
+  private[graft] def assignDense(vecs: DataFrame, nClusters: Int): DataFrame = {
     val seeds = vecs.orderBy(seedKey, col("vec_id")).limit(nClusters)
       .select(col("vec_id").as("seed_id"), col("embedding").as("seed_vec"))
     argmaxSeed(vecs.crossJoin(broadcast(seeds))
@@ -231,9 +218,9 @@ object SemDedup {
     (coarse, radii)
   }
 
-  private[vector] def assignPruned(vecs0: DataFrame, k: Int,
-                                   adaptive: Boolean = false,
-                                   pairBudget: Long = DensePairBudget): DataFrame = {
+  private[graft] def assignPruned(vecs0: DataFrame, k: Int,
+                                  adaptive: Boolean = false,
+                                  pairBudget: Long = DensePairBudget): DataFrame = {
     val spark = vecs0.sparkSession
     import spark.implicits._
     // NOT localCheckpointed despite 4 consumers (count, seed scan,

@@ -72,9 +72,9 @@ class StagedOracleSpec extends AnyFunSuite {
     val sub = new File(fixture, "documents.parquet")
     sub.mkdirs()
     writeFile(sub, "part-00000.parquet", "a")
-    val fp1 = StagedOracle.fingerprint(fixture.getAbsolutePath)
+    val fp1 = Tables.corpusFingerprint(fixture.getAbsolutePath)
     writeFile(sub, "part-00001.parquet", "b")
-    val fp2 = StagedOracle.fingerprint(fixture.getAbsolutePath)
+    val fp2 = Tables.corpusFingerprint(fixture.getAbsolutePath)
     assert(fp1 != fp2)
   }
 }

@@ -64,7 +64,7 @@ class RocksDbStateStoreSpec extends SparkSpec {
         .as[EventsStream.Event]
       val q = EventsStream.latestPerUser(streamed)
         .writeStream.outputMode("update").format("memory").queryName(name)
-        .option("checkpointLocation", EventsStream.stagingDir(spark, name))
+        .option("checkpointLocation", StreamRun.stagingDir(spark, name))
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()

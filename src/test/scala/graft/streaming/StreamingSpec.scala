@@ -383,16 +383,39 @@ class StreamingSpec extends SparkSpec {
 
   test("stream staging and checkpoints go under Spark's configured local dir, not /dev/shm") {
     val conf = new org.apache.spark.SparkConf(false)
-    assert(EventsStream.stagingRoot(Map("SPARK_LOCAL_DIRS" -> " /a/x , /b"),
+    assert(StreamRun.stagingRoot(Map("SPARK_LOCAL_DIRS" -> " /a/x , /b"),
       conf.clone.set("spark.local.dir", "/c")) == "/a/x")
-    assert(EventsStream.stagingRoot(Map.empty, conf.clone.set("spark.local.dir", "/c,/d")) == "/c")
-    assert(EventsStream.stagingRoot(Map.empty, conf) == System.getProperty("java.io.tmpdir"))
+    assert(StreamRun.stagingRoot(Map.empty, conf.clone.set("spark.local.dir", "/c,/d")) == "/c")
+    assert(StreamRun.stagingRoot(Map.empty, conf) == System.getProperty("java.io.tmpdir"))
     val root = java.nio.file.Paths.get(
-      EventsStream.stagingRoot(sys.env, spark.sparkContext.getConf)).toAbsolutePath.normalize
+      StreamRun.stagingRoot(sys.env, spark.sparkContext.getConf)).toAbsolutePath.normalize
     val dir = java.nio.file.Paths.get(
-      EventsStream.stagingDir(spark, "staging_spec")).toAbsolutePath.normalize
+      StreamRun.stagingDir(spark, "staging_spec")).toAbsolutePath.normalize
     assert(Files.isDirectory(dir))
     assert(dir.startsWith(root), s"$dir is not under the local dir $root")
     assert(!dir.startsWith("/dev/shm"), s"$dir is under /dev/shm")
+  }
+
+  test("stream runs restore the session's stream confs on success and on a failed start") {
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.noDataMicroBatches.enabled")
+    val saved = keys.map(spark.conf.get)
+    def current = keys.map(spark.conf.get)
+    try {
+      // values no run here sets: sf0.001's stream rows run at 4 shuffle
+      // partitions, and both runs below turn no-data batches off
+      spark.conf.set(keys(0), "7")
+      spark.conf.set(keys(1), "true")
+      val before = current
+      assert(graft.SparkEntry.queries("stream_hourly_window")(spark, "/root/testdata/sf0.001")
+        .count() > 0)
+      assert(current == before, "a completed stream row leaked its confs")
+      // an append-mode aggregation with no watermark fails at start()
+      intercept[org.apache.spark.sql.AnalysisException] {
+        StreamRun.toTable(spark, "/root/testdata/sf0.001", "events", "conf_scope",
+          "append")(_.groupBy(col("user_id")).count())
+      }
+      assert(current == before, "a stream run that failed at start() leaked its confs")
+    } finally keys.zip(saved).foreach { case (k, v) => spark.conf.set(k, v) }
   }
 }

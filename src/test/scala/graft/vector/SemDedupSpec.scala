@@ -104,14 +104,12 @@ class SemDedupSpec extends SparkSpec {
         .select("vec_id").as[Long].collect().sorted.toSeq
       assert(out == Seq(0L, 1L, 2L, 4L), s"k=$k kept $out")
     }
-    // forced-pruned and forced-dense agree cell-for-cell on the corpus
+    // pruned and dense agree cell-for-cell on the corpus
     val viaDense = collectAssign(
       SemDedup.assignDense(emb.filter(col("embedding").isNotNull), 2))
-    System.setProperty("graft.semdedup.force", "pruned")
-    try {
-      val viaPruned = collectAssign(SemDedup.assign(emb, 2))
-      assert(viaPruned == viaDense)
-    } finally System.clearProperty("graft.semdedup.force")
+    val viaPruned = collectAssign(
+      SemDedup.assignPruned(emb.filter(col("embedding").isNotNull), 2, adaptive = false))
+    assert(viaPruned == viaDense)
   }
 
   test("pruned assignment ≡ dense AND actually prunes on a clustered corpus") {
@@ -150,8 +148,8 @@ class SemDedupSpec extends SparkSpec {
 
   test("pruned path end-to-end: semanticDedup via large k matches dense dedup") {
     // pin the full dedup output — assignment, centroids, dominance —
-    // through the PUBLIC api on BOTH plans: the default dispatch (which
-    // pre-decides dense at this n·k) and the force-pinned pruned path
+    // on BOTH plans: the public api's default dispatch (which pre-decides
+    // dense at this n·k) and the non-adaptive pruned path
     val emb = randomCorpus(400, 8, seed = 11)
     val k = SemDedup.DenseSeedMax + 20
     val viaPublic = SemDedup.semanticDedup(emb, nClusters = k, tau = 0.999)
@@ -159,11 +157,9 @@ class SemDedupSpec extends SparkSpec {
     val viaDense = SemDedup.dedupAssigned(SemDedup.assignDense(emb, k), tau = 0.999)
       .as[(Long, Long, Double, Boolean)].collect().toSeq
     assert(viaPublic == viaDense && viaPublic.size == 400)
-    System.setProperty("graft.semdedup.force", "pruned")
-    try {
-      val viaPruned = SemDedup.semanticDedup(emb, nClusters = k, tau = 0.999)
-        .as[(Long, Long, Double, Boolean)].collect().toSeq
-      assert(viaPruned == viaDense)
-    } finally System.clearProperty("graft.semdedup.force")
+    val viaPruned = SemDedup.dedupAssigned(
+        SemDedup.assignPruned(emb, k, adaptive = false), tau = 0.999)
+      .as[(Long, Long, Double, Boolean)].collect().toSeq
+    assert(viaPruned == viaDense)
   }
 }
