@@ -373,16 +373,10 @@ object Multimodal {
     */
   val qImageDedup = GraftQuery(
     "q71_image_dedup",
-    (s, dir) => {
-      import s.implicits._
-      val d = Tables.documents(s, dir)
-      val planted = d.orderBy(col("doc_id")).limit(20)
-        .select((col("doc_id") + 1000000).as("doc_id"), col("text"))
-      imageDupPairs(
-        assetsFromDocuments(d.select(col("doc_id"), col("text"))
-          .unionByName(planted)))
-        .orderBy(col("asset_a"), col("asset_b"))
-    },
+    (s, dir) =>
+      imageDupPairs(assetsFromDocuments(
+        graft.text.TextDedup.withPlantedTwins(Tables.documents(s, dir))))
+        .orderBy(col("asset_a"), col("asset_b")),
     Some("""
       WITH corpus AS (
         SELECT doc_id AS asset_id, text FROM documents

@@ -21,7 +21,6 @@ import org.apache.spark.sql.functions._
 object CorpusCard {
 
   def corpusCard(docs: DataFrame): DataFrame = {
-    val s = docs.sparkSession
     // tokenize ONCE and derive every signal from the shared token array
     // (each TextAnalysis.<signal>(text) helper re-splits internally —
     // scoring them independently costs ~6 regex passes per doc,
@@ -36,10 +35,10 @@ object CorpusCard {
       Seq(col("source"), col("doc_id"), col("n_chars"), col("text_hash"),
         when(col("is_blank"), 0L).otherwise(size(col("toks")).cast("long"))
           .as("n_tok"),
-        TextExprs.tokenSetCount(s, col("toks"), TextAnalysis.Stopwords)
+        TextExprs.tokenSetCount(col("toks"), TextAnalysis.Stopwords)
           .cast("double").as("n_stop")) ++
         TextAnalysis.LangMarkers.map { case (l, words) =>
-          TextExprs.tokenSetCount(s, col("toks"), words).as(s"score_$l")
+          TextExprs.tokenSetCount(col("toks"), words).as(s"score_$l")
         }: _*)
     val avgTokLen = when(col("n_tok") > 0,
       (col("n_chars").cast("double") - (col("n_tok") - 1)) / col("n_tok"))

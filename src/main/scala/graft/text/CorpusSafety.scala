@@ -1,7 +1,7 @@
 package graft.text
 
 import graft.{GraftQuery, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Corpus-safety operators a training-data pipeline runs before a corpus
@@ -28,11 +28,10 @@ object CorpusSafety {
     * `contaminated` flag (n_hits >= minHits — one shared gram is noise,
     * a run of them is leakage).
     */
-  def contaminationCheck(spark: SparkSession, corpus: DataFrame,
-                         benchmark: DataFrame, n: Int = 3,
+  def contaminationCheck(corpus: DataFrame, benchmark: DataFrame, n: Int = 3,
                          minHits: Int = 2): DataFrame = {
     def grams(c: Column): Column =
-      TextExprs.tokenShingles(spark, TextAnalysis.tokens(c), n)
+      TextExprs.tokenShingles(TextAnalysis.tokens(c), n)
     val bench = benchmark.select(explode(grams(col("text"))).as("gram")).distinct()
     val corpusGrams = corpus.select(col("doc_id"), grams(col("text")).as("gl"))
     // grams are distinct per doc (TokenShingles dedups), so count(*) after
@@ -79,7 +78,7 @@ object CorpusSafety {
     "q58_contamination",
     (s, dir) => {
       val d = Tables.documents(s, dir)
-      contaminationCheck(s, d.select(col("doc_id"), col("text")),
+      contaminationCheck(d.select(col("doc_id"), col("text")),
           d.filter(col("doc_id") < 20).select(col("text")))
         .orderBy(col("doc_id"))
     },
@@ -157,8 +156,7 @@ object CorpusSafety {
     (s, dir) => {
       val docs = Tables.documents(s, dir)
       val g0 = docs.select(col("source"),
-          explode(TextExprs.tokenShingles(s,
-            TextAnalysis.tokens(col("text")), 2)).as("g"))
+          explode(TextExprs.tokenShingles(TextAnalysis.tokens(col("text")), 2)).as("g"))
         .distinct()
         .localCheckpoint() // referenced three times (sizes + both join sides)
       val sizes = g0.groupBy(col("source")).agg(count(lit(1)).as("n_grams"))

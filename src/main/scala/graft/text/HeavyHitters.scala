@@ -142,8 +142,7 @@ object HeavyHitters {
   }
 
   /** The sketch as a Column aggregate (same bridge route as
-    * [[TextExprs.minhashSketchAgg]] — aggregates can't go through the
-    * temp-function registry).
+    * [[TextExprs.minhashSketchAgg]]).
     */
   def misraGries(tokens: Column, k: Int): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge

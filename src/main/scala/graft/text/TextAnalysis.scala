@@ -1,10 +1,8 @@
 package graft.text
 
 import graft.{GraftQuery, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-
-import SparkSession.{active => activeSession}
 
 /** Text-analysis operators for large-scale training-data pipelines:
   * tokenization stats, quality scoring, language ID, fingerprinting.
@@ -29,14 +27,8 @@ object TextAnalysis {
   val Stopwords: Seq[String] =
     Seq("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 
-  /** HOF reference form — semantically identical to [[stopwordCount]];
-    * kept for the differential spec (the lambda evaluates interpreted).
-    */
-  def stopwordCountHof(text: Column): Column =
-    size(filter(tokens(text), w => w.isin(Stopwords: _*)))
-
   def stopwordCount(text: Column): Column =
-    TextExprs.tokenSetCount(activeSession, tokens(text), Stopwords)
+    TextExprs.tokenSetCount(tokens(text), Stopwords)
 
   /** Deterministic quality score in [0,1]: blend of length saturation,
     * mean token length band, and stopword presence — the shape of the
@@ -66,7 +58,7 @@ object TextAnalysis {
 
   def langScores(text: Column): Seq[(String, Column)] =
     LangMarkers.map { case (lang, words) =>
-      lang -> TextExprs.tokenSetCount(activeSession, tokens(text), words)
+      lang -> TextExprs.tokenSetCount(tokens(text), words)
     }
 
   /** Argmax over already-computed score columns — lets a query materialize
@@ -89,18 +81,8 @@ object TextAnalysis {
     * h = Σ (h*31 + ascii(c)) mod 1e9+7 — bounded int64 arithmetic, exactly
     * reproducible in ANSI SQL (list_reduce in DuckDB).
     */
-  /** HOF reference form of [[fingerprint]] (interpreted per character);
-    * kept for the differential spec.
-    */
-  def fingerprintHof(text: Column): Column =
-    aggregate(
-      // drop the trailing "" Spark's split(limit=-1) produces on char-split
-      filter(split(text, ""), ch => length(ch) > 0),
-      lit(0L),
-      (acc, ch) => pmod(acc * lit(31L) + ascii(ch), lit(1000000007L)))
-
   def fingerprint(text: Column): Column =
-    TextExprs.fingerprintHash(activeSession, text)
+    TextExprs.fingerprintHash(text)
 
   // ---- query wrappers over the `documents` table -------------------------
 
@@ -128,7 +110,7 @@ object TextAnalysis {
         .select(col("doc_id"), col("n_chars_actual"),
           when(col("is_blank"), 0).otherwise(size(col("toks"))).as("n_tokens"),
           size(array_distinct(col("toks"))).as("n_unique_tokens"),
-          TextExprs.tokenSetCount(s, col("toks"), Stopwords).as("n_stopwords")),
+          TextExprs.tokenSetCount(col("toks"), Stopwords).as("n_stopwords")),
     Some("""
       SELECT doc_id,
              length(text) AS n_chars_actual,
@@ -195,7 +177,7 @@ object TextAnalysis {
         .select(
           (Seq(col("doc_id"), col("lang")) ++
             LangMarkers.map { case (l, words) =>
-              TextExprs.tokenSetCount(s, col("toks"), words).as(s"score_$l")
+              TextExprs.tokenSetCount(col("toks"), words).as(s"score_$l")
             }): _*)
       val fromScores = languageIdFromScores(
         LangMarkers.map { case (l, _) => l -> col(s"score_$l") })
@@ -255,7 +237,6 @@ object TextAnalysis {
   def curate(docs: DataFrame, minQuality: Double = 0.7,
              keepLang: String = "en"): DataFrame = {
       import org.apache.spark.sql.expressions.Window
-      val s = docs.sparkSession
       val staged = docs
         .select(col("doc_id"), col("source"), col("text"))
         .select(col("doc_id"), col("source"),
@@ -267,10 +248,10 @@ object TextAnalysis {
           Seq(col("doc_id"), col("source"), col("n_chars"), col("text_hash"),
             when(col("is_blank"), 0).otherwise(size(col("toks")))
               .cast("double").as("n_tok"),
-            TextExprs.tokenSetCount(s, col("toks"), Stopwords)
+            TextExprs.tokenSetCount(col("toks"), Stopwords)
               .cast("double").as("n_stop")) ++
             LangMarkers.map { case (l, words) =>
-              TextExprs.tokenSetCount(s, col("toks"), words).as(s"score_$l")
+              TextExprs.tokenSetCount(col("toks"), words).as(s"score_$l")
             }: _*)
       val avgTokLen = when(col("n_tok") > 0,
         (col("n_chars") - (col("n_tok") - 1)) / col("n_tok")).otherwise(lit(0.0))
@@ -352,7 +333,7 @@ object TextAnalysis {
         .select(
           (Seq(col("lang")) ++
             LangMarkers.map { case (l, words) =>
-              TextExprs.tokenSetCount(s, col("toks"), words).as(s"score_$l")
+              TextExprs.tokenSetCount(col("toks"), words).as(s"score_$l")
             }): _*)
       val predicted = languageIdFromScores(
         LangMarkers.map { case (l, _) => l -> col(s"score_$l") })

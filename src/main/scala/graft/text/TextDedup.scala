@@ -23,37 +23,71 @@ import org.apache.spark.sql.functions._
   */
 object TextDedup {
 
-  /** Token n-gram shingles (default 3) as a distinct array. */
-  def shingles(text: Column, n: Int = 3): Column = {
-    val toks = TextAnalysis.tokens(text)
-    val cnt = greatest(size(toks) - (n - 1), lit(0))
-    // Build n-grams by zipping n shifted slices of the token array — NOT by
-    // indexing with element_at inside a transform lambda: a lambda-embedded
-    // reference to `toks` re-evaluates the tokenizer per element, turning
-    // shingling O(tokens²). Slices evaluate it a constant n+1 times.
-    val parts = (0 until n).map(k => slice(toks, lit(k + 1), cnt))
-    val grams = parts.reduce((a, b) => zip_with(a, b, (x, y) => concat_ws(" ", x, y)))
-    array_distinct(grams)
+  /** The signing step: (`id`, sh, sig) per row of `docs` — the distinct
+    * token 3-gram shingles and their k-family MinHash signature. Rows with
+    * no shingle are dropped before signing: an empty set's signature is k
+    * Long.MaxValue sentinels, so any two empty docs (or sources) would
+    * agree on every band and every sketch position.
+    */
+  private def minhashSigs(docs: DataFrame, id: String, k: Int,
+                          hashMode: String): DataFrame =
+    docs
+      .select(col(id),
+        TextExprs.tokenShingles(TextAnalysis.tokens(col("text")), 3).as("sh"))
+      .filter(size(col("sh")) > 0)
+      .withColumn("sig", TextExprs.minhashSig(col("sh"), k, hashMode))
+
+  /** The banding step: (doc_id, sig) → one (doc_id, band_id, band_key)
+    * row per band, `bands` bands of k/bands signature rows each. xx mode
+    * (the scale default) keys each band by an 8-byte xxhash64 of its
+    * slice; md5 mode keys by the slice ARRAY itself — slightly wider
+    * shuffle keys, but expressible in ANSI SQL (DuckDB groups/joins on
+    * lists), which is what the md5-mode oracle queries need.
+    */
+  private def lshBands(sigs: DataFrame, k: Int, bands: Int,
+                       hashMode: String): DataFrame = {
+    // an uneven split would drop the last k % bands signature rows, and
+    // bands > k would give every doc the same empty band key
+    require(bands >= 1 && k >= bands && k % bands == 0,
+      s"LSH bands must split the signature evenly: got k=$k, bands=$bands")
+    val rows = k / bands
+    val hashed = !TextExprs.isMd5Mode(hashMode)
+    sigs
+      .select(col("doc_id"), explode(array((0 until bands).map { b =>
+        val sl = slice(col("sig"), b * rows + 1, rows)
+        struct(
+          lit(b).as("band_id"),
+          (if (hashed) xxhash64(sl.cast("array<string>").cast("string")) else sl)
+            .as("band_key"))
+      }: _*)).as("band"))
+      .select(col("doc_id"), col("band.band_id").as("band_id"),
+        col("band.band_key").as("band_key"))
   }
 
-  /** LSH band keys: split the k-row signature into `bands` bands of
-    * k/bands rows each. `hashed=true` (the scale default) keys each band
-    * by an 8-byte xxhash64 of its slice; `hashed=false` keys by the slice
-    * ARRAY itself — slightly wider shuffle keys, but expressible in ANSI
-    * SQL (DuckDB groups/joins on lists), which is what the md5-mode
-    * oracle queries need.
+  /** Each banded row joined to its bucket's minimum doc_id (`bucket_min`):
+    * the O(docs·bands) star that [[minhashCanonical]]'s candidates and
+    * [[minhashClusters]]' edges are read from, never the O(bucket²) clique.
     */
-  def bandKeys(sig: Column, k: Int = 16, bands: Int = 4,
-               hashed: Boolean = true): Column = {
-    val rows = k / bands
-    array((0 until bands).map { b =>
-      val sl = slice(sig, b * rows + 1, rows)
-      struct(
-        lit(b).as("band_id"),
-        (if (hashed) xxhash64(sl.cast("array<string>").cast("string")) else sl)
-          .as("band_key"))
-    }: _*)
-  }
+  private def withBucketMin(banded: DataFrame): DataFrame =
+    banded.join(
+      banded.groupBy(col("band_id"), col("band_key"))
+        .agg(min(col("doc_id")).as("bucket_min")),
+      Seq("band_id", "band_key"))
+
+  /** `docs`' (doc_id, text) plus the 20 lowest-doc_id docs re-planted at
+    * doc_id + 1000000 with text `twin` (an exact copy by default): the
+    * planted duplicates that give the dedup rows work at any scale
+    * factor. The oracles' [[duckCorpus]] builds the same corpus.
+    */
+  private[graft] def withPlantedTwins(docs: DataFrame,
+                                      twin: Column = col("text")): DataFrame =
+    docs.select(col("doc_id"), col("text")).unionByName(
+      docs.orderBy(col("doc_id")).limit(20)
+        .select((col("doc_id") + 1000000).as("doc_id"), twin.as("text")))
+
+  /** q26's planted 95%-prefix twin text. */
+  private val tailTwin: Column =
+    concat(substring(col("text"), 1, 10000), lit(" planted tail"))
 
   /** Exact Jaccard similarity of two shingle-set columns. */
   def jaccard(a: Column, b: Column): Column = {
@@ -92,28 +126,17 @@ object TextDedup {
                       threshold: Double = 0.5,
                       maxBucketSize: Int = 1000,
                       hashMode: String = "xx"): DataFrame = {
-    val spark = docs.sparkSession
     // Shingle + sign ONCE (native kernel expressions) and cache: the table
     // is reused for band explode and twice for candidate verification. At
     // 100 TB this is a persisted intermediate; the key property is the
     // same — downstream shuffles never carry document shingles, only
     // (ids, band keys) and, for the candidate pairs only, the two joined
     // shingle sets.
-    val sigs = docs
-      .select(col("doc_id"),
-        TextExprs.tokenShingles(spark, TextAnalysis.tokens(col("text")), 3).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .withColumn("sig", TextExprs.minhashSig(spark, col("sh"), k, hashMode))
-      .cache()
+    val sigs = minhashSigs(docs, "doc_id", k, hashMode).cache()
 
     // LSH candidate generation: shuffle only (band_id, band_key, doc_id).
-    val bandedAll = sigs
-      .select(col("doc_id"),
-        explode(bandKeys(col("sig"), k, bands, hashed = !TextExprs.isMd5Mode(hashMode))).as("band"))
-      .select(col("doc_id"), col("band.band_id").as("band_id"),
-        col("band.band_key").as("band_key"))
-    val banded = SimJoin.capBuckets(bandedAll, Seq("band_id", "band_key"),
-      maxBucketSize)
+    val banded = SimJoin.capBuckets(lshBands(sigs, k, bands, hashMode),
+      Seq("band_id", "band_key"), maxBucketSize)
     val candidates = banded.as("a")
       .join(banded.as("b"), Seq("band_id", "band_key"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
@@ -132,28 +155,6 @@ object TextDedup {
       .select(col("doc_a"), col("doc_b"), col("est_jaccard"), col("jaccard"))
   }
 
-  /** 64-bit SimHash from token hashes: bit b of the fingerprint is set when
-    * more token-hashes have bit b set than unset.
-    *
-    * Single pass: tokens are hashed once (aggregate input); the per-bit
-    * vote counters are a 64-wide array accumulator updated via zip_with
-    * against a constant mask array. (64 separate aggregate expressions
-    * would re-tokenize + re-hash the text 64 times.)
-    */
-  def simhash(text: Column): Column = {
-    val masks = typedLit((0 until 64).map(1L << _))
-    val counts = aggregate(
-      transform(TextAnalysis.tokens(text), t => xxhash64(t)),
-      array_repeat(lit(0L), 64),
-      (acc, h) => zip_with(acc, masks,
-        (c, m) => c + when(h.bitwiseAND(m) =!= 0, 1L).otherwise(0L)))
-    val n = TextAnalysis.tokenCount(text)
-    aggregate(
-      zip_with(counts, masks, (c, m) => when(c * 2 >= n, m).otherwise(lit(0L))),
-      lit(0L),
-      (acc, v) => acc.bitwiseOR(v))
-  }
-
   /** Scalable dedup output: instead of emitting every near-duplicate PAIR
     * (O(cluster²) rows — a duplicate cluster of 1000 copies explodes into
     * half a million pairs), assign each doc at most ONE canonical
@@ -168,22 +169,9 @@ object TextDedup {
   def minhashCanonical(docs: DataFrame, k: Int = 16, bands: Int = 4,
                        threshold: Double = 0.5,
                        hashMode: String = "xx"): DataFrame = {
-    val spark = docs.sparkSession
-    val sigs = docs
-      .select(col("doc_id"),
-        TextExprs.tokenShingles(spark, TextAnalysis.tokens(col("text")), 3).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .cache()
-    val banded = sigs
-      .select(col("doc_id"),
-        explode(bandKeys(TextExprs.minhashSig(spark, col("sh"), k, hashMode), k, bands,
-          hashed = !TextExprs.isMd5Mode(hashMode))).as("band"))
-      .select(col("doc_id"), col("band.band_id").as("band_id"),
-        col("band.band_key").as("band_key"))
+    val sigs = minhashSigs(docs, "doc_id", k, hashMode).cache()
     // min doc id per bucket, then min candidate per doc — rows stay O(docs)
-    val bucketMin = banded.groupBy(col("band_id"), col("band_key"))
-      .agg(min(col("doc_id")).as("bucket_min"))
-    val candidate = banded.join(bucketMin, Seq("band_id", "band_key"))
+    val candidate = withBucketMin(lshBands(sigs, k, bands, hashMode))
       .groupBy(col("doc_id"))
       .agg(min(col("bucket_min")).as("cand"))
       .filter(col("cand") < col("doc_id"))
@@ -214,23 +202,10 @@ object TextDedup {
   def minhashClusters(docs: DataFrame, k: Int = 16, bands: Int = 4,
                       threshold: Double = 0.5, maxIter: Int = 20,
                       hashMode: String = "xx"): DataFrame = {
-    val spark = docs.sparkSession
-    val sigs = docs
-      .select(col("doc_id"),
-        TextExprs.tokenShingles(spark, TextAnalysis.tokens(col("text")), 3).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .cache()
-    val banded = sigs
-      .select(col("doc_id"),
-        explode(bandKeys(TextExprs.minhashSig(spark, col("sh"), k, hashMode), k, bands,
-          hashed = !TextExprs.isMd5Mode(hashMode))).as("band"))
-      .select(col("doc_id"), col("band.band_id").as("band_id"),
-        col("band.band_key").as("band_key"))
-    val bucketMin = banded.groupBy(col("band_id"), col("band_key"))
-      .agg(min(col("doc_id")).as("dst"))
-    val starEdges = banded.join(bucketMin, Seq("band_id", "band_key"))
-      .filter(col("doc_id") =!= col("dst"))
-      .select(col("doc_id").as("src"), col("dst"))
+    val sigs = minhashSigs(docs, "doc_id", k, hashMode).cache()
+    val starEdges = withBucketMin(lshBands(sigs, k, bands, hashMode))
+      .filter(col("doc_id") =!= col("bucket_min"))
+      .select(col("doc_id").as("src"), col("bucket_min").as("dst"))
       .distinct()
     val verified = starEdges
       .join(sigs.select(col("doc_id").as("src"), col("sh").as("sh_s")), "src")
@@ -463,18 +438,9 @@ object TextDedup {
       spark: SparkSession, sfDir: String, stageDir: String): Unit = {
     val dest = new java.io.File(stageDir, table)
     if (graft.StagedOracle.isFresh(dest, sfDir)) return
-    val d = Tables.documents(spark, sfDir)
-    val planted =
-      if (tail) d.orderBy(col("doc_id")).limit(20).select(
-        (col("doc_id") + 1000000).as("doc_id"),
-        concat(substring(col("text"), 1, 10000), lit(" planted tail")).as("text"))
-      else d.orderBy(col("doc_id")).limit(20).select(
-        (col("doc_id") + 1000000).as("doc_id"), col("text"))
-    d.select(col("doc_id"), col("text")).unionByName(planted)
-      .select(col("doc_id"),
-        TextExprs.tokenShingles(spark, TextAnalysis.tokens(col("text")), 3).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .withColumn("sig", TextExprs.minhashSig(spark, col("sh"), 16, "md5"))
+    val corpus = withPlantedTwins(Tables.documents(spark, sfDir),
+      if (tail) tailTwin else col("text"))
+    minhashSigs(corpus, "doc_id", 16, "md5")
       .write.mode("overwrite").parquet(dest.getAbsolutePath)
     graft.StagedOracle.markComplete(dest, sfDir)
   }
@@ -649,7 +615,7 @@ object TextDedup {
       // hash-joins on both keys, producing only the ~n candidate pairs —
       // joining on source alone would build every within-source pair
       // (O(n²/sources)) and filter afterwards.
-      def sh2 = TextExprs.tokenShingles(s, TextAnalysis.tokens(col("text")), 2)
+      def sh2 = TextExprs.tokenShingles(TextAnalysis.tokens(col("text")), 2)
       val a = d.select(col("doc_id").as("doc_a"), col("source"),
         (col("doc_id") + 20).as("pair_key"), sh2.as("sh_a"))
       val b = d.select(col("doc_id").as("doc_b"), col("source").as("source_b"),
@@ -713,12 +679,8 @@ object TextDedup {
     (s, dir) => {
       // Plant near-duplicates so the operator has work to do at any SF:
       // the 20 lowest-doc_id docs get a 95%-prefix twin.
-      val d = Tables.documents(s, dir)
-      val planted = d.orderBy(col("doc_id")).limit(20).select(
-        (col("doc_id") + 1000000).as("doc_id"),
-        concat(substring(col("text"), 1, 10000), lit(" planted tail")).as("text"))
-      val corpus = d.select(col("doc_id"), col("text")).unionByName(planted)
-      minhashDupPairs(corpus, threshold = 0.3, hashMode = "md5")
+      minhashDupPairs(withPlantedTwins(Tables.documents(s, dir), tailTwin),
+        threshold = 0.3, hashMode = "md5")
         .orderBy(col("doc_a"), col("doc_b"))
     },
     Some(s"""
@@ -740,7 +702,7 @@ object TextDedup {
         .select(col("doc_id"), col("text"))
         .orderBy(col("doc_id"))
         .select(col("doc_id"),
-          TextExprs.simhash64(s, TextAnalysis.tokens(col("text")), "md5")
+          TextExprs.simhash64(TextAnalysis.tokens(col("text")), "md5")
             .as("simhash64")),
     Some(s"""
       WITH corpus AS (SELECT doc_id, text FROM documents),
@@ -775,14 +737,10 @@ object TextDedup {
 
   val qMinhashCanonical = GraftQuery(
     "q50_minhash_canonical",
-    (s, dir) => {
-      val d = Tables.documents(s, dir)
-      val planted = d.orderBy(col("doc_id")).limit(20).select(
-        (col("doc_id") + 1000000).as("doc_id"), col("text"))
-      minhashCanonical(d.select(col("doc_id"), col("text")).unionByName(planted),
+    (s, dir) =>
+      minhashCanonical(withPlantedTwins(Tables.documents(s, dir)),
         threshold = 0.5, hashMode = "md5")
-        .orderBy(col("doc_id"))
-    },
+        .orderBy(col("doc_id")),
     Some(s"""
       WITH ${duckCorpus(tail = false)},
       $duckShingles,
@@ -831,14 +789,10 @@ object TextDedup {
 
   val qDedupClusters = GraftQuery(
     "q51_dedup_clusters",
-    (s, dir) => {
-      val d = Tables.documents(s, dir)
-      val planted = d.orderBy(col("doc_id")).limit(20).select(
-        (col("doc_id") + 1000000).as("doc_id"), col("text"))
-      minhashClusters(d.select(col("doc_id"), col("text")).unionByName(planted),
+    (s, dir) =>
+      minhashClusters(withPlantedTwins(Tables.documents(s, dir)),
         threshold = 0.5, hashMode = "md5")
-        .orderBy(col("doc_id"))
-    },
+        .orderBy(col("doc_id")),
     Some(s"""
       WITH RECURSIVE ${duckCorpus(tail = false)},
       $duckShingles,
@@ -861,7 +815,6 @@ object TextDedup {
   def simhashDupPairs(docs: DataFrame, maxHamming: Int = 3,
                       maxBucketSize: Int = 1000,
                       hashMode: String = "xx"): DataFrame = {
-    val spark = docs.sparkSession
     // pigeonhole completeness needs MORE bands than differing bits: with
     // maxHamming flipped bits and maxHamming+1 bands, at least one band is
     // untouched — a hard-coded band count would silently lose recall for
@@ -874,7 +827,7 @@ object TextDedup {
     val fpBits = TextExprs.simhashBits(hashMode)
     val fp = docs
       .select(col("doc_id").as("id"),
-        TextExprs.simhash64(spark, TextAnalysis.tokens(col("text")), hashMode).as("fp"))
+        TextExprs.simhash64(TextAnalysis.tokens(col("text")), hashMode).as("fp"))
     bandedHammingPairs(fp, fpBits, maxHamming, maxBucketSize, "doc_a", "doc_b")
   }
 
@@ -922,14 +875,9 @@ object TextDedup {
     */
   val qSimhashDedup = GraftQuery(
     "q52_simhash_dedup",
-    (s, dir) => {
-      val d = Tables.documents(s, dir)
-      val planted = d.orderBy(col("doc_id")).limit(20).select(
-        (col("doc_id") + 1000000).as("doc_id"), col("text"))
-      simhashDupPairs(d.select(col("doc_id"), col("text")).unionByName(planted),
-        hashMode = "md5")
-        .orderBy(col("doc_a"), col("doc_b"))
-    },
+    (s, dir) =>
+      simhashDupPairs(withPlantedTwins(Tables.documents(s, dir)), hashMode = "md5")
+        .orderBy(col("doc_a"), col("doc_b")),
     Some {
       val fpBits = TextExprs.simhashBits("md5")
       val bands = 3 + 1 // maxHamming + 1, matching the Spark default
@@ -972,22 +920,11 @@ object TextDedup {
   val qSourceSketch = GraftQuery(
     "q55_source_sketch",
     (s, dir) => {
-      val k = 64
-      // filter empty-shingle docs BEFORE signing (as every dedup path
-      // does): an empty set's signature is all Long.MaxValue sentinels,
-      // and two all-sentinel sketches would report est_jaccard = 1.0 for
-      // completely disjoint (empty) sources
-      val sigs = Tables.documents(s, dir)
-        .select(col("source"),
-          TextExprs.tokenShingles(s, TextAnalysis.tokens(col("text")), 3).as("sh"))
-        .filter(size(col("sh")) > 0)
-        .select(col("source"), TextExprs.minhashSig(s, col("sh"), k, "md5").as("sig"))
-      val sketches = sigs.groupBy(col("source"))
-        .agg(TextExprs.minhashSketchAgg(col("sig"), k).as("sketch"))
+      val sketches = sourceSketches(Tables.documents(s, dir))
       val a = sketches.select(col("source").as("source_a"), col("sketch").as("sk_a"))
       val b = sketches.select(col("source").as("source_b"), col("sketch").as("sk_b"))
       a.join(b, col("source_a") < col("source_b"))
-        .withColumn("est_jaccard", estJaccard(col("sk_a"), col("sk_b"), k))
+        .withColumn("est_jaccard", estJaccard(col("sk_a"), col("sk_b"), SketchK))
         .select(col("source_a"), col("source_b"), col("est_jaccard"))
         .orderBy(col("source_a"), col("source_b"))
     },
@@ -1020,6 +957,17 @@ object TextDedup {
       GROUP BY a.source, b.source
       ORDER BY source_a, source_b"""
 
+  /** q55's sketch width (its oracles hard-code the same 64). */
+  private val SketchK = 64
+
+  /** One md5-mode MinHash sketch per source, (source, sketch): the
+    * signing step's per-doc signatures folded by the sketch aggregate.
+    */
+  private def sourceSketches(docs: DataFrame): DataFrame =
+    minhashSigs(docs, "source", SketchK, "md5")
+      .groupBy(col("source"))
+      .agg(TextExprs.minhashSketchAgg(col("sig"), SketchK).as("sketch"))
+
   /** Persist the per-(source, family) minhash signature — the engine's
     * q55 sketch aggregate, position-exploded to the oracle's smins shape.
     */
@@ -1027,14 +975,7 @@ object TextDedup {
       spark: SparkSession, sfDir: String, stageDir: String): Unit = {
     val dest = new java.io.File(stageDir, table)
     if (graft.StagedOracle.isFresh(dest, sfDir)) return
-    val k = 64
-    val sigs = Tables.documents(spark, sfDir)
-      .select(col("source"),
-        TextExprs.tokenShingles(spark, TextAnalysis.tokens(col("text")), 3).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .select(col("source"), TextExprs.minhashSig(spark, col("sh"), k, "md5").as("sig"))
-    sigs.groupBy(col("source"))
-      .agg(TextExprs.minhashSketchAgg(col("sig"), k).as("sketch"))
+    sourceSketches(Tables.documents(spark, sfDir))
       .select(col("source"), posexplode(col("sketch")).as(Seq("f", "mn")))
       .write.mode("overwrite").parquet(dest.getAbsolutePath)
     graft.StagedOracle.markComplete(dest, sfDir)
@@ -1077,7 +1018,7 @@ object TextDedup {
     val toks = docs.select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= minTokens)
     val grams = toks.select(col("doc_id"),
-        posexplode(TextExprs.gramWindowHashes(spark, col("toks"), minTokens))
+        posexplode(TextExprs.gramWindowHashes(col("toks"), minTokens))
           .as(Seq("pos", "g")))
       .select(col("doc_id"), col("pos").cast("long").as("pos"), col("g"))
       // pin the gram rows on the hash key ONCE: the duplicate-gram
@@ -1286,14 +1227,10 @@ object TextDedup {
   val qContainment = GraftQuery(
     "q84_containment",
     (s, dir) => {
-      val d = Tables.documents(s, dir)
       val toks = TextAnalysis.tokens(col("text"))
-      val planted = d.orderBy(col("doc_id")).limit(20).select(
-        (col("doc_id") + 1000000).as("doc_id"),
-        concat_ws(" ", slice(toks, lit(1),
-          greatest((size(toks) / 2).cast("int"), lit(1)))).as("text"))
-      val corpus = d.select(col("doc_id"), col("text")).unionByName(planted)
-      def sh2 = TextExprs.tokenShingles(s, TextAnalysis.tokens(col("text")), 2)
+      val corpus = withPlantedTwins(Tables.documents(s, dir),
+        concat_ws(" ", slice(toks, lit(1), greatest((size(toks) / 2).cast("int"), lit(1)))))
+      def sh2 = TextExprs.tokenShingles(TextAnalysis.tokens(col("text")), 2)
       val a = corpus.select(col("doc_id").as("doc_a"), sh2.as("sh_a"))
       val b = corpus.select(col("doc_id").as("doc_b"), sh2.as("sh_b"))
       a.join(b, col("doc_a") === col("doc_b") + 1000000)

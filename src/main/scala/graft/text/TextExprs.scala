@@ -1,11 +1,12 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.functions.typedLit
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -21,6 +22,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * Hashing uses XxHash64Function (seed 42) — the same function behind the
   * built-in `xxhash64()`, so results stay consistent with expression-level
   * equivalents and are deterministic across partitionings.
+  *
+  * The Column wrappers at the bottom bind each expression directly through
+  * [[org.apache.spark.sql.graftbridge.ColumnBridge]], like every other
+  * custom expression in the engine; they need no session and register
+  * nothing. The `graft_*` SQL names come only from [[graft.GraftExtensions]],
+  * which injects them when a session is built.
   */
 object TextExprs {
 
@@ -347,74 +354,27 @@ object TextExprs {
       }
     }
 
-  /** Register SQL-callable forms once per session (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_shingles",
-      es => TokenShingles(es.head, intLiteral("graft_shingles", es(1))),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_minhash",
-      es => MinHashSignature(es.head, intLiteral("graft_minhash", es(1)),
-        strLiteral("graft_minhash", es.lift(2).orNull, "xx")),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash",
-      es => SimHash64(es.head,
-        strLiteral("graft_simhash", es.lift(1).orNull, "xx")), "built-in")
-    reg.createOrReplaceTempFunction("graft_token_set_count",
-      es => TokenSetCount(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_fingerprint",
-      es => FingerprintHash(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_gram_hashes",
-      es => GramWindowHashes(es.head, intLiteral("graft_gram_hashes", es(1))),
-      "built-in")
-  }
-
-  /** Group-level sketch aggregate as a Column (aggregate functions can't
-    * go through the temp-function registry the scalar wrappers use).
-    */
-  def minhashSketchAgg(sig: Column, k: Int): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
+  /** Group-level sketch aggregate as a Column. */
+  def minhashSketchAgg(sig: Column, k: Int): Column =
     ColumnBridge.column(
       MinHashSketch(ColumnBridge.expression(sig), k).toAggregateExpression())
-  }
 
-  /** Column-level wrappers (register + call_function keeps us independent
-    * of the Column↔Expression private bridge).
-    */
-  def tokenShingles(spark: SparkSession, tokens: Column, n: Int): Column = {
-    register(spark)
-    call_function("graft_shingles", tokens, org.apache.spark.sql.functions.lit(n))
-  }
+  def tokenShingles(tokens: Column, n: Int): Column =
+    ColumnBridge.column(TokenShingles(ColumnBridge.expression(tokens), n))
 
-  def minhashSig(spark: SparkSession, shingles: Column, k: Int,
-                 hashMode: String = "xx"): Column = {
-    register(spark)
-    call_function("graft_minhash", shingles,
-      org.apache.spark.sql.functions.lit(k),
-      org.apache.spark.sql.functions.lit(hashMode))
-  }
+  def minhashSig(shingles: Column, k: Int, hashMode: String = "xx"): Column =
+    ColumnBridge.column(MinHashSignature(ColumnBridge.expression(shingles), k, hashMode))
 
-  def simhash64(spark: SparkSession, tokens: Column,
-                hashMode: String = "xx"): Column = {
-    register(spark)
-    call_function("graft_simhash", tokens,
-      org.apache.spark.sql.functions.lit(hashMode))
-  }
+  def simhash64(tokens: Column, hashMode: String = "xx"): Column =
+    ColumnBridge.column(SimHash64(ColumnBridge.expression(tokens), hashMode))
 
-  def tokenSetCount(spark: SparkSession, tokens: Column, words: Seq[String]): Column = {
-    register(spark)
-    call_function("graft_token_set_count", tokens,
-      org.apache.spark.sql.functions.typedLit(words))
-  }
+  def tokenSetCount(tokens: Column, words: Seq[String]): Column =
+    ColumnBridge.column(TokenSetCount(ColumnBridge.expression(tokens),
+      ColumnBridge.expression(typedLit(words))))
 
-  def fingerprintHash(spark: SparkSession, text: Column): Column = {
-    register(spark)
-    call_function("graft_fingerprint", text)
-  }
+  def fingerprintHash(text: Column): Column =
+    ColumnBridge.column(FingerprintHash(ColumnBridge.expression(text)))
 
-  def gramWindowHashes(spark: SparkSession, tokens: Column, n: Int): Column = {
-    register(spark)
-    call_function("graft_gram_hashes", tokens,
-      org.apache.spark.sql.functions.lit(n))
-  }
+  def gramWindowHashes(tokens: Column, n: Int): Column =
+    ColumnBridge.column(GramWindowHashes(ColumnBridge.expression(tokens), n))
 }

@@ -325,4 +325,47 @@ class PlanAuditSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(pins.nonEmpty, s"$name lost the block REPARTITION_BY_NUM pin:\n$plan")
     }
   }
+
+  test("MinHash signs once, in the cached signing relation (q26/q50/q51)") {
+    // Every band, bucket and verify step reads the cached (doc_id, sh,
+    // sig) relation. A signature computed in a band explode (Generate)
+    // runs once per band reader instead. q51's edges run inside its
+    // connected-components jobs, so every plan the row executes is
+    // captured, not only the returned one.
+    import graft.text.TextExprs.MinHashSignature
+    import org.apache.spark.sql.execution.{GenerateExec, QueryExecution}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    val executed = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        executed.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def signs(op: SparkPlan) =
+      op.expressions.exists(_.exists(_.isInstanceOf[MinHashSignature]))
+    def subtree(p: SparkPlan): Seq[SparkPlan] = p +: allChildren(p).flatMap(subtree)
+    def cachedPlans(p: SparkPlan): Seq[SparkPlan] = subtree(p).collect {
+      case s: InMemoryTableScanExec => s.relation.cachedPlan }
+    def withCached(p: SparkPlan): Seq[SparkPlan] =
+      subtree(p) ++ cachedPlans(p).flatMap(withCached)
+    spark.listenerManager.register(listener)
+    try Seq("q26_minhash_lsh_dedup", "q50_minhash_canonical", "q51_dedup_clusters")
+      .foreach { name =>
+        executed.clear()
+        graft.SparkEntry.queries(name)(spark, "/root/testdata/sf0.001").collect()
+        org.apache.spark.graftbridge.ListenerBridge
+          .waitUntilListenerBusEmpty(spark.sparkContext, 30000)
+        val plans = executed.asScala.toSeq
+        val outside = plans.flatMap(subtree)
+        val inside = plans.flatMap(cachedPlans).flatMap(withCached)
+        assert(inside.exists(signs), s"$name caches no signature:\n${plans.mkString("\n")}")
+        assert(!outside.exists(signs),
+          s"$name signs outside the cached relation:\n${plans.mkString("\n")}")
+        assert(!(outside ++ inside).exists(op => op.isInstanceOf[GenerateExec] && signs(op)),
+          s"$name signs inside a Generate:\n${plans.mkString("\n")}")
+      }
+    finally spark.listenerManager.unregister(listener)
+  }
 }

@@ -162,7 +162,6 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("SQL functions work via SparkSessionExtensions-style registration") {
-    graft.text.TextExprs.register(spark)
     Seq((1L, "a b c d")).toDF("doc_id", "text").createOrReplaceTempView("ext_docs")
     val row = spark.sql("""
       SELECT graft_simhash(split(text, ' ')) AS sh,

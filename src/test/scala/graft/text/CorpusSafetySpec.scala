@@ -14,7 +14,7 @@ class CorpusSafetySpec extends SparkSpec {
       (3L, "x")                                        // too short for any trigram
     ).toDF("doc_id", "text")
     val bench = corpus.filter(col("doc_id") === 0).select(col("text"))
-    val got = CorpusSafety.contaminationCheck(spark, corpus, bench, n = 3, minHits = 2)
+    val got = CorpusSafety.contaminationCheck(corpus, bench, n = 3, minHits = 2)
       .orderBy(col("doc_id"))
       .as[(Long, Int, Long, Double, Boolean)].collect().toSeq
     assert(got(0) == ((0L, 3, 3L, 1.0, true)))
@@ -26,7 +26,7 @@ class CorpusSafetySpec extends SparkSpec {
 
   test("contamination join stays broadcast (corpus never shuffled by gram)") {
     val corpus = Seq((0L, "a b c d"), (1L, "c d e f")).toDF("doc_id", "text")
-    val plan = CorpusSafety.contaminationCheck(spark, corpus,
+    val plan = CorpusSafety.contaminationCheck(corpus,
         corpus.select(col("text")), n = 2)
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"))

@@ -50,9 +50,9 @@ class HashKernelPropertySpec extends SparkSpec {
     val df = docs.toDF("doc_id", "text")
     val got = df
       .select(col("doc_id"),
-        TextExprs.tokenShingles(spark, TextAnalysis.tokens(col("text")), 2).as("sh"))
+        TextExprs.tokenShingles(TextAnalysis.tokens(col("text")), 2).as("sh"))
       .select(col("doc_id"), col("sh"),
-        TextExprs.minhashSig(spark, col("sh"), 8, "md5").as("sig"))
+        TextExprs.minhashSig(col("sh"), 8, "md5").as("sig"))
       .as[(Long, Seq[String], Seq[Long])].collect()
     assert(got.nonEmpty)
     got.foreach { case (id, sh, sig) =>
@@ -67,7 +67,7 @@ class HashKernelPropertySpec extends SparkSpec {
     val got = df
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("tk"))
       .select(col("doc_id"), col("tk"),
-        TextExprs.simhash64(spark, col("tk"), "md5").as("fp"))
+        TextExprs.simhash64(col("tk"), "md5").as("fp"))
       .as[(Long, Seq[String], Long)].collect()
     got.foreach { case (id, tk, fp) =>
       assert((fp >>> 60) == 0L, s"doc $id fingerprint uses bits >= 60")
@@ -83,9 +83,8 @@ class HashKernelPropertySpec extends SparkSpec {
   test("invalid hashMode fails fast with a named error") {
     val e = intercept[Exception] {
       Seq((1L, "a b c")).toDF("doc_id", "text")
-        .select(TextExprs.minhashSig(spark,
-          TextExprs.tokenShingles(spark, TextAnalysis.tokens(col("text")), 2),
-          8, "MD5"))
+        .select(TextExprs.minhashSig(
+          TextExprs.tokenShingles(TextAnalysis.tokens(col("text")), 2), 8, "MD5"))
         .collect()
     }
     assert(e.getMessage != null)

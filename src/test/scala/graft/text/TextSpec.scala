@@ -1,10 +1,62 @@
 package graft.text
 
 import graft.SparkSpec
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 class TextSpec extends SparkSpec {
   import spark.implicits._
+
+  // ---- reference forms of the text kernels -------------------------------
+  // Composable higher-order-function forms of the TextExprs kernels. Their
+  // lambdas evaluate interpreted per element, so only the specs use them.
+
+  /** Reference form of [[TextAnalysis.stopwordCount]]. */
+  private def stopwordCountHof(text: Column): Column =
+    size(filter(TextAnalysis.tokens(text), w => w.isin(TextAnalysis.Stopwords: _*)))
+
+  /** Reference form of [[TextAnalysis.fingerprint]] (per character). */
+  private def fingerprintHof(text: Column): Column =
+    aggregate(
+      // drop the trailing "" Spark's split(limit=-1) produces on char-split
+      filter(split(text, ""), ch => length(ch) > 0),
+      lit(0L),
+      (acc, ch) => pmod(acc * lit(31L) + ascii(ch), lit(1000000007L)))
+
+  /** Token n-gram shingles (default 3) as a distinct array. */
+  private def shingles(text: Column, n: Int = 3): Column = {
+    val toks = TextAnalysis.tokens(text)
+    val cnt = greatest(size(toks) - (n - 1), lit(0))
+    // Build n-grams by zipping n shifted slices of the token array — NOT by
+    // indexing with element_at inside a transform lambda: a lambda-embedded
+    // reference to `toks` re-evaluates the tokenizer per element, turning
+    // shingling O(tokens²). Slices evaluate it a constant n+1 times.
+    val parts = (0 until n).map(k => slice(toks, lit(k + 1), cnt))
+    val grams = parts.reduce((a, b) => zip_with(a, b, (x, y) => concat_ws(" ", x, y)))
+    array_distinct(grams)
+  }
+
+  /** 64-bit SimHash from token hashes: bit b of the fingerprint is set when
+    * more token-hashes have bit b set than unset.
+    *
+    * Single pass: tokens are hashed once (aggregate input); the per-bit
+    * vote counters are a 64-wide array accumulator updated via zip_with
+    * against a constant mask array. (64 separate aggregate expressions
+    * would re-tokenize + re-hash the text 64 times.)
+    */
+  private def simhash(text: Column): Column = {
+    val masks = typedLit((0 until 64).map(1L << _))
+    val counts = aggregate(
+      transform(TextAnalysis.tokens(text), t => xxhash64(t)),
+      array_repeat(lit(0L), 64),
+      (acc, h) => zip_with(acc, masks,
+        (c, m) => c + when(h.bitwiseAND(m) =!= 0, 1L).otherwise(0L)))
+    val n = TextAnalysis.tokenCount(text)
+    aggregate(
+      zip_with(counts, masks, (c, m) => when(c * 2 >= n, m).otherwise(lit(0L))),
+      lit(0L),
+      (acc, v) => acc.bitwiseOR(v))
+  }
 
   test("token stats on known strings") {
     val df = Seq((1L, "the cat sat on the mat"), (2L, "  "), (3L, "one"))
@@ -26,9 +78,9 @@ class TextSpec extends SparkSpec {
       .toDF("doc_id", "text")
       .select(col("doc_id"),
         TextAnalysis.stopwordCount(col("text")).as("sc"),
-        TextAnalysis.stopwordCountHof(col("text")).as("sc_hof"),
+        stopwordCountHof(col("text")).as("sc_hof"),
         TextAnalysis.fingerprint(col("text")).as("fp"),
-        TextAnalysis.fingerprintHof(col("text")).as("fp_hof"))
+        fingerprintHof(col("text")).as("fp_hof"))
       .collect()
     df.foreach { r =>
       assert(r.isNullAt(1) == r.isNullAt(2) && (r.isNullAt(1) || r.getInt(1) == r.getInt(2)),
@@ -41,7 +93,7 @@ class TextSpec extends SparkSpec {
   test("shingles: 3-gram count and short-text guard") {
     val out = Seq((1L, "a b c d e"), (2L, "a b"), (3L, "a b c"))
       .toDF("doc_id", "text")
-      .select(col("doc_id"), TextDedup.shingles(col("text")).as("sh"))
+      .select(col("doc_id"), shingles(col("text")).as("sh"))
       .orderBy("doc_id").collect()
     assert(out(0).getSeq[String](1) == Seq("a b c", "b c d", "c d e"))
     assert(out(1).getSeq[String](1).isEmpty) // shorter than n → no shingles
@@ -83,6 +135,22 @@ class TextSpec extends SparkSpec {
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     assert(pairs.contains((1L, 2L)))
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
+  }
+
+  // An uneven split would drop the last k % bands signature rows, more
+  // bands than rows would key every doc by the same empty band, and zero
+  // bands would divide by zero; each MinHash API refuses them by name.
+  Seq[(String, Int, Int, DataFrame => DataFrame)](
+    ("uneven split", 16, 5, d => TextDedup.minhashDupPairs(d, k = 16, bands = 5)),
+    ("bands > k", 4, 8, d => TextDedup.minhashCanonical(d, k = 4, bands = 8)),
+    ("zero bands", 16, 0, d => TextDedup.minhashClusters(d, k = 16, bands = 0))
+  ).foreach { case (what, k, bands, run) =>
+    test(s"minhash banding rejects $what (k=$k, bands=$bands)") {
+      val docs = Seq((1L, "a b c d e"), (2L, "a b c d f")).toDF("doc_id", "text")
+      val e = intercept[IllegalArgumentException](run(docs))
+      assert(e.getMessage.contains(s"k=$k") && e.getMessage.contains(s"bands=$bands"),
+        e.getMessage)
+    }
   }
 
   test("minhash est_jaccard approximates true jaccard for identical docs") {
@@ -186,14 +254,14 @@ class TextSpec extends SparkSpec {
 
   test("gram window hashes: position math, short-doc guard, rolling = direct") {
     val df = Seq(Seq("a", "b", "c", "d", "e"), Seq("a", "b")).toDF("toks")
-      .select(TextExprs.gramWindowHashes(spark, col("toks"), 3).as("g"))
+      .select(TextExprs.gramWindowHashes(col("toks"), 3).as("g"))
     val rows = df.as[Seq[Long]].collect()
     assert(rows(0).size == 3 && rows(1).isEmpty)
     // same window content → same hash regardless of position (doc 2 of the
     // pair below shares window "c d e" at a different offset)
     val two = Seq(Seq("a", "b", "c", "d", "e"), Seq("z", "c", "d", "e"))
       .toDF("toks")
-      .select(TextExprs.gramWindowHashes(spark, col("toks"), 3).as("g"))
+      .select(TextExprs.gramWindowHashes(col("toks"), 3).as("g"))
       .as[Seq[Long]].collect()
     assert(two(0)(2) == two(1)(1)) // "c d e" window
     assert(two(0).distinct.size == 3) // distinct windows hash apart
@@ -212,6 +280,40 @@ class TextSpec extends SparkSpec {
     }
   }
 
+  test("SQL names and Column wrappers agree on every text kernel, both hash modes") {
+    // the graft_* names come from GraftExtensions, the wrappers bind the
+    // same expressions through ColumnBridge; an empty token array and a
+    // NULL row ride along
+    Seq[(Long, String, Seq[String])](
+      (1L, "the cat sat on the mat", Seq("the", "cat", "sat", "on", "the", "mat")),
+      (2L, "naïve café — a résumé", Seq("naïve", "café", "—", "a", "résumé")),
+      (3L, "", Seq.empty),
+      (4L, null, null))
+      .toDF("id", "text", "toks").createOrReplaceTempView("kernel_rows")
+    val viaSql = spark.sql("""
+      SELECT id, graft_shingles(toks, 2) AS sh,
+             graft_minhash(graft_shingles(toks, 2), 8) AS mh_xx,
+             graft_minhash(graft_shingles(toks, 2), 8, 'md5') AS mh_md5,
+             graft_simhash(toks) AS sim_xx, graft_simhash(toks, 'md5') AS sim_md5,
+             graft_token_set_count(toks, array('the', 'a')) AS n_stop,
+             graft_fingerprint(text) AS fp, graft_gram_hashes(toks, 2) AS grams
+      FROM kernel_rows ORDER BY id""")
+    val sh = TextExprs.tokenShingles(col("toks"), 2)
+    val viaColumns = spark.table("kernel_rows").select(col("id"), sh.as("sh"),
+      TextExprs.minhashSig(sh, 8).as("mh_xx"),
+      TextExprs.minhashSig(sh, 8, "md5").as("mh_md5"),
+      TextExprs.simhash64(col("toks")).as("sim_xx"),
+      TextExprs.simhash64(col("toks"), "md5").as("sim_md5"),
+      TextExprs.tokenSetCount(col("toks"), Seq("the", "a")).as("n_stop"),
+      TextExprs.fingerprintHash(col("text")).as("fp"),
+      TextExprs.gramWindowHashes(col("toks"), 2).as("grams"))
+      .orderBy("id")
+    assert(viaSql.schema == viaColumns.schema)
+    val (a, b) = (viaSql.collect().toSeq, viaColumns.collect().toSeq)
+    assert(a.size == 4 && a == b)
+    assert(a(3).toSeq.tail.forall(_ == null)) // NULL in, NULL out
+  }
+
   test("simhash: identical texts collide, near texts are close, far texts far") {
     def hamming(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
     val base = (1 to 50).map(i => s"tok$i").mkString(" ")
@@ -219,7 +321,7 @@ class TextSpec extends SparkSpec {
     val far = (200 to 250).map(i => s"abc$i").mkString(" ")
     val out = Seq((1L, base), (2L, base), (3L, near), (4L, far))
       .toDF("doc_id", "text")
-      .select(col("doc_id"), TextDedup.simhash(col("text")).as("h"))
+      .select(col("doc_id"), simhash(col("text")).as("h"))
       .orderBy("doc_id").collect().map(_.getLong(1))
     assert(out(0) == out(1))
     assert(hamming(out(0), out(2)) < 12)
@@ -387,9 +489,8 @@ class TextSpec extends SparkSpec {
       (4L, "c", "totally different words over here now"))
       .toDF("doc_id", "source", "text")
     val sigs = d.select(col("source"),
-      TextExprs.minhashSig(spark,
-        TextExprs.tokenShingles(spark, TextAnalysis.tokens(col("text")), 3), k)
-        .as("sig"))
+      TextExprs.minhashSig(
+        TextExprs.tokenShingles(TextAnalysis.tokens(col("text")), 3), k).as("sig"))
     val native = sigs.groupBy(col("source"))
       .agg(TextExprs.minhashSketchAgg(col("sig"), k).as("sk"))
       .collect().map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
