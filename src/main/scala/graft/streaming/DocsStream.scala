@@ -8,8 +8,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 /** Streaming corpus ingest dedup: as documents stream in, keep exactly
   * one per content hash — the live dual of the batch exact-dedup family
   * (q20) and the LLM-ingest gate ("never re-add a document already in
-  * the corpus"). Complements [[WrmStreamPipeline.dedupConsecutive]],
-  * whose reference-faithful scope is per-source keep-LAST-1; this is
+  * the corpus"). Complements [[graft.sources.RawTextSink.write]],
+  * whose reference-faithful scope is keep-LAST-1; this is
   * corpus-global keep-one.
   *
   * Winner semantics are min-doc_id-wins, NOT literal arrival order:

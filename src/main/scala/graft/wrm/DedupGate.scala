@@ -8,7 +8,8 @@ import java.security.MessageDigest
   * Exact reference scope (SURVEY §7.4.6): the new payload's SHA-256 is
   * compared against the SINGLE most recent prior file only — a payload
   * identical to an older-but-not-latest file is re-ingested. State is
-  * keep-last-1, so in streaming this is a trivially bounded checkpoint.
+  * keep-last-1: `graft.sources.RawTextSink.write` compares each payload
+  * with the most recent stored file under its root.
   */
 object DedupGate {
 
@@ -23,19 +24,5 @@ object DedupGate {
   def check(payload: String, lastHash: Option[String]): Decision = {
     val h = sha256Hex(payload)
     Decision(lastHash.contains(h), h)
-  }
-
-  /** Driver-side gate over a sequence of (ingest-ordered) payloads: keeps
-    * each payload only if it differs from the immediately preceding kept
-    * one — the reference's exact skip semantics.
-    */
-  def filterIngest(payloads: Seq[String]): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var last: Option[String] = None
-    payloads.foreach { p =>
-      val d = check(p, last)
-      if (!d.isDuplicate) { out += p; last = Some(d.hash) }
-    }
-    out.result()
   }
 }

@@ -11,18 +11,9 @@ import org.apache.spark.sql.functions._
   */
 object Sinks {
 
-  /** Append an enhanced frame under `root/dt=<date>/`. Idempotent re-runs
-    * of one date should use overwriteDate (the reference recomputes a whole
-    * date partition on late files — SURVEY §2.9 T4).
-    */
-  def appendEnhanced(enhanced: DataFrame, root: String): Unit =
-    enhanced
-      .withColumn("dt", date_format(col("date"), "yyyy-MM-dd"))
-      .write.mode("append").partitionBy("dt").parquet(root)
-
-  /** Idempotent full overwrite of one date partition (T4 late-data path).
-    * Dynamic partition overwrite replaces ONLY the partitions present in
-    * the frame — other dates are untouched.
+  /** Idempotent full overwrite of the date partitions present in the frame
+    * (the reference recomputes a whole date on late files — SURVEY §2.9 T4).
+    * Dynamic partition overwrite leaves every other date untouched.
     */
   def overwriteDate(enhanced: DataFrame, root: String): Unit =
     enhanced
@@ -31,10 +22,10 @@ object Sinks {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("dt").parquet(root)
 
-  /** Compact a dt=-partitioned tree in place: the 30 s-poll ingest writes
-    * one tiny file per micro-batch per date (the reference's layout —
-    * raw_all.py's per-poll snapshots), and at cluster scale a year of
-    * that is ~1M files whose listing/open cost dwarfs the data. Rewrites
+  /** Compact a dt=-partitioned tree in place: a date write leaves one
+    * file per write task that held rows of that date, and a tree grown by
+    * appends one file per append per date; at cluster scale a year of
+    * tiny files is ~1M files whose listing/open cost dwarfs the data. Rewrites
     * each date to ceil(bytes/targetBytes) files via a dt-local
     * repartition, preserving the Hive layout (partition pruning still
     * works) and row contents exactly. Dynamic partition overwrite keeps

@@ -46,8 +46,8 @@ object WrmQueries {
       FROM $Dump WHERE record_type = 'station') latest_rn
     WHERE rn = 1"""
 
-  /** Full ingest pipeline over the deterministic fixture: read raw .txt →
-    * parse → validate → enhance per date partition → union.
+  /** Full ingest pipeline over the deterministic fixture: the per-date
+    * job (`DateJob.enhanced`) for each date, then a union.
     *
     * Memoized + cached per session: seven registry queries consume this
     * frame; re-running the parse/validate pipeline (with its windowed
@@ -74,14 +74,9 @@ object WrmQueries {
   def enhancedAll(spark: SparkSession): DataFrame = {
     cache.keySet.removeIf(s => s.sparkContext.isStopped) // don't pin dead sessions
     cache.computeIfAbsent(spark, { s =>
-      val root = WrmFixture.defaultRoot
-      val df = Dates.map { date =>
-        val processed = RawParser.processPartition(s, s"$root/dt=$date")
-        val enhanced = Enhance.enhance(processed, date, Some(FixtureProcessedAt))
-        Validation.assertColumnOrder(enhanced, Schemas.enhancedColumns)
-        Validation.validate(enhanced, Validation.enhancedChecks)
-      }.reduce(_ unionByName _)
-      val cached = df.cache()
+      val root = WrmFixture.defaultRoot.toString
+      val cached = Dates.map(DateJob.enhanced(s, root, _, Some(FixtureProcessedAt)))
+        .reduce(_ unionByName _).cache()
       cached.coalesce(1).write.mode("overwrite").parquet(DumpPath)
       cached
     })

@@ -62,7 +62,7 @@ class ScaleSpec extends SparkSpec {
   test("dt=-partitioned writes give partition pruning on read") {
     val root = java.nio.file.Files.createTempDirectory("prune").toString
     val enhanced = graft.wrm.WrmQueries.enhancedAll(spark)
-    graft.wrm.Sinks.appendEnhanced(enhanced, root)
+    graft.wrm.Sinks.overwriteDate(enhanced, root)
     val filtered = spark.read.option("basePath", root).parquet(root)
       .filter(col("dt") === "2025-05-01")
     val scan = filtered.queryExecution.executedPlan.toString

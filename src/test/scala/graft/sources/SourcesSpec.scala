@@ -4,8 +4,6 @@ import java.net.InetSocketAddress
 import java.nio.file.Files
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import graft.SparkSpec
-import graft.streaming.WrmStreamPipeline
-import org.apache.spark.sql.streaming.Trigger
 
 class SourcesSpec extends SparkSpec {
   import spark.implicits._
@@ -141,24 +139,6 @@ class SourcesSpec extends SparkSpec {
     Files.setLastModifiedTime(newer, tie)
     assert(RawTextSink.mostRecent(root).map(_.getFileName.toString)
       .contains("wrm_stations_2025-05-01_10-05-00.txt"))
-  }
-
-  test("streaming consecutive-dedup keeps reference scope (T5)") {
-    def ts(m: Int) = java.sql.Timestamp.valueOf(f"2025-05-01 10:$m%02d:00")
-    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[WrmStreamPipeline.RawPayload](
-      spark)
-    input.addData(
-      WrmStreamPipeline.RawPayload("wrm", ts(0), "A"),
-      WrmStreamPipeline.RawPayload("wrm", ts(1), "A"),  // consecutive dup → dropped
-      WrmStreamPipeline.RawPayload("wrm", ts(2), "B"),
-      WrmStreamPipeline.RawPayload("wrm", ts(3), "A"))  // not consecutive → kept
-    val q = WrmStreamPipeline.dedupConsecutive(input.toDS())
-      .writeStream.outputMode("append").format("memory").queryName("dedup")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val kept = spark.table("dedup").orderBy("ts")
-      .as[WrmStreamPipeline.RawPayload].collect().map(_.payload).toSeq
-    assert(kept == Seq("A", "B", "A"))
   }
 
   test("SQL functions work via SparkSessionExtensions-style registration") {

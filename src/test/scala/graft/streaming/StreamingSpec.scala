@@ -381,6 +381,95 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(enhancedRoot.toString).count() == 2 * 12)
   }
 
+  /** Committed batch ids under a checkpoint's `commits/` (no hidden crc files). */
+  private def commitIds(checkpoint: String): Seq[Long] =
+    Option(new java.io.File(s"$checkpoint/commits").list()).map(_.toSeq).getOrElse(Nil)
+      .filterNot(_.startsWith(".")).map(_.toLong).sorted
+
+  private def wrmStream(raw: java.nio.file.Path, out: String, checkpoint: String,
+                        maxFilesPerTrigger: Option[Int] = None): Unit =
+    WrmStreamPipeline.start(spark, WrmStreamPipeline.Config(raw.toString, out, checkpoint,
+      trigger = Trigger.AvailableNow(), maxFilesPerTrigger = maxFilesPerTrigger))
+      .awaitTermination()
+
+  test("a replayed WRM batch rewrites its dates instead of appending them again") {
+    val root = Files.createTempDirectory("wrmstream_replay")
+    val rawRoot = root.resolve("raw")
+    val enhancedRoot = root.resolve("enhanced").toString
+    val checkpoint = root.resolve("ckpt").toString
+    WrmFixture.writeRawFiles(rawRoot, Seq("2025-05-01"), ticksPerDate = 2)
+    wrmStream(rawRoot, enhancedRoot, checkpoint)
+    assert(spark.read.parquet(enhancedRoot).count() == 2 * 12)
+    // a crash after the write but before the commit: drop the last commit,
+    // so the restart re-runs that batch under the same batch id
+    val last = commitIds(checkpoint).last
+    Seq(s"$last", s".$last.crc").foreach(n =>
+      Files.deleteIfExists(java.nio.file.Paths.get(checkpoint, "commits", n)))
+    wrmStream(rawRoot, enhancedRoot, checkpoint)
+    assert(commitIds(checkpoint).last == last)
+    assert(spark.read.parquet(enhancedRoot).count() == 2 * 12)
+  }
+
+  test("a WRM batch that fails validation fails the query and commits no offsets") {
+    val root = Files.createTempDirectory("wrmstream_invalid")
+    val dir = Files.createDirectories(root.resolve("raw/dt=2025-05-01"))
+    // parses (bikes casts to a long), then fails the bikes_ge_0 check
+    Files.writeString(dir.resolve("wrm_stations_2025-05-01_10-00-00.txt"),
+      "#id,ts,name,lat,lon,bikes,spaces,installed,locked,temporary,total_docks,gb,pedelecs\n" +
+        "001,1705147845.1|3600|-3600,Station 1,51.1,17.0,-1,10,true,false,false,15,false,2\n")
+    val checkpoint = root.resolve("ckpt").toString
+    val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      wrmStream(root.resolve("raw"), root.resolve("enhanced").toString, checkpoint)
+    }
+    val messages = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage)).toSeq
+    assert(messages.exists(_.contains("bikes_ge_0")), messages.mkString("\n"))
+    assert(commitIds(checkpoint).isEmpty)
+  }
+
+  test("the WRM stream's table equals the per-date job's output over the same raw tree") {
+    val root = Files.createTempDirectory("wrmstream_equiv")
+    val rawRoot = root.resolve("raw")
+    val dates = Seq("2025-05-01", "2025-05-02")
+    WrmFixture.writeRawFiles(rawRoot, dates, ticksPerDate = 2)
+    val streamed = root.resolve("streamed").toString
+    val batch = root.resolve("batch").toString
+    // the source lists paths and opens no file: with a zero byte limit on
+    // binaryFile content every content read throws, and the stream does not
+    val maxLength = "spark.sql.sources.binaryFile.maxLength"
+    val saved = spark.conf.getOption(maxLength)
+    spark.conf.set(maxLength, "0")
+    try {
+      intercept[org.apache.spark.SparkException] {
+        spark.read.format("binaryFile").load(s"$rawRoot/dt=2025-05-01").select("content").collect()
+      }
+      // one file per batch: every batch recomputes a whole date
+      wrmStream(rawRoot, streamed, root.resolve("ckpt").toString, maxFilesPerTrigger = Some(1))
+    } finally saved.fold(spark.conf.unset(maxLength))(spark.conf.set(maxLength, _))
+    assert(commitIds(root.resolve("ckpt").toString).size == 4)
+    dates.foreach(d => graft.wrm.Sinks.overwriteDate(
+      graft.wrm.DateJob.enhanced(spark, rawRoot.toString, d), batch))
+    val Seq(s, b) = Seq(streamed, batch).map(spark.read.parquet(_).drop("processed_at"))
+    assert(s.count() == 4 * 12 && b.count() == 4 * 12)
+    assert(s.exceptAll(b).isEmpty && b.exceptAll(s).isEmpty)
+  }
+
+  test("a .txt file under a non-date dt= directory leaves the WRM stream's table unchanged") {
+    val root = Files.createTempDirectory("wrmstream_junk")
+    val rawRoot = root.resolve("raw")
+    val enhancedRoot = root.resolve("enhanced").toString
+    val checkpoint = root.resolve("ckpt").toString
+    WrmFixture.writeRawFiles(rawRoot, Seq("2025-05-01"), ticksPerDate = 2)
+    wrmStream(rawRoot, enhancedRoot, checkpoint)
+    def table = spark.read.parquet(enhancedRoot).collect().map(_.toString).sorted.toSeq
+    val before = table
+    val junk = Files.createDirectories(rawRoot.resolve("dt=junk"))
+    Files.writeString(junk.resolve("wrm_stations_2025-05-03_10-00-00.txt"), WrmFixture.payload(7))
+    wrmStream(rawRoot, enhancedRoot, checkpoint)
+    assert(table == before)
+    assert(new java.io.File(enhancedRoot).list().filter(_.startsWith("dt=")).toSeq == Seq("dt=2025-05-01"))
+  }
+
   test("stream staging and checkpoints go under Spark's configured local dir, not /dev/shm") {
     val conf = new org.apache.spark.SparkConf(false)
     assert(StreamRun.stagingRoot(Map("SPARK_LOCAL_DIRS" -> " /a/x , /b"),

@@ -77,12 +77,6 @@ class EnhanceViewsSpec extends SparkSpec {
     assert(ex.failures.toMap == Map("bikes_ge_0" -> 1L, "total_docks_ge_1" -> 1L))
   }
 
-  test("dedup gate: identical consecutive payloads skipped, old dup re-kept") {
-    val a = "payload A"; val b = "payload B"
-    // a, a (skip), b, a (kept again — only compared to most recent)
-    assert(DedupGate.filterIngest(Seq(a, a, b, a)) == Seq(a, b, a))
-  }
-
   test("fix_text repairs latin1-decoded UTF-8 mojibake, preserves clean text") {
     assert(TextFix.fixText("KrzyÅ¼owa") == "Krzyżowa")
     assert(TextFix.fixText("Station Główna") == "Station Główna")

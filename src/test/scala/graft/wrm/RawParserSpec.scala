@@ -146,10 +146,11 @@ class RawParserSpec extends SparkSpec {
 
   test("the date job writes the rows processPartition returned, not a re-read") {
     // processPartition's result must be the one read of the raw directory:
-    // changing the raw files after it returns must not change what enhance
-    // → validate → overwriteDate write. A re-read would P3-drop the
-    // poisoned file and fail on the deleted one.
-    val dir = tmpDir()
+    // changing the raw files after the date job returns must not change
+    // what overwriteDate writes. A re-read would P3-drop the poisoned file
+    // and fail on the deleted one.
+    val root = tmpDir()
+    val dir = Files.createDirectory(root.resolve("dt=2025-05-01"))
     val header =
       "#id,ts,name,lat,lon,bikes,spaces,installed,locked,temporary,total_docks,gb,pedelecs\n"
     def snapshot(id: String, bikes: String): String =
@@ -157,19 +158,17 @@ class RawParserSpec extends SparkSpec {
     write(dir, "wrm_stations_2025-05-01_10-00-00.txt", snapshot("001", "5"))
     val poisoned = write(dir, "wrm_stations_2025-05-01_10-30-00.txt", snapshot("002", "6"))
     val deleted = write(dir, "wrm_stations_2025-05-01_11-00-00.txt", snapshot("003", "7"))
-    val processed = RawParser.processPartition(spark, dir.toString)
-    val returned = processed.collect().toSeq
+    val processedCols = Schemas.processedColumns.map(org.apache.spark.sql.functions.col)
+    val validated = DateJob.enhanced(spark, root.toString, "2025-05-01",
+      Some(Timestamp.valueOf("2025-05-02 00:00:00")))
+    val returned = validated.select(processedCols: _*).collect().toSeq
 
     write(dir, poisoned.getFileName.toString, snapshot("002", "NOT_A_NUMBER"))
     Files.delete(deleted)
     val out = tmpDir().resolve("enhanced").toString
-    val enhanced = Enhance.enhance(processed, "2025-05-01",
-      Some(Timestamp.valueOf("2025-05-02 00:00:00")))
-    Sinks.overwriteDate(Validation.validate(enhanced, Validation.enhancedChecks), out)
+    Sinks.overwriteDate(validated, out)
 
-    val written = spark.read.parquet(out)
-      .select(Schemas.processedColumns.map(org.apache.spark.sql.functions.col): _*)
-      .collect().toSeq
+    val written = spark.read.parquet(out).select(processedCols: _*).collect().toSeq
     assert(returned.map(_.getString(0)).sorted == Seq("001", "002", "003"))
     assert(written.sortBy(_.getString(0)) == returned.sortBy(_.getString(0)))
   }

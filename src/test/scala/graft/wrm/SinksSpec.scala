@@ -9,7 +9,7 @@ class SinksSpec extends SparkSpec {
   test("overwriteDate replaces only the affected date partitions (T4 late-data path)") {
     val root = java.nio.file.Files.createTempDirectory("sinks").toString
     val enhanced = WrmQueries.enhancedAll(spark) // dates 2025-05-01, 2025-05-02
-    Sinks.appendEnhanced(enhanced, root)
+    Sinks.overwriteDate(enhanced, root)
     val before = spark.read.parquet(root)
     assert(before.count() == 72)
 
@@ -32,7 +32,8 @@ class SinksSpec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("compact").toString
     val enhanced = WrmQueries.enhancedAll(spark) // dates 2025-05-01, 2025-05-02
     // simulate the 30s-poll layout: many tiny appends → many files per date
-    (1 to 5).foreach(_ => Sinks.appendEnhanced(enhanced, root))
+    (1 to 5).foreach(_ => enhanced.withColumn("dt", date_format(col("date"), "yyyy-MM-dd"))
+      .write.mode("append").partitionBy("dt").parquet(root))
     def files(dt: String): Seq[java.io.File] =
       new java.io.File(s"$root/dt=$dt").listFiles.toSeq
         .filter(f => f.getName.endsWith(".parquet"))

@@ -27,10 +27,7 @@ class WrmMultibyteSpec extends SparkSpec {
     // every template appears many times
     val root = WrmFixture.writeRawFiles(tmpDir(), Seq("2025-05-01"),
       ticksPerDate = 3, n = 80, nBikes = 4)
-    val enhanced = Enhance.enhance(
-      RawParser.processPartition(spark, root.resolve("dt=2025-05-01").toString),
-      "2025-05-01")
-    Validation.validate(enhanced, Validation.enhancedChecks)
+    val enhanced = DateJob.enhanced(spark, root.toString, "2025-05-01")
     val names = enhanced.filter(org.apache.spark.sql.functions.col("record_type") === "station")
       .select("name").distinct()
       .collect().map(_.getString(0)).toSet
