@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Loaders for the driver-provided test tables (see TESTDATA.md).
   *
@@ -110,18 +110,25 @@ object Tables {
       lit(false)))
   }
 
-  /** Spread a frame across the session's shuffle parallelism before a
-    * CPU-dense kernel (MinHash/SimHash signatures, embedding distance,
-    * resampling expansions). Two serialization traps motivate this:
-    * a small single-row-group parquet file cannot be split by
-    * `maxPartitionBytes` at all (one row group → one task reads it), and
-    * AQE's byte-based partition coalescing folds low-byte/high-CPU
-    * exchanges to a handful of tasks. Both are correct for byte-bound
-    * stages and wrong for compute-bound ones — compute-bound stages get
-    * pinned width (REPARTITION_BY_NUM survives AQE), byte-bound ones
-    * stay with AQE. Results never depend on partitioning: every consumer
-    * aggregates or sorts downstream.
+  /** Pin a frame's exchange at the session's shuffle parallelism: hashed
+    * on `keys`, or round-robin when none are given. This is the one place
+    * that decides the width of a pinned exchange.
+    *
+    * Pins are for CPU-dense stages (MinHash/SimHash signatures, embedding
+    * distance, resampling expansions, block pair covers, per-key rank
+    * windows). Two serialization traps motivate them: a small
+    * single-row-group parquet file cannot be split by `maxPartitionBytes`
+    * at all (one row group → one task reads it), and AQE's byte-based
+    * partition coalescing folds low-byte/high-CPU exchanges to a handful
+    * of tasks. Both are correct for byte-bound stages and wrong for
+    * compute-bound ones — compute-bound stages get pinned width
+    * (REPARTITION_BY_NUM survives AQE), byte-bound ones stay with AQE.
+    * A keyed pin also satisfies a downstream aggregate's, window's or
+    * join's required distribution on those keys, so it adds no exchange.
+    * Results never depend on partitioning.
     */
-  def spread(df: DataFrame): DataFrame =
-    df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions)
+  def spread(df: DataFrame, keys: Column*): DataFrame = {
+    val n = df.sparkSession.sessionState.conf.numShufflePartitions
+    if (keys.isEmpty) df.repartition(n) else df.repartition(n, keys: _*)
+  }
 }

@@ -273,7 +273,8 @@ object Multimodal {
     * the same pigeonhole hamming-band machinery as SimHash text dedup
     * ([[graft.text.TextDedup.bandedHammingPairs]]) — the multimodal analog
     * of q52. Shuffle carries (band_id, int16, asset_id, int64) rows only;
-    * hot buckets capped.
+    * band buckets over `maxBucketSize` are dropped before pairing
+    * ([[graft.plans.SimJoin.blockPairs]]).
     */
   def imageDupPairs(assets: Dataset[MediaAsset], maxHamming: Int = 3,
                     maxBucketSize: Int = 1000): DataFrame =

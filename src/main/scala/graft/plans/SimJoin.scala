@@ -1,80 +1,67 @@
 package graft.plans
 
+import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Block-local pair generation, shared by the engine's similarity
   * self-joins (the framing of "Highly Efficient String Similarity Search
-  * and Join over Compressed Indexes", ICDE 2022: a cheap candidate
-  * filter, then an exact verify).
+  * and Join over Compressed Indexes", ICDE 2022: one shared candidate
+  * front end, then an exact verify per variant).
   *
-  *  - [[capBuckets]]: the hot-bucket drop of the LSH and prefix pair APIs
-  *    (q26/q52, q30/q126, q129, the image dup pairs).
-  *  - [[triangularSelfPairs]]: the exact bucketed cover of a block's
-  *    unordered pairs, so no hot block serializes a pair stage (q30/q126,
-  *    q80, q129).
+  *  - [[blockPairs]]: the capped, bucketed in-block pair front end of the
+  *    LSH, prefix and dominance pair APIs — MinHash (q26), hamming bands
+  *    (q52, the q71 image dup pairs), embedding buckets (q30/q126), prefix
+  *    tokens (q129) and SemDedup's cells (q80). Each caller keeps only its
+  *    verify step (and its own distinct where one pair can share several
+  *    blocks).
   *  - [[candidates]] / [[pairs]]: the record-linkage name-pair core (q105,
   *    q150, q157) — distinct names per block, in-block self-join, exact
   *    prune, a kernel over distinct name pairs, expansion-free join-back.
   */
 object SimJoin {
 
-  /** Drop LSH buckets holding more than `cap` members before a bucket
-    * self-join. The pair join is O(bucket²): one hot bucket (boilerplate
-    * text, near-constant embeddings) turns a linear candidate pass into a
-    * quadratic blow-up at corpus scale. A bucket with >cap members is, at
-    * any sane cap, a single massive duplicate cluster — the
-    * canonical/cluster APIs (one row per doc) are the right tool for
-    * those; the PAIR api caps them.
-    *
-    * Lazy by construction: a window count over the banding keys, then a
-    * filter — NO job runs at plan-build time (an earlier version ran an
-    * eager count + cache here, which doubled q26 and made the pair APIs
-    * do work during query construction). Both sides of the caller's
-    * self-join re-derive this plan from the caller's cached signature
-    * frame (explode + window over in-memory blocks — cheap); after the
-    * cap filter one side is typically small enough that AQE broadcasts
-    * it. Callers wanting drop diagnostics can run the inverse filter
-    * (`bucket_n > cap`) as a separate cheap aggregate.
+  /** Target members per cover bucket: a block of n members splits into
+    * ⌈n/BucketSize⌉ id-hash buckets.
     */
-  private[graft] def capBuckets(bandedIn: DataFrame, keys: Seq[String],
-                                cap: Int): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*)
-    bandedIn
-      .withColumn("__bucket_n", count(lit(1)).over(w))
-      .filter(col("__bucket_n") <= cap)
-      .drop("__bucket_n")
-  }
+  private val BucketSize = 250
 
-  /** Unordered within-block self-pair expansion with the triangular bucket
-    * cover: split each block into g = ⌈n/bucketSize⌉ hash buckets on the
-    * id and join on (keys, i, j) bucket pairs with i ≤ j — an exact cover
-    * of the unordered in-block pair set (an off-diagonal pair appears
-    * exactly once, oriented by bucket; a diagonal one dedupes by id
-    * order). A plain keys-only self-join computes a whole block's O(n²)
-    * expansion in the one task holding the block, and AQE's byte-based
-    * coalescing folds the low-byte/high-CPU exchange further (measured: one
-    * 885-doc sf0.1 q129 token was 75% of all raw pairs, 2.5 s in a single
-    * task; the q80 cell-keyed dominance join ran a ~50M-pair stage in ONE
-    * task at 10× bench scale) — the cover spreads a block over g(g+1)/2
-    * independent join keys and pins both exchanges at the session
-    * parallelism (REPARTITION_BY_NUM is exempt from coalescing).
-    * Output: keys ++ <id,payload>_a ++ <id,payload>_b, one row per
-    * unordered pair; orientation is arbitrary, so normalize downstream
-    * with least/greatest if the consumer is not symmetric.
+  /** Every unordered pair of distinct ids within one block of `keys`, over
+    * the blocks of at most `maxBlock` members. Output: keys ++
+    * <id,payload>_a ++ <id,payload>_b, one row per pair, with
+    * `<id>_a < <id>_b` and each payload column on its own id's side.
+    *
+    * One window counts each block once, and the count does two things:
+    *  - it drops every block over `maxBlock` whole, before any pairing.
+    *    The pair join is O(block²): one hot LSH bucket (boilerplate text,
+    *    near-constant embeddings) turns a linear candidate pass into a
+    *    quadratic blow-up, and such a bucket is one massive duplicate
+    *    cluster that the canonical/cluster APIs (one row per doc) serve.
+    *    The oracles drop it the same way. `Int.MaxValue` drops nothing.
+    *  - it splits each kept block into g = ⌈n/BucketSize⌉ hash buckets on
+    *    the id. The join on (keys, i, j) bucket pairs with i ≤ j is an
+    *    exact cover of the block's unordered pairs: an off-diagonal pair
+    *    meets once, a diagonal one dedupes by id order. A plain keys-only
+    *    self-join computes a whole block's expansion in the one task
+    *    holding it, and AQE's byte-based coalescing folds the
+    *    low-byte/high-CPU exchange further (measured: one 885-doc sf0.1
+    *    q129 token was 75% of all raw pairs, 2.5 s in a single task; the
+    *    q80 cell-keyed dominance join ran a ~50M-pair stage in ONE task at
+    *    10× bench scale). The cover spreads a block over g(g+1)/2 join keys
+    *    and pins both exchanges ([[graft.Tables.spread]]).
+    *
+    * Lazy: no job runs while the plan is built.
     */
-  private[graft] def triangularSelfPairs(blocked: DataFrame, keys: Seq[String],
-                                         idCol: String, payload: Seq[String],
-                                         bucketSize: Int): DataFrame = {
-    require(bucketSize >= 1, s"bucketSize must be >= 1, got $bucketSize")
-    val w = Window.partitionBy(keys.map(col): _*)
-    val sides = idCol +: payload
+  private[graft] def blockPairs(blocked: DataFrame, keys: Seq[String], id: String,
+                                payload: Seq[String], maxBlock: Int): DataFrame = {
+    val sides = id +: payload
     val bucketed = blocked
+      .withColumn("__n", count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
+      .filter(col("__n") <= maxBlock)
       .withColumn("__g",
-        ((count(lit(1)).over(w) + lit(bucketSize - 1)) / lit(bucketSize))
-          .cast("int"))
-      .withColumn("__b", pmod(xxhash64(col(idCol)), col("__g")).cast("int"))
+        ((col("__n") + lit(BucketSize - 1)) / lit(BucketSize)).cast("int"))
+      .withColumn("__b", pmod(xxhash64(col(id)), col("__g")).cast("int"))
     val keyCols = keys.map(col)
     val aSide = bucketed.select(keyCols ++ Seq(col("__b").as("__i"),
       explode(sequence(col("__b"), col("__g") - 1)).as("__j")) ++
@@ -82,14 +69,17 @@ object SimJoin {
     val bSide = bucketed.select(keyCols ++ Seq(
       explode(sequence(lit(0), col("__b"))).as("__i"), col("__b").as("__j")) ++
       sides.map(c => col(c).as(s"${c}_b")): _*)
-    val p = blocked.sparkSession.sessionState.conf.numShufflePartitions
     val jk = keys ++ Seq("__i", "__j")
-    aSide.repartition(p, jk.map(col): _*)
-      .join(bSide.repartition(p, jk.map(col): _*), jk)
-      .filter(col(s"${idCol}_a") =!= col(s"${idCol}_b"))
-      .filter(col("__i") =!= col("__j") ||
-        col(s"${idCol}_a") < col(s"${idCol}_b"))
-      .drop("__i", "__j")
+    val (idA, idB) = (col(s"${id}_a"), col(s"${id}_b"))
+    // an off-diagonal pair meets in bucket order; turn it to id order
+    val swap = idA > idB
+    def side(s: String, o: String) = sides.map(c =>
+      when(swap, col(s"${c}_$o")).otherwise(col(s"${c}_$s")).as(s"${c}_$s"))
+    Tables.spread(aSide, jk.map(col): _*)
+      .join(Tables.spread(bSide, jk.map(col): _*), jk)
+      .filter(idA =!= idB)
+      .filter(col("__i") =!= col("__j") || idA < idB)
+      .select(keyCols ++ side("a", "b") ++ side("b", "a"): _*)
   }
 
   /** The record-linkage block keys over `part`: (last name token, brand). */
@@ -119,10 +109,8 @@ object SimJoin {
     */
   private[graft] def candidates(rows: DataFrame, keys: Seq[String]): DataFrame = {
     val name = idAndName(rows, keys)._2
-    val pnum = rows.sparkSession.sessionState.conf.numShufflePartitions
-    val names = rows.select((keys :+ name).map(col): _*)
-      .repartition(pnum, keys.map(col): _*)
-      .distinct()
+    val names = Tables.spread(rows.select((keys :+ name).map(col): _*),
+      keys.map(col): _*).distinct()
     def side(s: String) = names.select(keys.map(col) :+ col(name).as(s"name_$s"): _*)
     side("a").join(side("b"), keys)
   }

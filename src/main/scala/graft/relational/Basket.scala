@@ -25,16 +25,15 @@ object Basket {
     * basket size, a data-model constant.
     */
   private def baskets(lineitem: DataFrame): DataFrame =
-    lineitem.select(col("l_orderkey"), col("l_partkey"))
-      // the stage AFTER the orderkey exchange is CPU-dense per byte
-      // (set assembly + the size²/2 in-row pair expansion + the pair
-      // count's partial aggregate all fuse into it), which AQE's
-      // byte-based coalescing folds to a handful of tasks — the q129
-      // rule: pin compute-bound exchanges at the parallelism knob,
-      // leave byte-bound ones to AQE. The explicit repartition on the
-      // group key satisfies the aggregate's required distribution, so
-      // no extra exchange is added.
-      .repartition(lineitem.sparkSession.sessionState.conf.numShufflePartitions,
+    // the stage AFTER the orderkey exchange is CPU-dense per byte
+    // (set assembly + the size²/2 in-row pair expansion + the pair
+    // count's partial aggregate all fuse into it), which AQE's
+    // byte-based coalescing folds to a handful of tasks — the q129
+    // rule: pin compute-bound exchanges at the parallelism knob,
+    // leave byte-bound ones to AQE. The explicit repartition on the
+    // group key satisfies the aggregate's required distribution, so
+    // no extra exchange is added.
+    Tables.spread(lineitem.select(col("l_orderkey"), col("l_partkey")),
         col("l_orderkey"))
       .groupBy(col("l_orderkey"))
       .agg(sort_array(collect_set(col("l_partkey"))).as("parts"))

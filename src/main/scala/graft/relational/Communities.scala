@@ -50,15 +50,13 @@ object Communities {
     // map partitions and the partial combines little (only same-partition
     // parallel edges); the argmax exchange it retires carried the full
     // per-(node, label) table either way.
-    val pnum = edges.sparkSession.sessionState.conf.numShufflePartitions
     // Round 1 fused into graph construction: with labels0 = identity the
     // first edges⋈labels join is a no-op (label ≡ src), so round 1
     // collapses to a per-(dst, src) weight sum (parallel edges combine,
     // matching the join form on multigraphs) + an argmax aggregate —
     // min(struct(-s, label)) = (max weight, then smallest neighbor), the
     // same (s DESC, label ASC) order the windowed rounds use.
-    var labels = e
-      .repartition(pnum, col("dst"))
+    var labels = Tables.spread(e, col("dst"))
       .groupBy(col("dst").as("node"), col("src").as("label"))
       .agg(sum(col("w")).as("s"))
       .groupBy(col("node"))
@@ -71,9 +69,9 @@ object Communities {
     // map-side-combinable aggregate (join + two-stage agg per round, no
     // window anywhere in the operator).
     (2 to iters).foreach { _ =>
-      labels = e
-        .join(labels.select(col("node").as("src"), col("label")), Seq("src"))
-        .repartition(pnum, col("dst"))
+      labels = Tables.spread(
+          e.join(labels.select(col("node").as("src"), col("label")), Seq("src")),
+          col("dst"))
         .groupBy(col("dst").as("node"), col("label"))
         .agg(sum(col("w")).as("s"))
         .groupBy(col("node"))

@@ -74,12 +74,10 @@ object Distributions {
     // window key satisfies the window's required distribution, spreads
     // the 25 key groups over the session's width, and is exempt from
     // coalescing.
-    val pnum = orders.sparkSession.sessionState.conf.numShufflePartitions
-    val ranked = rev
+    val ranked = Tables.spread(rev
       .join(customer.select(col("c_custkey"), col("c_nationkey")),
         col("o_custkey") === col("c_custkey"))
-      .select(col("c_nationkey"), col("o_custkey"), col("rev"))
-      .repartition(pnum, col("c_nationkey"))
+      .select(col("c_nationkey"), col("o_custkey"), col("rev")), col("c_nationkey"))
       .withColumn("i",
         row_number().over(Window.partitionBy(col("c_nationkey"))
           .orderBy(col("rev"), col("o_custkey"))))

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * distinct names is split into `ceil(blk_n / cap)` sub-blocks by a
   * deterministic hash of the name, so per-block candidate pairs are
   * O(blk_n · cap) instead of O(blk_n²). This is the same hot-bucket
-  * guardrail the LSH family applies ([[SimJoin.capBuckets]]),
+  * guardrail the LSH family applies ([[SimJoin.blockPairs]]' cap),
   * adapted to resolution semantics: DROPPING an oversized block would
   * silently un-resolve every record in it, whereas sub-blocking keeps
   * exact duplicates together unconditionally (equal names hash to the
@@ -68,9 +68,8 @@ object EntityResolution {
     // scale). REPARTITION_BY_NUM satisfies both aggregates' required
     // distribution at the session's parallelism and is exempt from
     // coalescing.
-    val pnum = p.sparkSession.sessionState.conf.numShufflePartitions
-    val bn = p.select(col("blk_tok"), col("blk_brand"), col("p_name"))
-      .repartition(pnum, col("blk_tok"), col("blk_brand"))
+    val bn = Tables.spread(p.select(col("blk_tok"), col("blk_brand"), col("p_name")),
+        col("blk_tok"), col("blk_brand"))
       .distinct()
       .groupBy(col("blk_tok"), col("blk_brand"))
       .agg(count(lit(1)).as("blk_n"))

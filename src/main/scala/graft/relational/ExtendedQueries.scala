@@ -103,11 +103,9 @@ object ExtendedQueries {
       // values) shuffle. This also retires the previous localCheckpoint
       // (counts had two consumers, cum + a separate totals aggregate;
       // the window-derived total leaves one) and both totals joins.
-      val counts = Tables.events(s, dir)
+      val counts = Tables.spread(Tables.events(s, dir)
         .groupBy(col("event_type"), col("value").as("v"))
-        .agg(count(lit(1)).as("c"))
-        .repartition(s.sessionState.conf.numShufflePartitions,
-          col("event_type"))
+        .agg(count(lit(1)).as("c")), col("event_type"))
       val w = Window.partitionBy(col("event_type")).orderBy(col("v"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val wAll = Window.partitionBy(col("event_type")).orderBy(col("v"))

@@ -39,9 +39,8 @@ object Quantiles {
   def groupQuantiles(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
     val sp = df.sparkSession
     import sp.implicits._
-    val counts = df.groupBy(col(groupCol), col(valueCol).as("v"))
-      .agg(count(lit(1)).as("c"))
-      .repartition(sp.sessionState.conf.numShufflePartitions, col(groupCol))
+    val counts = Tables.spread(df.groupBy(col(groupCol), col(valueCol).as("v"))
+      .agg(count(lit(1)).as("c")), col(groupCol))
     val w = Window.partitionBy(col(groupCol)).orderBy(col("v"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wAll = Window.partitionBy(col(groupCol)).orderBy(col("v"))
@@ -73,12 +72,11 @@ object Quantiles {
     import sp.implicits._
     // group-key pin + window-derived total: one count-table shuffle feeds
     // the whole chain (see groupQuantiles)
-    val counts = df
+    val counts = Tables.spread(df
       .select(col(groupCol), col(valueCol).as("v"),
         col(weightCol).cast("long").as("wt"))
       .groupBy(col(groupCol), col("v"))
-      .agg(sum(col("wt")).as("c"))
-      .repartition(sp.sessionState.conf.numShufflePartitions, col(groupCol))
+      .agg(sum(col("wt")).as("c")), col(groupCol))
     val w = Window.partitionBy(col(groupCol)).orderBy(col("v"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wAll = Window.partitionBy(col(groupCol)).orderBy(col("v"))
@@ -218,9 +216,8 @@ object Quantiles {
     // bounds are row-level arithmetic on (q, n), so inlining them after
     // the probe cross-join replaces the totals aggregate + ranks join
     // with expressions on rows already at hand
-    val counts = df.groupBy(col(groupCol), col(valueCol).as("v"))
-      .agg(count(lit(1)).as("c"))
-      .repartition(sp.sessionState.conf.numShufflePartitions, col(groupCol))
+    val counts = Tables.spread(df.groupBy(col(groupCol), col(valueCol).as("v"))
+      .agg(count(lit(1)).as("c")), col(groupCol))
     val w = Window.partitionBy(col(groupCol)).orderBy(col("v"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wAll = Window.partitionBy(col(groupCol)).orderBy(col("v"))

@@ -354,9 +354,7 @@ object CorpusPrep {
     // partial entirely and the CPU-dense reassembly (collect + sort +
     // flatten + concat) runs at the shuffle parallelism instead of inside
     // the scan-side task layout
-    frags
-      .repartition(docs.sparkSession.sessionState.conf.numShufflePartitions,
-        col("window_id"))
+    Tables.spread(frags, col("window_id"))
       .groupBy(col("window_id"))
       .agg(sum(col("frag_len")).as("n_tokens"),
         // .getField on the sorted struct array is GetArrayStructFields —

@@ -21,18 +21,17 @@ import org.apache.spark.sql.expressions.Window
   * candidates.
   *
   * Scale shape: token-df aggregate + per-doc rank window (bounded by doc
-  * length), prefix-token self-join with the [[SimJoin.capBuckets]]
-  * hot-key cap over the [[SimJoin.triangularSelfPairs]] cover, then a
-  * verify join fetching the two token sets per
-  * candidate. The threshold compare is integer cross-multiplication
-  * (inter·den ≥ num·union) — no float boundary.
+  * length), the capped prefix-token pair cover ([[SimJoin.blockPairs]]),
+  * then a verify join fetching the two token sets per candidate. The
+  * threshold compare is integer cross-multiplication (inter·den ≥
+  * num·union) — no float boundary.
   */
 object PrefixJoin {
 
   /** Exact Jaccard-≥(num/den) pairs over distinct-token sets.
     *
     * @param maxTokenDocs drop prefix-join blocks larger than this (the
-    *   capBuckets contract: a token this common in PREFIXES means a
+    *   [[SimJoin.blockPairs]] cap: a token this common in PREFIXES means a
     *   pathological df distribution; candidates it would generate are
     *   dropped silently, and the oracle drops them the same way).
     */
@@ -61,21 +60,18 @@ object PrefixJoin {
     val prefix = ranked
       .filter(col("rnk") <= col("n") - ceil(lit(t) * col("n")) + 1)
       .select(col("doc_id"), col("token"))
-    val capped = SimJoin.capBuckets(prefix, Seq("token"), maxTokenDocs)
     // The pair expansion and the verify below are CPU-dense per input BYTE
     // (a few-MiB exchange fans out to ~500k pair comparisons), which AQE's
     // byte-based coalescing cannot see — measured at sf0.1 it folded both
     // exchanges to 3 tasks. The cover pins the expansion; pin the distinct
-    // too: the aggregate's required distribution is satisfied by this exact
+    // (a pair sharing several prefix tokens meets once per token) too: the
+    // aggregate's required distribution is satisfied by this exact
     // exchange, so the dedup AND the verify joins downstream all run at the
     // pinned width instead of the byte-coalesced one.
-    val p = docs.sparkSession.sessionState.conf.numShufflePartitions
-    val cand = SimJoin.triangularSelfPairs(capped, Seq("token"), "doc_id",
-        Nil, bucketSize = 250)
-      .select(least(col("doc_id_a"), col("doc_id_b")).as("doc_a"),
-        greatest(col("doc_id_a"), col("doc_id_b")).as("doc_b"))
-      .repartition(p, col("doc_a"), col("doc_b"))
-      .distinct()
+    val cand = Tables.spread(
+      SimJoin.blockPairs(prefix, Seq("token"), "doc_id", Nil, maxTokenDocs)
+        .select(col("doc_id_a").as("doc_a"), col("doc_id_b").as("doc_b")),
+      col("doc_a"), col("doc_b")).distinct()
     cand
       .join(toks.select(col("doc_id").as("doc_a"), col("ts").as("ts_a")), "doc_a")
       .join(toks.select(col("doc_id").as("doc_b"), col("ts").as("ts_b")), "doc_b")

@@ -56,10 +56,9 @@ object Repetition {
     // single-task stages at sf0.1); the shuffled payload is the token
     // array — lighter than the exploded (doc_id, bigram) rows the old
     // plan pushed through its aggregate exchange.
-    val toksDf = docs
-      .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
-      .repartition(docs.sparkSession.sessionState.conf.numShufflePartitions,
-        col("doc_id"))
+    val toksDf = Tables.spread(
+      docs.select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks")),
+      col("doc_id"))
     val base = toksDf.select(col("doc_id"), col("toks"),
       ngrams(col("toks"), 3).as("trigrams"))
     // bigram stats: the one wide aggregation — O(tokens) rows of (doc_id,

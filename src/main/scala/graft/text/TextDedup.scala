@@ -119,8 +119,8 @@ object TextDedup {
     * shingle → signature → band-bucket join → Jaccard verify ≥ threshold.
     * Returns (doc_a, doc_b, est_jaccard, jaccard).
     *
-    * `maxBucketSize` bounds the O(bucket²) candidate join (see
-    * [[graft.plans.SimJoin.capBuckets]]).
+    * `maxBucketSize` drops the band buckets over it before pairing (see
+    * [[graft.plans.SimJoin.blockPairs]]).
     */
   def minhashDupPairs(docs: DataFrame, k: Int = 16, bands: Int = 4,
                       threshold: Double = 0.5,
@@ -135,12 +135,10 @@ object TextDedup {
     val sigs = minhashSigs(docs, "doc_id", k, hashMode).cache()
 
     // LSH candidate generation: shuffle only (band_id, band_key, doc_id).
-    val banded = SimJoin.capBuckets(lshBands(sigs, k, bands, hashMode),
-      Seq("band_id", "band_key"), maxBucketSize)
-    val candidates = banded.as("a")
-      .join(banded.as("b"), Seq("band_id", "band_key"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .filter(col("doc_a") < col("doc_b"))
+    // A pair sharing several bands meets once per band, hence the distinct.
+    val candidates = SimJoin.blockPairs(lshBands(sigs, k, bands, hashMode),
+        Seq("band_id", "band_key"), "doc_id", Nil, maxBucketSize)
+      .select(col("doc_id_a").as("doc_a"), col("doc_id_b").as("doc_b"))
       .distinct()
 
     // Verification: join shingle sets back for the (few) candidates only.
@@ -835,7 +833,9 @@ object TextDedup {
     * band-blocking + bucket-join + exact hamming verify over ANY 64-bit-or-
     * narrower fingerprint column (SimHash, image dHash, …). Input schema is
     * (id, fp); output (outA, outB, hamming) with outA < outB. Shuffles only
-    * (band_id, int16, id, int64) rows; hot buckets capped like MinHash.
+    * (band_id, int16, id, int64) rows; the band pairs come from
+    * [[SimJoin.blockPairs]], which drops buckets over `maxBucketSize` as
+    * MinHash's do, and a pair sharing several bands is kept once.
     */
   private[graft] def bandedHammingPairs(fp: DataFrame, fpBits: Int,
       maxHamming: Int, maxBucketSize: Int,
@@ -854,12 +854,9 @@ object TextDedup {
       }: _*)).as("band"))
       .select(col("id"), col("fp"),
         col("band.band_id").as("band_id"), col("band.band_val").as("band_val"))
-    val banded = SimJoin.capBuckets(bandedAll, Seq("band_id", "band_val"),
-      maxBucketSize)
-    banded.as("a").join(banded.as("b"), Seq("band_id", "band_val"))
-      .filter(col("a.id") < col("b.id"))
-      .select(col("a.id").as(outA), col("b.id").as(outB),
-        col("a.fp").as("fp_a"), col("b.fp").as("fp_b"))
+    SimJoin.blockPairs(bandedAll, Seq("band_id", "band_val"), "id", Seq("fp"),
+        maxBucketSize)
+      .select(col("id_a").as(outA), col("id_b").as(outB), col("fp_a"), col("fp_b"))
       .distinct()
       .withColumn("hamming", bit_count(col("fp_a").bitwiseXOR(col("fp_b"))))
       .filter(col("hamming") <= maxHamming)
@@ -1017,17 +1014,16 @@ object TextDedup {
     import org.apache.spark.sql.expressions.Window
     val toks = docs.select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= minTokens)
-    val grams = toks.select(col("doc_id"),
+    // pin the gram rows on the hash key ONCE: the duplicate-gram
+    // aggregate clusters by g (subset of its (g, doc) keys) and BOTH
+    // semi-join sides then read this same exchange (ReusedExchange) —
+    // previously the plan shuffled the O(tokens) gram rows twice (once
+    // by (g, doc) for the distinct count, once by g for the semi-join)
+    // and ran the docs scan + rolling-hash kernel once per side
+    val grams = Tables.spread(toks.select(col("doc_id"),
         posexplode(TextExprs.gramWindowHashes(col("toks"), minTokens))
           .as(Seq("pos", "g")))
-      .select(col("doc_id"), col("pos").cast("long").as("pos"), col("g"))
-      // pin the gram rows on the hash key ONCE: the duplicate-gram
-      // aggregate clusters by g (subset of its (g, doc) keys) and BOTH
-      // semi-join sides then read this same exchange (ReusedExchange) —
-      // previously the plan shuffled the O(tokens) gram rows twice (once
-      // by (g, doc) for the distinct count, once by g for the semi-join)
-      // and ran the docs scan + rolling-hash kernel once per side
-      .repartition(spark.sessionState.conf.numShufflePartitions, col("g"))
+      .select(col("doc_id"), col("pos").cast("long").as("pos"), col("g")), col("g"))
     // "shared by >= 2 distinct docs" ⟺ min(doc) != max(doc): exact, and
     // one aggregation level where count_distinct plans two (dedup then
     // count), each with its own exchange

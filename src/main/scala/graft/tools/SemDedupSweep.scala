@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.GraftSession
+import graft.{GraftSession, Tables}
 import graft.vector.SemDedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -38,8 +38,7 @@ object SemDedupSweep {
         .cast("double") / lit(1000000.0)
 
     def corpus(clustered: Boolean): DataFrame = {
-      val base = spark.range(n).toDF("vec_id")
-        .repartition(spark.sessionState.conf.numShufflePartitions)
+      val base = Tables.spread(spark.range(n).toDF("vec_id"))
       val vec =
         if (!clustered)
           transform(sequence(lit(1), lit(dims)), i => noise(i, "uniform"))

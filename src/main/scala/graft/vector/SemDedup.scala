@@ -31,8 +31,8 @@ import org.apache.spark.sql.functions._
   * bounded by sizing nClusters ≈ corpus/target_cluster_size exactly as the
   * paper does (the clustering exists to bound this stage; same knob as
   * IVF's nlist) and spread over g(g+1)/2 join keys per cell by the same
-  * triangular bucket cover as the q129 prefix join, so one hot cluster
-  * cannot serialize into a single task.
+  * bucket cover as the q129 prefix join ([[graft.plans.SimJoin.blockPairs]]),
+  * so one hot cluster cannot serialize into a single task.
   */
 object SemDedup {
 
@@ -293,14 +293,14 @@ object SemDedup {
     val seedSide = seedBuckets
       .select(col("seed_id"), col("seed_vec"), col("ccell"), col("sb"))
 
-    val p = spark.sessionState.conf.numShufflePartitions
     val cands = vecs
       .withColumn("ccell",
         explode(VectorExprs.candidateCells(col("embedding"), coarse, radii, PruneEps)))
       .join(broadcast(cellG), Seq("ccell")) // inner: memberless cells drop out
       .withColumn("sb", explode(sequence(lit(0), col("g") - 1)))
-    val scored = cands.repartition(p, col("ccell"), col("sb"))
-      .join(seedSide.repartition(p, col("ccell"), col("sb")), Seq("ccell", "sb"))
+    val pin = Seq(col("ccell"), col("sb"))
+    val scored = Tables.spread(cands, pin: _*)
+      .join(Tables.spread(seedSide, pin: _*), Seq("ccell", "sb"))
       .withColumn("cos", VectorExprs.cosineSim(col("embedding"), col("seed_vec")))
     argmaxSeed(scored)
   }
@@ -332,20 +332,20 @@ object SemDedup {
 
     // Dominance: within a cell every vector meets every other — O(cluster²)
     // CPU-dense pairs (64-dim cosine) over a few cell keys, so the pairs
-    // go through the triangular bucket cover (SimJoin.triangularSelfPairs).
+    // go through the bucket cover (SimJoin.blockPairs; no cell is capped).
     // Each unordered pair is tested ONCE and emits its dominance LOSER —
-    // the (cent_sim, vec_id)-lexicographic larger end — which is equivalent
+    // the (cent_sim, vec_id)-lexicographic larger end; vec_id_a < vec_id_b,
+    // so that is b unless a's cent_sim is the larger — which is equivalent
     // to the ordered "∃ dominating rival within τ" rule because
     // (cent_sim, vec_id) strictly totally orders a cell, at half the cosine
     // evaluations of the ordered form.
-    val p = assignedIn.sparkSession.sessionState.conf.numShufflePartitions
-    val dropped = graft.plans.SimJoin.triangularSelfPairs(withSim, Seq("cell"),
-        "vec_id", Seq("embedding", "cent_sim"), bucketSize = 250)
-      .filter(VectorExprs.cosineSim(col("embedding_a"), col("embedding_b")) >= tau)
-      .select(when(col("cent_sim_a") < col("cent_sim_b") ||
-          (col("cent_sim_a") === col("cent_sim_b") && col("vec_id_a") < col("vec_id_b")),
-        col("vec_id_b")).otherwise(col("vec_id_a")).as("vec_id"))
-      .repartition(p, col("vec_id"))
+    val dropped = Tables.spread(
+        graft.plans.SimJoin.blockPairs(withSim, Seq("cell"), "vec_id",
+            Seq("embedding", "cent_sim"), Int.MaxValue)
+          .filter(VectorExprs.cosineSim(col("embedding_a"), col("embedding_b")) >= tau)
+          .select(when(col("cent_sim_a") <= col("cent_sim_b"), col("vec_id_b"))
+            .otherwise(col("vec_id_a")).as("vec_id")),
+        col("vec_id"))
       .distinct()
       .withColumn("is_dropped", lit(true))
 

@@ -138,36 +138,25 @@ object Similarity {
   }
 
   /** Embedding-cosine near-duplicate pairs, blocked by LSH bucket so the
-    * pair space is bucket-local (standard dedup blocking at scale).
-    * `maxBucketSize` bounds the O(bucket²) self-join: a hot bucket
-    * (near-constant embeddings) is dropped silently, and the oracle drops
-    * it the same way — massive duplicate clusters belong to the
-    * canonical-assignment APIs, not pair emission.
+    * pair space is bucket-local (standard dedup blocking at scale), through
+    * the capped bucket cover ([[graft.plans.SimJoin.blockPairs]]; with
+    * 2^planes blocking keys a plain bucket self-join has at most that many
+    * tasks, measured at 10x bench scale as one 11 s-tasksum stage on 8
+    * tasks). `maxBucketSize` drops a hot bucket (near-constant embeddings)
+    * silently, and the oracle drops it the same way — massive duplicate
+    * clusters belong to the canonical-assignment APIs, not pair emission.
     */
   def embeddingDupPairs(corpus: DataFrame, threshold: Double, planes: Int = 6,
                         maxBucketSize: Int = 1000,
-                        hashMode: String = "xx"): DataFrame = {
-    val bucketed = graft.plans.SimJoin.capBuckets(
-      corpus.select(col("vec_id"), col("embedding"),
-        VectorExprs.lshBucket(col("embedding"), planes, 0, hashMode).as("bucket")),
-      Seq("bucket"), maxBucketSize)
-    // Triangular bucket cover instead of the plain bucket self-join: with
-    // 2^planes distinct blocking keys the pair expansion has at most that
-    // many tasks and AQE byte-coalescing folds it further (measured at 10x
-    // bench scale: one 11 s-tasksum stage on 8 tasks). Each unordered pair
-    // is produced once with arbitrary orientation; cosineSim is
-    // orientation-symmetric bit-exactly (IEEE products commute and the
-    // fold order is the index order of both inputs), so normalizing ids
-    // with least/greatest reproduces the old id_a < id_b output exactly.
-    graft.plans.SimJoin.triangularSelfPairs(bucketed, Seq("bucket"),
-        "vec_id", Seq("embedding"), bucketSize = 250)
+                        hashMode: String = "xx"): DataFrame =
+    graft.plans.SimJoin.blockPairs(
+        corpus.select(col("vec_id"), col("embedding"),
+          VectorExprs.lshBucket(col("embedding"), planes, 0, hashMode).as("bucket")),
+        Seq("bucket"), "vec_id", Seq("embedding"), maxBucketSize)
       .withColumn("cos_sim",
         VectorExprs.cosineSim(col("embedding_a"), col("embedding_b")))
       .filter(col("cos_sim") >= threshold)
-      .select(least(col("vec_id_a"), col("vec_id_b")).as("id_a"),
-        greatest(col("vec_id_a"), col("vec_id_b")).as("id_b"),
-        col("cos_sim"))
-  }
+      .select(col("vec_id_a").as("id_a"), col("vec_id_b").as("id_b"), col("cos_sim"))
 
   /** Scalable embedding dedup output: one row per vector with at most
     * `tables` canonical candidates — each independent hyperplane family

@@ -15,21 +15,16 @@ object Summary {
       top10Recent: Array[org.apache.spark.sql.Row])
 
   /** COUNT(*) + per-type counts + top-10 most recent station rows — small
-    * collected result, everything else stays distributed.
+    * collected result, everything else stays distributed. Two actions: one
+    * groupBy gives the per-type counts, and their sum is COUNT(*) (every
+    * row, a NULL type included, lands in one group); the top-10 is
+    * [[top10Recent]] over the base view.
     */
   def stationSummary(spark: SparkSession): StationSummary = {
-    val base = spark.table(Views.Base)
-    val latest = spark.table(Views.Latest)
-    val total = base.count()
-    val typeCounts = base.groupBy(col("record_type")).count()
+    val typeCounts = spark.table(Views.Base).groupBy(col("record_type")).count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val top10 = latest
-      .select(col("station_id"), col("name"), col("bikes"), col("spaces"),
-        col("timestamp"))
-      .orderBy(col("timestamp").desc, col("station_id"))
-      .limit(10)
-      .collect()
-    StationSummary(total, typeCounts, top10)
+    StationSummary(typeCounts.values.sum, typeCounts,
+      top10Recent(spark.table(Views.Base)).collect())
   }
 
   /** The O2 top-10 as a DataFrame (for oracle-style comparison). */

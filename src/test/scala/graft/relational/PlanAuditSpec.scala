@@ -204,7 +204,7 @@ class PlanAuditSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("pair-dedup query CONSTRUCTION runs no Spark job (lazy bucket cap)") {
-    // capBuckets once ran an eager count+cache during plan build — callers
+    // the bucket cap once ran an eager count+cache during plan build — callers
     // paid a cluster job just to *define* a DataFrame. Pin the fix: build
     // the pair pipelines and assert zero jobs were submitted.
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -366,6 +366,79 @@ class PlanAuditSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         assert(!(outside ++ inside).exists(op => op.isInstanceOf[GenerateExec] && signs(op)),
           s"$name signs inside a Generate:\n${plans.mkString("\n")}")
       }
+    finally spark.listenerManager.unregister(listener)
+  }
+
+  test("every LSH, prefix and dominance pair row pairs its blocks through one capped cover") {
+    // SimJoin.blockPairs is the one block self-join of the q26/q52/q71 LSH
+    // pairs, the q30/q126 embedding pairs, the q129 prefix join and the q80
+    // dominance scan. In every plan such a row executes, each self-join
+    // over its block keys joins on the cover's bucket columns (__i, __j),
+    // and each side reads exactly one block-count window (the cap and the
+    // cover's bucket count come from the same count). A join on the block
+    // keys against an aggregate grouped by them (q80's centroids, q129's
+    // token frequencies) is a lookup, not a self-join.
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    val blockKeys = Seq(
+      "q26_minhash_lsh_dedup" -> Set("band_id", "band_key"),
+      "q52_simhash_dedup" -> Set("band_id", "band_val"),
+      "q71_image_dedup" -> Set("band_id", "band_val"),
+      "q30_embedding_dedup" -> Set("bucket"),
+      "q126_knn_graph" -> Set("bucket"),
+      "q129_prefix_filter_join" -> Set("token"),
+      "q80_semantic_dedup" -> Set("cell"))
+    val executed = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        executed.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // q126 reads its pairs twice, so one side's cover is a reused exchange
+    def inputs(p: SparkPlan): Seq[SparkPlan] = p match {
+      case r: ReusedExchangeExec => Seq(r.child)
+      case _ => allChildren(p)
+    }
+    def subtree(p: SparkPlan): Seq[SparkPlan] = p +: inputs(p).flatMap(subtree)
+    def names(es: Seq[Expression]): Set[String] = es.flatMap(_.references.map(_.name)).toSet
+    // down a chain of single-input operators to the first aggregate, window or join
+    def isLookup(p: SparkPlan, keys: Set[String]): Boolean = p match {
+      case a: BaseAggregateExec => names(a.groupingExpressions) == keys
+      case _: WindowExec | _: BaseJoinExec => false
+      case _ => inputs(p) match {
+        case Seq(c) => isLookup(c, keys)
+        case _ => false
+      }
+    }
+    spark.listenerManager.register(listener)
+    try blockKeys.foreach { case (name, keys) =>
+      executed.clear()
+      graft.SparkEntry.queries(name)(spark, "/root/testdata/sf0.001").collect()
+      org.apache.spark.graftbridge.ListenerBridge
+        .waitUntilListenerBusEmpty(spark.sparkContext, 30000)
+      val plans = executed.asScala.toSeq
+      val selfJoins = plans.flatMap(subtree).collect {
+        case j: BaseJoinExec if keys.subsetOf(names(j.leftKeys)) &&
+            keys.subsetOf(names(j.rightKeys)) &&
+            !j.children.exists(isLookup(_, keys)) => j
+      }
+      assert(selfJoins.nonEmpty, s"$name runs no self-join over ${keys.mkString(", ")}:\n" +
+        plans.mkString("\n"))
+      selfJoins.foreach { j =>
+        assert(names(j.leftKeys) == keys ++ Set("__i", "__j"),
+          s"$name self-joins its blocks outside the bucket cover:\n$j")
+        j.children.foreach { side =>
+          val counts = subtree(side).collect {
+            case w: WindowExec if names(w.partitionSpec) == keys => w }
+          assert(counts.size === 1,
+            s"$name runs ${counts.size} block-count windows on one side of its cover:\n$j")
+        }
+      }
+    }
     finally spark.listenerManager.unregister(listener)
   }
 }

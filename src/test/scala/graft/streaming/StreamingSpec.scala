@@ -319,7 +319,7 @@ class StreamingSpec extends SparkSpec {
     assert(updates().count(_._2 == 2L) == 1)
   }
 
-  test("WRM streaming ingest: files flow to dt= partitions; late files append (T1-T4)") {
+  test("WRM stream (T1-T4): a late file recomputes and overwrites its date") {
     val root = Files.createTempDirectory("wrmstream")
     val rawRoot = root.resolve("raw")
     val enhancedRoot = root.resolve("enhanced").toString
