@@ -2,6 +2,7 @@ package graft
 
 import java.io.File
 
+import scala.collection.concurrent.TrieMap
 import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 
@@ -129,31 +130,40 @@ object Bench {
     // (VERDICT r17 item 2): tools/StageFloor calibrates this box's
     // ms/stage; multiplying by each row's executed-stage count lets
     // bench_pair.sh report a floor-adjusted total next to the raw one, so
-    // the pair ratio stops tracking box state. Listener events are async —
-    // drain the listener bus before reading the counts so a finished
-    // action's tail stages land in ITS row, not the next one's.
-    val stageEvents = new java.util.concurrent.atomic.AtomicInteger(0)
-    val jobEvents = new java.util.concurrent.atomic.AtomicInteger(0)
+    // the pair ratio stops tracking box state. Each measurement tags its
+    // thread with a local property that every job it submits carries, and
+    // only jobs and stages with that tag are charged to it. A stream row's
+    // micro-batch thread inherits the tag from start(); it replaces the
+    // job group with the query's run id, so the job group cannot be the tag.
+    val rowKey = "graft.bench.row"
+    val rowOfJob, rowOfStage = TrieMap.empty[Int, String]
+    val stagesOf, jobsOf = TrieMap.empty[String, Int]
+    // the listener bus delivers events on one thread: no lost updates
+    def charge(counts: TrieMap[String, Int], row: Option[String]): Unit =
+      row.foreach(r => counts(r) = counts.getOrElse(r, 0) + 1)
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(rowKey))).foreach { row =>
+          rowOfJob(e.jobId) = row
+          e.stageIds.foreach(rowOfStage(_) = row)
+        }
       override def onStageCompleted(
-          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        stageEvents.incrementAndGet(); ()
-      }
-      override def onJobEnd(
-          e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-        jobEvents.incrementAndGet(); ()
-      }
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        charge(stagesOf, rowOfStage.get(e.stageInfo.stageId))
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        charge(jobsOf, rowOfJob.get(e.jobId))
     })
-    def counters(): (Int, Int) = {
-      ListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext, 30000)
-      (stageEvents.get, jobEvents.get)
-    }
+    var measured = 0
     def measure(name: String): (Double, Int, Int) = try {
       spark.catalog.clearCache()
-      val (s0, j0) = counters()
-      val t = time(qmap(name)(spark, sfDir).write.format("noop").mode("overwrite").save())
-      val (s1, j1) = counters()
-      (t, s1 - s0, j1 - j0)
+      measured += 1
+      val row = s"$name#$measured"
+      spark.sparkContext.setLocalProperty(rowKey, row)
+      val t = try time(qmap(name)(spark, sfDir).write.format("noop").mode("overwrite").save())
+        finally spark.sparkContext.setLocalProperty(rowKey, null)
+      // listener events are async: drain the bus so the row's tail stages are counted
+      ListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext, 30000)
+      (t, stagesOf.getOrElse(row, 0), jobsOf.getOrElse(row, 0))
     } catch { case _: Throwable => (-1.0, 0, 0) }
     // SPARK_GRAFT_BENCH_RUNS (default 2): measurements per query, min
     // reported — raise locally to see steady-state past JIT noise.

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{abs, round, when}
 
 /** One named engine capability: a Spark implementation plus (when the
   * semantics are ANSI-SQL-expressible) a DuckDB oracle query over the same
@@ -68,23 +69,17 @@ object GraftQuery {
     */
   val DEC = "DECIMAL(18,2)"
 
-  /** Engine-independent half-up quantizer to `digits` decimals:
-    * `floor(x·10ⁿ + 0.5) / 10ⁿ` in pure double arithmetic — NOT
-    * `round(x, n)`, whose Spark implementation rounds the double's
-    * SHORTEST decimal repr (BigDecimal.valueOf) while DuckDB rounds in
-    * double arithmetic; on boundary-adjacent ratios the two legitimately
-    * disagree by a whole quantum (the q132 TWAP post-mortem). Pair every
-    * use with [[duckQz]] in the oracle.
+  /** DuckDB's `round(x, digits)` on a double: `std::round(x·10ᵈ) / 10ᵈ`
+    * on the binary value (a scale-0 `round` is half away from zero in
+    * both engines), and `x` itself where `x·10ᵈ` is not finite. Spark's
+    * own `round(x, d)` rounds the double's shortest decimal string, so
+    * 9.575 (stored just below the half) gives 9.58 there and 9.57 in
+    * DuckDB. Every double quantized to `digits` decimals goes through
+    * here, and its oracle uses DuckDB's plain `round(x, d)`; a DECIMAL
+    * input is rounded exactly by both engines and keeps plain `round`.
     */
-  def qz(c: org.apache.spark.sql.Column, digits: Int): org.apache.spark.sql.Column = {
+  def duckRound(c: Column, digits: Int): Column = {
     val p = math.pow(10.0, digits)
-    org.apache.spark.sql.functions.floor(c * p + org.apache.spark.sql.functions.lit(0.5))
-      .cast("double") / p
-  }
-
-  /** DuckDB mirror of [[qz]]. */
-  def duckQz(expr: String, digits: Int): String = {
-    val p = "1" + "0" * digits
-    s"floor(($expr) * $p.0 + 0.5) / $p.0"
+    when(abs(c * p) === Double.PositiveInfinity, c).otherwise(round(c * p) / p)
   }
 }

@@ -76,7 +76,7 @@ object Attribution {
         when(col("n_touches") === 1, lit(1.0))
           .when(col("n_touches") === 2, lit(0.5))
           .when(col("rn") === 1 || col("rn") === col("n_touches"), lit(0.4))
-          .otherwise(round(lit(0.2) / (col("n_touches") - 2), 8)))
+          .otherwise(GraftQuery.duckRound(lit(0.2) / (col("n_touches") - 2), 8)))
       .select(col("purchase_id"), col("user_id"), col("click_id"),
         col("rn"), col("n_touches"), col("credit"))
       .orderBy(col("purchase_id"), col("rn"))

@@ -262,8 +262,6 @@ object Basket {
     val totals = b.agg(count(lit(1)).as("n_baskets"))
     val conf = col("support").cast("double") / col("n_a").cast("double")
     val pB = col("n_c").cast("double") / col("n_baskets").cast("double")
-    // ratio-of-counts metrics quantize via the engine-independent half-up
-    // quantizer, not round(double, n) — see GraftQuery.qz
     sym
       .join(perPart.select(col("l_partkey").as("antecedent"),
         col("n_part").as("n_a")), Seq("antecedent"))
@@ -271,11 +269,11 @@ object Basket {
         col("n_part").as("n_c")), Seq("consequent"))
       .crossJoin(broadcast(totals))
       .select(col("antecedent"), col("consequent"), col("support"),
-        GraftQuery.qz(conf, 6).as("confidence"),
-        GraftQuery.qz((col("support").cast("double") * col("n_baskets").cast("double")) /
+        GraftQuery.duckRound(conf, 6).as("confidence"),
+        GraftQuery.duckRound((col("support").cast("double") * col("n_baskets").cast("double")) /
           (col("n_a").cast("double") * col("n_c").cast("double")), 6).as("lift"),
         when(col("support") === col("n_a"), lit(null).cast("double"))
-          .otherwise(GraftQuery.qz((lit(1.0) - pB) / (lit(1.0) - conf), 6))
+          .otherwise(GraftQuery.duckRound((lit(1.0) - pB) / (lit(1.0) - conf), 6))
           .as("conviction"))
       .orderBy(col("antecedent"), col("consequent"))
   }
@@ -306,19 +304,16 @@ object Basket {
         FROM sym s
         JOIN per_part pa ON s.antecedent = pa.l_partkey)
       SELECT j.antecedent, j.consequent, CAST(j.support AS BIGINT) AS support,
-             ${GraftQuery.duckQz(
-                "CAST(j.support AS DOUBLE) / CAST(j.n_a AS DOUBLE)", 6)}
+             round(CAST(j.support AS DOUBLE) / CAST(j.n_a AS DOUBLE), 6)
                AS confidence,
-             ${GraftQuery.duckQz(
-                """(CAST(j.support AS DOUBLE) * CAST((SELECT n_baskets FROM totals) AS DOUBLE))
-                   / (CAST(j.n_a AS DOUBLE) * CAST(pc.n_part AS DOUBLE))""", 6)}
+             round((CAST(j.support AS DOUBLE) * CAST((SELECT n_baskets FROM totals) AS DOUBLE))
+                   / (CAST(j.n_a AS DOUBLE) * CAST(pc.n_part AS DOUBLE)), 6)
                AS lift,
              CASE WHEN j.support = j.n_a THEN NULL
-                  ELSE ${GraftQuery.duckQz(
-                    """(1.0 - CAST(pc.n_part AS DOUBLE)
+                  ELSE round((1.0 - CAST(pc.n_part AS DOUBLE)
                                 / CAST((SELECT n_baskets FROM totals) AS DOUBLE))
                              / (1.0 - CAST(j.support AS DOUBLE)
-                                / CAST(j.n_a AS DOUBLE))""", 6)}
+                                / CAST(j.n_a AS DOUBLE)), 6)
              END AS conviction
       FROM j1 j
       JOIN per_part pc ON j.consequent = pc.l_partkey

@@ -127,7 +127,7 @@ object Bootstrap {
       // replicate has no mean (NULL), it is not a divide-by-zero abort
       .select(col("b").cast("long").as("b"), col("n_eff"),
         when(col("n_eff") === 0, lit(null).cast("double"))
-          .otherwise(round(col("ws").cast("double") /
+          .otherwise(GraftQuery.duckRound(col("ws").cast("double") /
             col("n_eff").cast("double"), 4)).as("boot_mean"))
       .orderBy(col("b"))
   }

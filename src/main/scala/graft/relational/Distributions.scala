@@ -44,9 +44,9 @@ object Distributions {
     digits.crossJoin(broadcast(tot))
       .select(
         col("digit"), col("n"),
-        round(col("n").cast("double") / col("total"), 6).as("obs_share"),
-        round(log10(lit(1.0) + lit(1.0) / col("digit")), 6).as("exp_share"),
-        round(
+        GraftQuery.duckRound(col("n").cast("double") / col("total"), 6).as("obs_share"),
+        GraftQuery.duckRound(log10(lit(1.0) + lit(1.0) / col("digit")), 6).as("exp_share"),
+        GraftQuery.duckRound(
           pow(col("n").cast("double") / col("total") - log10(lit(1.0) + lit(1.0) / col("digit")), 2)
             / log10(lit(1.0) + lit(1.0) / col("digit")) * col("total"), 4)
           .as("chi2_term"))
@@ -85,7 +85,8 @@ object Distributions {
       .agg(
         count(lit(1)).as("n_customers"),
         sum(col("rev").cast(DecimalType(28, 2))).as("total_dec"),
-        sum(round(col("i") * col("rev"), 2).cast(DecimalType(28, 2))).as("weighted_dec"))
+        sum(GraftQuery.duckRound(col("i") * col("rev"), 2).cast(DecimalType(28, 2)))
+          .as("weighted_dec"))
       .select(
         col("c_nationkey"), col("n_customers"),
         col("total_dec").cast("double").as("total_rev"),
@@ -94,8 +95,8 @@ object Distributions {
         col("c_nationkey") === col("n_nationkey"))
       .select(
         col("n_name"), col("n_customers"),
-        round(col("total_rev"), 2).as("total_rev"),
-        round(
+        GraftQuery.duckRound(col("total_rev"), 2).as("total_rev"),
+        GraftQuery.duckRound(
           (lit(2.0) * col("weighted") - (col("n_customers") + 1) * col("total_rev"))
             / (col("n_customers") * col("total_rev")), 6).as("gini"))
       .orderBy(col("n_name"))
@@ -123,7 +124,7 @@ object Distributions {
         Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
       .select(
         col("d").cast("timestamp").as("d"), col("cnt"),
-        round(col("dev"), 4).as("cusum"),
+        GraftQuery.duckRound(col("dev"), 4).as("cusum"),
         (abs(col("dev")) === col("peak")).as("is_peak"))
       .orderBy(col("d"))
   }
@@ -283,8 +284,8 @@ object Distributions {
         sum(col("rev")).cast("double").as("revenue"),
         max(col("total")).cast("double").as("total"))
       .select(col("abc_class"), col("n_parts"),
-        round(col("revenue"), 2).as("revenue"),
-        round(col("revenue") / col("total"), 6).as("rev_share"))
+        GraftQuery.duckRound(col("revenue"), 2).as("revenue"),
+        GraftQuery.duckRound(col("revenue") / col("total"), 6).as("rev_share"))
       .orderBy(col("abc_class"))
   }
 

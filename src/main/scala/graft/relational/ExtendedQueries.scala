@@ -254,10 +254,10 @@ object ExtendedQueries {
       m.select(
         col("l_returnflag"), col("n"),
         when(col("n") < 2, lit(null).cast("double")).otherwise(
-          round(vxy / (col("n") * (col("n") - 1)).cast("double"), 6))
+          GraftQuery.duckRound(vxy / (col("n") * (col("n") - 1)).cast("double"), 6))
           .as("covar_samp"),
         when(vxx === 0.0 || vyy === 0.0, lit(null).cast("double")).otherwise(
-          round(vxy / sqrt(vxx * vyy), 12)).as("corr"))
+          GraftQuery.duckRound(vxy / sqrt(vxx * vyy), 12)).as("corr"))
         .orderBy(col("l_returnflag"))
     },
     Some("""

@@ -66,7 +66,7 @@ object FuzzyJoin {
         score = graft.text.JaroWinkler.jaroWinkler(col("name_a"), col("name_b")).as("jw"),
         keep = col("jw") >= minSim)
       .select(col("key_a"), col("key_b"), col("name_a"), col("name_b"),
-        round(col("jw"), 5).as("jw"))
+        GraftQuery.duckRound(col("jw"), 5).as("jw"))
       .orderBy(col("key_a"), col("key_b"))
   }
 

@@ -84,7 +84,7 @@ object Growth {
     def shifted(months: Int, alias: String) = monthly.select(
       add_months(col("m"), months).as("m"), col("rev").as(alias))
     def pct(cur: org.apache.spark.sql.Column, prev: org.apache.spark.sql.Column) =
-      round((cur.cast("double") / prev.cast("double") - 1.0) * 100.0, 6)
+      GraftQuery.duckRound((cur.cast("double") / prev.cast("double") - 1.0) * 100.0, 6)
     monthly
       .join(shifted(1, "prev_m"), Seq("m"), "left")
       .join(shifted(12, "prev_y"), Seq("m"), "left")

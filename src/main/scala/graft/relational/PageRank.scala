@@ -66,7 +66,7 @@ object PageRank {
       val contribs = ew
         .join(pr, col("src") === col("node"))
         .select(col("dst"),
-          round(col("pr") * col("frac"), 8).cast("decimal(28,8)").as("c"))
+          GraftQuery.duckRound(col("pr") * col("frac"), 8).cast("decimal(28,8)").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("c"))
       pr = nodes
         .join(contribs, col("node") === col("dst"), "left")
@@ -75,7 +75,7 @@ object PageRank {
             lit(d) * coalesce(col("c"), lit(0).cast("decimal(28,8)"))
               .cast("double")).as("pr"))
     }
-    pr.select(col("node"), round(col("pr"), 8).as("pagerank"))
+    pr.select(col("node"), GraftQuery.duckRound(col("pr"), 8).as("pagerank"))
       .orderBy(col("node"))
   }
 

@@ -58,7 +58,7 @@ object Quality {
     */
   def orderConsistencyAudit(orders: DataFrame, lineitem: DataFrame,
                             tolerance: String = "0.02"): DataFrame = {
-    val lineTotal = round(col("l_extendedprice") * (lit(1.0) - col("l_discount")) *
+    val lineTotal = GraftQuery.duckRound(col("l_extendedprice") * (lit(1.0) - col("l_discount")) *
       (lit(1.0) + col("l_tax")), 2).cast("decimal(18,2)")
     val recomputed = lineitem.groupBy(col("l_orderkey"))
       .agg(sum(lineTotal).as("line_total"))

@@ -62,16 +62,16 @@ object Seasonal {
       .withColumn("dow", (expr("weekday(d)") + 1).cast("long"))
     val idx = withTrend.filter(col("resid").isNotNull)
       .groupBy(col("dow"))
-      .agg((sum(GraftQuery.qz(col("resid"), 6).cast(DecimalType(28, 6)))
+      .agg((sum(GraftQuery.duckRound(col("resid"), 6).cast(DecimalType(28, 6)))
         .cast("double") / count(lit(1))).as("seasonal_idx"))
     withTrend.join(idx, Seq("dow"), "left")
       .select(
         col("d").cast("timestamp").as("d"),
         col("rev").cast("double").as("revenue"),
-        GraftQuery.qz(col("trend"), 6).as("trend"),
-        GraftQuery.qz(col("resid"), 6).as("resid"),
+        GraftQuery.duckRound(col("trend"), 6).as("trend"),
+        GraftQuery.duckRound(col("resid"), 6).as("resid"),
         col("dow"),
-        GraftQuery.qz(col("seasonal_idx"), 6).as("seasonal_idx"))
+        GraftQuery.duckRound(col("seasonal_idx"), 6).as("seasonal_idx"))
       .orderBy(col("d"))
   }
 
@@ -118,7 +118,7 @@ object Seasonal {
       .select(
         col("d").cast("timestamp").as("d"),
         col("rev").cast("double").as("revenue"),
-        GraftQuery.qz(col("num").cast("double") / col("den").cast("double"), 4)
+        GraftQuery.duckRound(col("num").cast("double") / col("den").cast("double"), 4)
           .as("ewma"),
         col("n_terms"))
       .orderBy(col("d"))
@@ -159,15 +159,15 @@ object Seasonal {
         FROM t),
       idx AS (
         SELECT dow,
-               CAST(sum(CAST(${GraftQuery.duckQz("resid", 6)} AS DECIMAL(28,6))) AS DOUBLE)
+               CAST(sum(CAST(round(resid, 6) AS DECIMAL(28,6))) AS DOUBLE)
                  / count(*) AS seasonal_idx
         FROM r WHERE resid IS NOT NULL GROUP BY dow)
       SELECT CAST(r.d AS TIMESTAMP) AS d,
              CAST(r.rev AS DOUBLE) AS revenue,
-             ${GraftQuery.duckQz("r.trend", 6)} AS trend,
-             ${GraftQuery.duckQz("r.resid", 6)} AS resid,
+             round(r.trend, 6) AS trend,
+             round(r.resid, 6) AS resid,
              r.dow,
-             ${GraftQuery.duckQz("idx.seasonal_idx", 6)} AS seasonal_idx
+             round(idx.seasonal_idx, 6) AS seasonal_idx
       FROM r LEFT JOIN idx USING (dow)
       ORDER BY d"""))
 
@@ -196,7 +196,7 @@ object Seasonal {
         FROM contrib GROUP BY d)
       SELECT CAST(daily.d AS TIMESTAMP) AS d,
              CAST(daily.rev AS DOUBLE) AS revenue,
-             ${GraftQuery.duckQz("CAST(agg.num AS DOUBLE) / CAST(agg.den AS DOUBLE)", 4)}
+             round(CAST(agg.num AS DOUBLE) / CAST(agg.den AS DOUBLE), 4)
                AS ewma,
              agg.n_terms
       FROM daily JOIN agg USING (d)

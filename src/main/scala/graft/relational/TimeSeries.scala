@@ -102,16 +102,8 @@ object TimeSeries {
     *
     * Scale shape: one per-entity lead window over the entity's own rows
     * (the accepted per-key class), then one aggregate. The weighted
-    * terms quantize through `floor(x·10⁴ + 0.5)` — integer half-up in
-    * pure double arithmetic — NOT `round(x, 4)`: Spark's round goes
-    * through the double's shortest decimal representation
-    * (BigDecimal.valueOf) while DuckDB rounds in double arithmetic, and
-    * on boundary-adjacent products the two legitimately disagree by a
-    * whole quantum (the sf0.1 strict compare caught 2 of 1500 users).
-    * floor over identical doubles is exact in both engines, the quantized
-    * terms are integers whose sums stay far under 2^53 (exact at any
-    * partitioning), and the denominator is the raw µs span — no rounding
-    * anywhere on the path.
+    * terms are rounded to ×10⁴ integers, whose sums stay far under 2^53
+    * (exact at any partitioning); the denominator is the raw µs span.
     */
   def twap(events: DataFrame, eventType: String): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
@@ -126,15 +118,7 @@ object TimeSeries {
       .agg(
         count(lit(1)).as("n_intervals"),
         sum(col("dt_us")).as("span_us"),
-        // terms quantize via floor(x·10⁴ + 0.5), NOT round(x, 4):
-        // Spark's round goes through the double's SHORTEST decimal
-        // repr (BigDecimal.valueOf) while DuckDB rounds in double
-        // arithmetic — on boundary-adjacent products the two disagree
-        // by a whole 1e-4 step (2 of 1500 users at sf0.1 hit one).
-        // floor of identical doubles is exact in both engines, so this
-        // half-up quantizer is engine-independent by construction; the
-        // denominator is the exact µs span, no rounding at all.
-        ((sum(floor(col("value") * dtS * 1e4 + 0.5)).cast("double") / 1e4) /
+        ((sum(round(col("value") * dtS * 1e4).cast("long")).cast("double") / 1e4) /
           (sum(col("dt_us")).cast("double") / 1e6)).as("twap"))
       .orderBy(col("user_id"))
   }
@@ -221,8 +205,8 @@ object TimeSeries {
       SELECT user_id,
              CAST(count(*) AS BIGINT) AS n_intervals,
              CAST(sum(dt_us) AS BIGINT) AS span_us,
-             (CAST(sum(CAST(floor(value * (CAST(dt_us AS DOUBLE) / 1000000.0)
-                                  * 10000.0 + 0.5) AS BIGINT)) AS DOUBLE)
+             (CAST(sum(CAST(round(value * (CAST(dt_us AS DOUBLE) / 1000000.0)
+                                  * 10000.0) AS BIGINT)) AS DOUBLE)
                 / 10000.0) /
                (CAST(sum(dt_us) AS DOUBLE) / 1000000.0) AS twap
       FROM led WHERE dt_us IS NOT NULL

@@ -107,10 +107,10 @@ object ZOrder {
         .as("avg_depth"))
     files.agg(count(lit(1)).as("n_files")).crossJoin(broadcast(stats))
       .select(lit(label).as("layout"), col("n_files"), col("max_depth"),
-        round(col("avg_depth"), 6).as("avg_depth"),
+        GraftQuery.duckRound(col("avg_depth"), 6).as("avg_depth"),
         // fraction of files a point probe must scan — the layout-quality
         // number that is comparable ACROSS layouts with different file counts
-        round(col("avg_depth") / col("n_files"), 6).as("scan_frac"))
+        GraftQuery.duckRound(col("avg_depth") / col("n_files"), 6).as("scan_frac"))
   }
 
   /** Natural (insert-order) vs z-ordered layout, audited on the same

@@ -40,7 +40,7 @@ object Collocations {
       .crossJoin(broadcast(nt))
       .crossJoin(broadcast(nb))
       .select(col("w1"), col("w2"), col("cab"),
-        round(log((col("cab").cast("double") / col("nb")) /
+        GraftQuery.duckRound(log((col("cab").cast("double") / col("nb")) /
           ((col("ca").cast("double") / col("nt")) *
             (col("cb").cast("double") / col("nt")))), 8).as("pmi"))
       .orderBy(col("pmi").desc, col("w1"), col("w2"))

@@ -30,7 +30,7 @@ object CorpusBudget {
     require(budgetTokens >= 1, s"budget must be >= 1, got $budgetTokens")
     val scored = docs.select(
       col("source"),
-      round(TextAnalysis.qualityScore(col("text")), 3).as("qb"),
+      GraftQuery.duckRound(TextAnalysis.qualityScore(col("text")), 3).as("qb"),
       TextAnalysis.tokenCount(col("text")).cast("long").as("n_tok"))
     val buckets = scored.groupBy(col("source"), col("qb"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("tok"))
@@ -62,7 +62,7 @@ object CorpusBudget {
       .select(col("source"), col("cutoff_quality"))
     docs
       .join(broadcast(cutoffs), Seq("source"))
-      .filter(round(TextAnalysis.qualityScore(col("text")), 3) >=
+      .filter(GraftQuery.duckRound(TextAnalysis.qualityScore(col("text")), 3) >=
         col("cutoff_quality"))
       .select(col("source"), col("doc_id"))
   }

@@ -65,7 +65,7 @@ object CorpusCard {
       sum(col("n_tok")).as("n_tokens"),
       sum(col("n_chars")).as("n_chars"),
       sum(when(col("is_dup"), 1L).otherwise(0L)).as("n_dups"),
-      (sum(graft.GraftQuery.qz(col("quality"), 6).cast("decimal(28,6)")).cast("double") /
+      (sum(GraftQuery.duckRound(col("quality"), 6).cast("decimal(28,6)")).cast("double") /
         count(lit(1))).as("mean_quality"),
       sum(when(col("pred_lang") === "en", 1L).otherwise(0L)).as("n_english"))
     // exact discrete median doc length per source over the count table
@@ -82,10 +82,10 @@ object CorpusCard {
       .groupBy(col("source")).agg(min(col("v")).as("median_tok"))
     volume.join(medLen, Seq("source"))
       .select(col("source"), col("n_docs"), col("n_tokens"), col("n_chars"),
-        graft.GraftQuery.qz(col("n_dups").cast("double") / col("n_docs").cast("double"), 6)
+        GraftQuery.duckRound(col("n_dups").cast("double") / col("n_docs").cast("double"), 6)
           .as("dup_rate"),
-        graft.GraftQuery.qz(col("mean_quality"), 6).as("mean_quality"),
-        graft.GraftQuery.qz(col("n_english").cast("double") / col("n_docs").cast("double"), 6)
+        GraftQuery.duckRound(col("mean_quality"), 6).as("mean_quality"),
+        GraftQuery.duckRound(col("n_english").cast("double") / col("n_docs").cast("double"), 6)
           .as("english_share"),
         col("median_tok"))
       .orderBy(col("source"))
@@ -157,7 +157,7 @@ object CorpusCard {
                CAST(sum(n_chars) AS BIGINT) AS n_chars,
                CAST(sum(CASE WHEN is_dup THEN 1 ELSE 0 END) AS BIGINT)
                  AS n_dups,
-               CAST(sum(CAST(${graft.GraftQuery.duckQz("quality", 6)} AS DECIMAL(28,6))) AS DOUBLE)
+               CAST(sum(CAST(round(quality, 6) AS DECIMAL(28,6))) AS DOUBLE)
                  / count(*) AS mean_quality,
                CAST(sum(CASE WHEN pred_lang = 'en' THEN 1 ELSE 0 END)
                  AS BIGINT) AS n_english
@@ -174,9 +174,9 @@ object CorpusCard {
           FROM len_counts)
         WHERE cum >= ceil(0.5 * n) GROUP BY source)
       SELECT v.source, v.n_docs, v.n_tokens, v.n_chars,
-             ${graft.GraftQuery.duckQz("CAST(v.n_dups AS DOUBLE) / v.n_docs", 6)} AS dup_rate,
-             ${graft.GraftQuery.duckQz("v.mean_quality", 6)} AS mean_quality,
-             ${graft.GraftQuery.duckQz("CAST(v.n_english AS DOUBLE) / v.n_docs", 6)}
+             round(CAST(v.n_dups AS DOUBLE) / v.n_docs, 6) AS dup_rate,
+             round(v.mean_quality, 6) AS mean_quality,
+             round(CAST(v.n_english AS DOUBLE) / v.n_docs, 6)
                AS english_share,
              med.median_tok
       FROM volume v JOIN med USING (source)

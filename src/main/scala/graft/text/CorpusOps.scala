@@ -121,7 +121,7 @@ object CorpusOps {
       tf.join(dfTable, "token")
         .crossJoin(broadcast(n))
         .select(col("doc_id"), col("token"), col("tf"), col("df"),
-          round(col("tf") * log(col("n_docs").cast("double") / col("df")), 8)
+          GraftQuery.duckRound(col("tf") * log(col("n_docs").cast("double") / col("df")), 8)
             .as("tfidf"))
         .orderBy(col("doc_id"), col("token"))
     },

@@ -55,12 +55,12 @@ object LmScore {
       .join(cu, Seq("hw"))
       .crossJoin(broadcast(vCount))
       .select(col("doc_id"),
-        round((log((col("cbg") + lit(1)).cast("double") /
+        GraftQuery.duckRound((log((col("cbg") + lit(1)).cast("double") /
           (col("cw") + col("v")).cast("double"))) * lit(-1.0), 8)
           .cast("decimal(28,8)").as("term"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_bigrams"),
-        round(sum(col("term")).cast("double") / count(lit(1)), 6)
+        GraftQuery.duckRound(sum(col("term")).cast("double") / count(lit(1)), 6)
           .as("avg_neg_logprob"))
       .orderBy(col("doc_id"))
   }

@@ -42,7 +42,7 @@ object QuantileNorm {
       .withColumn("n_group", sum(col("n")).over(wAll))
       .select(col(groupCol), col(scoreCol),
         when(col("n_group") === 1, lit(0.0))
-          .otherwise(round(col("smaller").cast("double") /
+          .otherwise(GraftQuery.duckRound(col("smaller").cast("double") /
             (col("n_group") - 1), 8)).as("pct_rank"))
     s.join(ranks, Seq(groupCol, scoreCol))
   }

@@ -146,7 +146,7 @@ object Repetition {
     val p = col("c").cast("double") / col("n").cast("double")
     counts.join(totals, Seq("doc_id"))
       .select(col("doc_id"), col("n"),
-        round((p * log(p)) * lit(-1.0), 8).cast("decimal(28,8)").as("term"))
+        GraftQuery.duckRound((p * log(p)) * lit(-1.0), 8).cast("decimal(28,8)").as("term"))
       .groupBy(col("doc_id"))
       .agg(max(col("n")).as("n_tokens"),
         sum(col("term")).cast("double").as("entropy"))

@@ -39,7 +39,7 @@ object Sharding {
       .select(col("shard"),
         coalesce(col("n_docs"), lit(0L)).as("n_docs"),
         coalesce(col("bytes"), lit(0L)).as("bytes"),
-        round(coalesce(col("bytes"), lit(0L)).cast("double") /
+        GraftQuery.duckRound(coalesce(col("bytes"), lit(0L)).cast("double") /
           (col("total_bytes").cast("double") / nShards), 6).as("load_ratio"))
       .orderBy(col("shard"))
   }

@@ -1007,8 +1007,7 @@ object TextDedup {
     * that beats materializing O(tokens) marked positions, and Spark
     * prunes both scans to (doc_id, text).
     */
-  def substringDupSpans(spark: SparkSession, docs: DataFrame, minTokens: Int,
-                        minDocs: Int = 2): DataFrame = {
+  def substringDupSpans(docs: DataFrame, minTokens: Int, minDocs: Int = 2): DataFrame = {
     require(minTokens >= 1, s"minTokens must be >= 1, got $minTokens")
     require(minDocs >= 2, s"minDocs must be >= 2, got $minDocs")
     import org.apache.spark.sql.expressions.Window
@@ -1062,7 +1061,7 @@ object TextDedup {
     */
   val qSubstringDedup = GraftQuery(
     "q61_substring_dedup",
-    (s, dir) => substringDupSpans(s, Tables.documents(s, dir), minTokens = 4),
+    (s, dir) => substringDupSpans(Tables.documents(s, dir), minTokens = 4),
     Some("""
       WITH toks AS (
         SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
@@ -1116,11 +1115,10 @@ object TextDedup {
     * and a narrow index-filter over the token array — no new shuffle
     * shape beyond q61's, and text crosses the wire at most once.
     */
-  def removeDupSpans(spark: SparkSession, docs: DataFrame, minTokens: Int,
-                     minDocs: Int = 2): DataFrame = {
+  def removeDupSpans(docs: DataFrame, minTokens: Int, minDocs: Int = 2): DataFrame = {
     // sort_array: collect_list order is partition-arrival order; the gap
     // arithmetic below needs spans ascending by span_start
-    val spans = substringDupSpans(spark, docs, minTokens, minDocs)
+    val spans = substringDupSpans(docs, minTokens, minDocs)
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_list(struct(col("span_start"), col("span_end"))))
         .as("spans"))
@@ -1161,7 +1159,7 @@ object TextDedup {
     */
   val qRemoveSpans = GraftQuery(
     "q70_substring_removal",
-    (s, dir) => removeDupSpans(s, Tables.documents(s, dir), minTokens = 4),
+    (s, dir) => removeDupSpans(Tables.documents(s, dir), minTokens = 4),
     Some("""
       WITH toksall AS (
         SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t

@@ -40,7 +40,7 @@ object Topics {
           .orderBy(col("score").desc, col("term"))))
       .filter(col("rnk") <= k)
       .select(col("label"), col("rnk"), col("term"), col("tf"), col("df"),
-        round(col("score"), 6).as("score"))
+        GraftQuery.duckRound(col("score"), 6).as("score"))
       .orderBy(col("label"), col("rnk"))
   }
 

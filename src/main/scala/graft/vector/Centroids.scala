@@ -28,7 +28,7 @@ object Centroids {
       .select(col("label"), posexplode(col("embedding")).as(Seq("dim", "v")))
     val cent = vals.groupBy(col("label"), col("dim"))
       .agg(count(lit(1)).as("n"),
-        sum(round(col("v").cast("double"), 8).cast("decimal(28,8)")).as("s"))
+        sum(GraftQuery.duckRound(col("v").cast("double"), 8).cast("decimal(28,8)")).as("s"))
       .select(col("label"), col("dim"), col("n"),
         (col("s").cast("double") / col("n").cast("double")).as("m"))
     val vecs = cent.groupBy(col("label"))

@@ -44,9 +44,8 @@ object IvfIndex {
   /** Element-wise mean of each cell's vectors → new centroids. The shuffle
     * carries (cell, dim, scalar) triples, never whole vectors.
     *
-    * The mean is computed over components QUANTIZED to ×1e6 integers
-    * (`floor(x·1e6 + 0.5)`, the engine-independent half-up idiom from
-    * q132): integer sums are exact at ANY partitioning, so the trained
+    * The mean is computed over components rounded to ×1e6 integers:
+    * integer sums are exact at ANY partitioning, so the trained
     * centroids are bit-identical run to run and cluster size to cluster
     * size — a reproducible-index-build guarantee a float `avg` (whose
     * partial-sum merge order is partition-dependent) cannot give, and
@@ -57,7 +56,7 @@ object IvfIndex {
     assigned
       .select(col("cell"), posexplode(col("embedding")).as(Seq("dim", "x")))
       .groupBy(col("cell"), col("dim"))
-      .agg((sum(floor(col("x") * lit(1e6) + lit(0.5))).cast("double") /
+      .agg((sum(round(col("x") * lit(1e6)).cast("long")).cast("double") /
         count(lit(1)).cast("double") / lit(1e6)).as("m"))
       .groupBy(col("cell"))
       .agg(array_sort(collect_list(struct(col("dim"), col("m")))).as("dm"))
@@ -284,11 +283,13 @@ object IvfIndex {
   // ---- persisted index (build once, probe many) ---------------------------
 
   /** Where the persisted index for this corpus lives — keyed by
-    * [[Tables.corpusFingerprint]] so a regenerated corpus rebuilds.
+    * [[Tables.corpusFingerprint]] so a regenerated corpus rebuilds, and by
+    * the build's arithmetic (`v2`: components rounded half away from zero
+    * in [[recompute]]) so no index trained by older arithmetic is read.
     */
   def persistedDir(sfDir: String): String = {
     val fp = Tables.corpusFingerprint(s"$sfDir/embeddings.parquet")
-    s"${sys.props("java.io.tmpdir")}/graft_ivf_$fp"
+    s"${sys.props("java.io.tmpdir")}/graft_ivf_v2_$fp"
   }
 
   /** Build the index ONCE per corpus and write it as two parquet tables
@@ -373,8 +374,8 @@ object IvfIndex {
     * embeddings fixture: seeds by md5-hash order, `iters` unrolled Lloyd
     * CTE stages (argmax-cosine assignment with hoisted norms — the same
     * sqrt-once-then-multiply shape as [[VectorExprs.NearestCentroid]] —
-    * and the ×1e6 half-up quantized mean), one final assignment, per-cell
-    * count + Σvec_id.
+    * and the mean over ×1e6-rounded components), one final assignment,
+    * per-cell count + Σvec_id.
     */
   private def duckIvfBuild(nlist: Int, iters: Int, dims: Int = 64): String = {
     def fold(expr: String) = Similarity.duckFold(expr, dims.toString)
@@ -398,7 +399,7 @@ object IvfIndex {
     def recomputeStage(k: Int): String =
       s"""upd${k + 1} AS (
          |  SELECT cell, i AS dim,
-         |    CAST(sum(CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000000.0 + 0.5)
+         |    CAST(sum(CAST(round(CAST(embedding[i] AS DOUBLE) * 1000000.0)
          |                  AS BIGINT)) AS DOUBLE)
          |      / CAST(count(*) AS DOUBLE) / 1000000.0 AS m
          |  FROM asg${k + 1} CROSS JOIN range(1, ${dims + 1}) t(i)

@@ -54,7 +54,7 @@ object Outliers {
 
     val dists = quant.crossJoin(broadcast(centroid))
       .select(col("vec_id"), col("label"),
-        round(sqrt(aggregate(
+        GraftQuery.duckRound(sqrt(aggregate(
           zip_with(col("qv").cast("array<double>"), col("cvec"),
             (x, y) => (x - y) * (x - y)),
           lit(0.0), (acc, v) => acc + v)) / Q, 6).as("dist"))
@@ -74,7 +74,7 @@ object Outliers {
       .select(col("vec_id"), col("label"), col("dist"),
         when(col("n") < 2, lit(null).cast("double"))
           .when(sd === 0.0, lit(null).cast("double"))
-          .otherwise(round((col("dist") - col("s1") / col("n")) / sd, 6))
+          .otherwise(GraftQuery.duckRound((col("dist") - col("s1") / col("n")) / sd, 6))
           .as("z_score"))
       .withColumn("is_outlier", abs(col("z_score")) > zThreshold)
       .orderBy(col("vec_id"))

@@ -43,7 +43,7 @@ object Pca {
     * the oracle's CASE), never an n(n−1)=0 divide-by-zero abort. */
   private def covFromSums(sums: DataFrame): DataFrame =
     sums.select(col("i"), col("j"),
-      when(col("n") < 2, lit(null).cast("double")).otherwise(round(
+      when(col("n") < 2, lit(null).cast("double")).otherwise(GraftQuery.duckRound(
         (col("n").cast(d38) * col("sij").cast(d38) -
           col("si").cast(d38) * col("sj").cast(d38)).cast("double") /
           ((col("n") * (col("n") - 1)).cast("double") * lit(Q * Q)),

@@ -30,7 +30,7 @@ object PrCurve {
       .select(posexplode(col("embedding")).as(Seq("dim", "v")))
     val cent = vals.groupBy(col("dim"))
       .agg(count(lit(1)).as("n"),
-        sum(graft.GraftQuery.qz(col("v").cast("double"), 8).cast(DecimalType(28, 8))).as("s"))
+        sum(GraftQuery.duckRound(col("v").cast("double"), 8).cast(DecimalType(28, 8))).as("s"))
       .select(col("dim"), (col("s").cast("double") / col("n").cast("double")).as("m"))
     val cv = cent.agg(
       transform(sort_array(collect_list(struct(col("dim"), col("m")))),
@@ -39,7 +39,7 @@ object PrCurve {
       .crossJoin(broadcast(cv)) // O(dims) centroid row, never corpus rows
       .select(
         when(col("label") === targetLabel, 1L).otherwise(0L).as("pos"),
-        graft.GraftQuery.qz(VectorExprs.cosineSim(col("embedding"), col("cv")), 2).as("th"))
+        GraftQuery.duckRound(VectorExprs.cosineSim(col("embedding"), col("cv")), 2).as("th"))
     val buckets = scored.groupBy(col("th"))
       .agg(sum(col("pos")).as("pos"), sum(lit(1L) - col("pos")).as("neg"))
     val desc = Window.orderBy(col("th").desc)
@@ -51,14 +51,14 @@ object PrCurve {
       .withColumn("fp", sum(col("neg")).over(desc))
       .withColumn("total_pos", sum(col("pos")).over(full))
       .select(col("th").as("threshold"), col("tp"), col("fp"),
-        graft.GraftQuery.qz(col("tp").cast("double") /
+        GraftQuery.duckRound(col("tp").cast("double") /
           (col("tp") + col("fp")).cast("double"), 6).as("precision"),
         // zero-positives guard (oracle mirrors with CASE): a corpus with
         // no target-label rows has undefined recall — NULL, not an abort.
         // precision needs no guard: each bucket holds >= 1 row, so the
         // cumulative tp + fp is always >= 1.
         when(col("total_pos") === 0, lit(null).cast("double"))
-          .otherwise(graft.GraftQuery.qz(col("tp").cast("double") /
+          .otherwise(GraftQuery.duckRound(col("tp").cast("double") /
             col("total_pos").cast("double"), 6)).as("recall"))
       .orderBy(col("threshold").desc)
   }
@@ -75,13 +75,13 @@ object PrCurve {
         WHERE len(embedding) = 64 AND label = 0),
       cent AS (
         SELECT dim,
-               CAST(sum(CAST(${graft.GraftQuery.duckQz("v", 8)} AS DECIMAL(28,8))) AS DOUBLE)
+               CAST(sum(CAST(round(v, 8) AS DECIMAL(28,8))) AS DOUBLE)
                  / CAST(count(*) AS DOUBLE) AS m
         FROM vals GROUP BY dim),
       cvt AS (SELECT list(m ORDER BY dim) AS cv FROM cent),
       scored AS (
         SELECT CASE WHEN label = 0 THEN 1 ELSE 0 END AS pos,
-               ${graft.GraftQuery.duckQz(Similarity.duckCosine("e.embedding", "c.cv"), 2)} AS th
+               round(${Similarity.duckCosine("e.embedding", "c.cv")}, 2) AS th
         FROM (SELECT * FROM embeddings WHERE NOT coalesce(list_bool_or(list_transform(embedding, __fe -> isnan(__fe) OR isinf(__fe))), FALSE)) e CROSS JOIN cvt c
         WHERE len(embedding) = 64),
       buckets AS (
@@ -98,10 +98,10 @@ object PrCurve {
         FROM buckets)
       SELECT th AS threshold, CAST(tp AS BIGINT) AS tp,
              CAST(fp AS BIGINT) AS fp,
-             ${graft.GraftQuery.duckQz("CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE)", 6)}
+             round(CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE), 6)
                AS precision,
              CASE WHEN total_pos = 0 THEN NULL
-                  ELSE ${graft.GraftQuery.duckQz("CAST(tp AS DOUBLE) / CAST(total_pos AS DOUBLE)", 6)}
+                  ELSE round(CAST(tp AS DOUBLE) / CAST(total_pos AS DOUBLE), 6)
              END AS recall
       FROM cum ORDER BY threshold DESC"""))
 

@@ -47,7 +47,7 @@ object Quantize {
       .agg(
         min(col("lo")).as("lo"), max(col("hi")).as("hi"),
         count(lit(1)).as("n"),
-        (sum(round(col("err") * col("err"), 12).cast("decimal(30,12)"))
+        (sum(GraftQuery.duckRound(col("err") * col("err"), 12).cast("decimal(30,12)"))
           .cast("double") / count(lit(1)).cast("double")).as("mse"),
         max(abs(col("err"))).as("max_abs_err"))
       .orderBy(col("dim"))

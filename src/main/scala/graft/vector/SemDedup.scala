@@ -351,7 +351,7 @@ object SemDedup {
 
     withSim.join(dropped, Seq("vec_id"), "left")
       .select(col("vec_id"), col("cell"),
-        round(col("cent_sim"), 8).as("cent_sim"),
+        GraftQuery.duckRound(col("cent_sim"), 8).as("cent_sim"),
         col("is_dropped").isNull.as("is_kept"))
       .orderBy(col("vec_id"))
   }

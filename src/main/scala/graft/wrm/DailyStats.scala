@@ -1,5 +1,6 @@
 package graft.wrm
 
+import graft.GraftQuery.duckRound
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -26,16 +27,16 @@ object DailyStats {
       .filter(col("record_type") === "station")
       .groupBy(col("station_id"), col("name"))
       .agg(
-        round(avg(col("bikes")), 2).as("bikes_mean"),
+        duckRound(avg(col("bikes")), 2).as("bikes_mean"),
         max(col("bikes")).as("bikes_max"),
         min(col("bikes")).as("bikes_min"),
-        round(stddev_samp(col("bikes")), 2).as("bikes_std"),
-        round(avg(col("spaces")), 2).as("spaces_mean"),
+        duckRound(stddev_samp(col("bikes")), 2).as("bikes_std"),
+        duckRound(avg(col("spaces")), 2).as("spaces_mean"),
         max(col("spaces")).as("spaces_max"),
         min(col("spaces")).as("spaces_min"),
-        round(stddev_samp(col("spaces")), 2).as("spaces_std"),
+        duckRound(stddev_samp(col("spaces")), 2).as("spaces_std"),
         min_by(col("total_docks"), orderKey).as("total_docks"),
-        round(avg(col("installed").cast("double")), 2).as("installed_ratio"),
+        duckRound(avg(col("installed").cast("double")), 2).as("installed_ratio"),
         min_by(col("date"), orderKey).as("partition_date"))
 
   /** A7: first/last/std of coordinates per station, rounded to 6
@@ -48,10 +49,10 @@ object DailyStats {
       .agg(
         min_by(col("lat"), orderKey).as("lat_first"),
         max_by(col("lat"), orderKey).as("lat_last"),
-        round(stddev_samp(col("lat")), 6).as("lat_std"),
+        duckRound(stddev_samp(col("lat")), 6).as("lat_std"),
         min_by(col("lon"), orderKey).as("lon_first"),
         max_by(col("lon"), orderKey).as("lon_last"),
-        round(stddev_samp(col("lon")), 6).as("lon_std"),
-        round(avg(col("installed").cast("double")), 2).as("installed_ratio"),
+        duckRound(stddev_samp(col("lon")), 6).as("lon_std"),
+        duckRound(avg(col("installed").cast("double")), 2).as("installed_ratio"),
         min_by(col("date"), orderKey).as("partition_date"))
 }

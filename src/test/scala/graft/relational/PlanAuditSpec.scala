@@ -441,4 +441,47 @@ class PlanAuditSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
     finally spark.listenerManager.unregister(listener)
   }
+
+  test("no executed plan rounds a double with Spark's round(x, d != 0)") {
+    // Spark's round(x, d) on a double rounds its shortest decimal string;
+    // DuckDB's (the oracle's) rounds the binary value, so 9.575 gives 9.58
+    // in one and 9.57 in the other. GraftQuery.duckRound computes DuckDB's
+    // rule; a DECIMAL round is exact in both and a scale-0 round of a
+    // double agrees. Every plan a row executes is captured, cached
+    // relations and subqueries included.
+    import org.apache.spark.sql.catalyst.expressions.RoundBase
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.types.{DataType, DoubleType, FloatType}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    val executed = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        executed.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def withCached(p: SparkPlan): Seq[SparkPlan] = {
+      val ops = collectWithSubqueries(p) { case op => op }
+      ops ++ ops.collect { case s: InMemoryTableScanExec => s.relation.cachedPlan }
+        .flatMap(withCached)
+    }
+    def doubleRounds(op: SparkPlan): Seq[Expression] = op.expressions.flatMap(_.collect {
+      case r: RoundBase if Set[DataType](DoubleType, FloatType)(r.left.dataType) &&
+          r.right.foldable && r.right.eval() != 0 => r
+    })
+    spark.listenerManager.register(listener)
+    val offenders = try graft.SparkEntry.registry.filterNot(_.name.startsWith("stream_"))
+      .flatMap { q =>
+        executed.clear()
+        q.run(spark, "/root/testdata/sf0.001").collect()
+        org.apache.spark.graftbridge.ListenerBridge
+          .waitUntilListenerBusEmpty(spark.sparkContext, 30000)
+        executed.asScala.toSeq.flatMap(withCached).flatMap(doubleRounds)
+          .headOption.map(r => s"${q.name}: $r")
+      }
+    finally spark.listenerManager.unregister(listener)
+    if (offenders.nonEmpty) fail(s"${offenders.size} rows round a double with Spark's " +
+      s"round(x, d); use GraftQuery.duckRound:\n${offenders.mkString("\n")}")
+  }
 }

@@ -71,7 +71,7 @@ class TextDedupPropertySpec extends SparkSpec {
       val docs = corpus(seed * 7, 40).filter(_._2.nonEmpty)
       val (refSpans, refClean) = refSpansAndClean(docs, minTokens, minDocs = 2)
       val df = docs.toDF("doc_id", "text")
-      val gotSpans = TextDedup.substringDupSpans(spark, df, minTokens)
+      val gotSpans = TextDedup.substringDupSpans(df, minTokens)
         .as[(Long, Long, Long, Long)].collect().toSeq
       // removeDupSpans cuts the gap slices between consecutive spans, which
       // is correct only if each document's spans come in start order and
@@ -84,7 +84,7 @@ class TextDedupPropertySpec extends SparkSpec {
           s"unsorted or overlapping spans: $ctx")
       }
       assert(gotSpans == refSpans, s"spans seed=$seed minTokens=$minTokens")
-      val gotClean = TextDedup.removeDupSpans(spark, df, minTokens)
+      val gotClean = TextDedup.removeDupSpans(df, minTokens)
         .as[(Long, String, Long)].collect().toSeq
       assert(gotClean == refClean, s"clean seed=$seed minTokens=$minTokens")
     }
@@ -97,11 +97,11 @@ class TextDedupPropertySpec extends SparkSpec {
     // fresh adjacencies) but never the original ones
     val docs = corpus(99L, 30).filter(_._2.nonEmpty)
     val df = docs.toDF("doc_id", "text")
-    val cleaned = TextDedup.removeDupSpans(spark, df, minTokens = 4)
+    val cleaned = TextDedup.removeDupSpans(df, minTokens = 4)
       .select($"doc_id", $"clean_text".as("text"))
-    val before = TextDedup.substringDupSpans(spark, df, 4)
+    val before = TextDedup.substringDupSpans(df, 4)
       .as[(Long, Long, Long, Long)].collect()
-    val after = TextDedup.substringDupSpans(spark, cleaned, 4)
+    val after = TextDedup.substringDupSpans(cleaned, 4)
       .as[(Long, Long, Long, Long)].collect()
     // total duplicated mass strictly shrinks when any span existed
     if (before.nonEmpty)

@@ -210,7 +210,7 @@ class TextSpec extends SparkSpec {
     val docC = (1 to 30).map(i => s"cc$i")
     val docs = Seq((1L, docA.mkString(" ")), (2L, docB.mkString(" ")),
       (3L, docC.mkString(" "))).toDF("doc_id", "text")
-    val out = TextDedup.substringDupSpans(spark, docs, minTokens = 5)
+    val out = TextDedup.substringDupSpans(docs, minTokens = 5)
       .as[(Long, Long, Long, Long)].collect().toSeq
     // exactly one span per sharing doc, covering exactly the planted run:
     // doc A tokens [7,17), doc B tokens [3,13); doc C absent; the 6
@@ -225,13 +225,13 @@ class TextSpec extends SparkSpec {
       s"${(1 to 4).map(i => s"y$i").mkString(" ")} $run"
     val other = (1 to 20).map(i => s"z$i").mkString(" ")
     val docs = Seq((1L, selfDup), (2L, other)).toDF("doc_id", "text")
-    assert(TextDedup.substringDupSpans(spark, docs, minTokens = 6).isEmpty)
+    assert(TextDedup.substringDupSpans(docs, minTokens = 6).isEmpty)
 
     // the same run in 2 docs passes minDocs=2 but not minDocs=3
     val docs2 = Seq((1L, selfDup), (2L, s"$run ${(1 to 8).map(i => s"w$i").mkString(" ")}"))
       .toDF("doc_id", "text")
-    assert(TextDedup.substringDupSpans(spark, docs2, minTokens = 6).count() == 3)
-    assert(TextDedup.substringDupSpans(spark, docs2, minTokens = 6, minDocs = 3).isEmpty)
+    assert(TextDedup.substringDupSpans(docs2, minTokens = 6).count() == 3)
+    assert(TextDedup.substringDupSpans(docs2, minTokens = 6, minDocs = 3).isEmpty)
   }
 
   test("substring removal: planted boilerplate excised from every doc, rest intact") {
@@ -243,7 +243,7 @@ class TextSpec extends SparkSpec {
     val docC = (1 to 30).map(i => s"cc$i")
     val docs = Seq((1L, docA.mkString(" ")), (2L, docB.mkString(" ")),
       (3L, docC.mkString(" ")), (4L, shared)).toDF("doc_id", "text")
-    val out = TextDedup.removeDupSpans(spark, docs, minTokens = 5)
+    val out = TextDedup.removeDupSpans(docs, minTokens = 5)
       .as[(Long, String, Long)].collect().toSeq
     assert(out == Seq(
       (1L, ((1 to 7).map(i => s"aa$i") ++ (1 to 5).map(i => s"ab$i")).mkString(" "), 10L),

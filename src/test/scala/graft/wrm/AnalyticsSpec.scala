@@ -27,6 +27,24 @@ class AnalyticsSpec extends SparkSpec {
     assert(s2.isNullAt(s2.fieldIndex("bikes_std"))) // 1-row group → null
   }
 
+  test("daily stats round an exact-half mean as DuckDB and pandas do (383/40 → 9.57)") {
+    // 383/40 and 403/40 print as 9.575 and 10.075 but are stored just
+    // below the half: rounding the binary value gives 9.57 and 10.07.
+    val rows = (0 until 40).map { i =>
+      ("001", "S1", if (i < 23) 10L else 9L, if (i < 3) 11L else 10L, true,
+        ts(f"2025-05-01 10:$i%02d:00"), ts(f"2025-05-01 10:$i%02d:00"))
+    }
+    val df = rows
+      .toDF("station_id", "name", "bikes", "spaces", "installed", "timestamp", "file_timestamp")
+      .withColumn("record_type", lit("station"))
+      .withColumn("total_docks", lit(21L))
+      .withColumn("date", lit("2025-05-01").cast("timestamp"))
+    assert(rows.map(_._3).sum == 383L && rows.map(_._4).sum == 403L)
+    val r = DailyStats.stationDailySummary(df).collect()(0)
+    assert(r.getAs[Double]("bikes_mean") == 9.57)
+    assert(r.getAs[Double]("spaces_mean") == 10.07)
+  }
+
   test("movement summary: first/last follow chronological order, not shuffle order") {
     val df = Seq(
       // deliberately out of order: later file first
